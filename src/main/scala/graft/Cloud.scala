@@ -155,16 +155,7 @@ object Cloud {
   def main(argv: Array[String]): Unit = {
     if (argv.isEmpty) { System.err.println(usage); sys.exit(2) }
     val a = parseArgs(argv.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     val written = run(spark, a)
     written.foreach(p => println(s"[cloud] wrote $p"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.SparkListener
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: dump the physical plan of every plan EXECUTED while
@@ -30,15 +29,8 @@ object ExplainExec {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/tmp/graft_plans")
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder()
       .config("spark.sql.ui.explainMode", "formatted")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val buf = new java.lang.StringBuilder

@@ -120,17 +120,9 @@ object ScaleBenchC {
 
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nDocs = 5000L * factor
     val nVecs = 2000L * factor
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_HASH=xxhash64: the Bench hash A/B knob (the fleet
     // operators resolve graft.hash.impl at plan construction; the

@@ -300,15 +300,7 @@ object Algorithms {
       // Replaces the whole hash-to-min + pointer-jump round structure
       // (1 scheduler job per round minimum, 3+ under AQE staging) with
       // one collect, at identical labels (comp = min member id).
-      val spark = nodes.sparkSession
-      val pairs = {
-        import spark.implicits._
-        sym.select(col("u").cast("long"), col("v").cast("long"))
-          .as[(Long, Long)].collect()
-      }
-      return nodes.select(col("id"))
-        .join(unionFindLabels(spark, pairs), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
+      return unionFindLabels(nodes, sym)
     }
 
     val (labels0, nLabels) = loopCheckpointCounted(
@@ -520,17 +512,12 @@ object Algorithms {
     if (size <= collectGate) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val pairs = surv.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].collect()
-      lap(st, s"local peel collect (${pairs.length} edges)")
-      val rows = trussPeelLocal(pairs, k, maxRounds)
+      val g = LocalGraph.collect(surv, "u", "v")
+      lap(st, s"local peel collect (${g.m} edges)")
+      val rows = trussPeelLocal(g, k, maxRounds)
       lap(st, "local peel")
-      val out = spark.sparkContext
-        .parallelize(rows.toIndexedSeq,
-          math.max(1, math.min(rows.length,
-            spark.sparkContext.defaultParallelism)))
-        .toDF("u", "v", "support")
-      return (out, None)
+      return (LocalGraph.relation(spark, rows.toIndexedSeq, "u", "v", "support"),
+        None)
     }
     var round = 0
     var done = size == 0L
@@ -594,6 +581,23 @@ object Algorithms {
     }
   }
 
+  private[graft] object AdjImage {
+    /** An image with `lens(i)` empty cells for node i: the offsets are
+      * the prefix sums of `lens`, the caller fills `flat`. */
+    def alloc(ids: Array[Long], lens: Array[Int]): AdjImage = {
+      val n = ids.length
+      var total = 0L
+      lens.foreach(total += _)
+      require(total <= Int.MaxValue,
+        s"adjacency image of $total cells exceeds the int-indexed bound; " +
+          "raise the caller's gate only below AdjBroadcastMaxCells")
+      val offs = new Array[Int](n + 1)
+      var i = 0
+      while (i < n) { offs(i + 1) = offs(i) + lens(i); i += 1 }
+      AdjImage(ids, offs, new Array[Int](total.toInt))
+    }
+  }
+
   /** Assemble the CSR image from PRE-TRANSLATED (node-index, int-index
     * slice) rows — the per-cell long→index translation happened
     * executor-side under the broadcast id dictionary, so the driver
@@ -601,20 +605,12 @@ object Algorithms {
     * arraycopy placement here. */
   private[graft] def packAdjImage(
       ids: Array[Long], rows: Array[(Int, Array[Int])]): AdjImage = {
-    val n = ids.length
-    val lens = new Array[Int](n)
-    var total = 0L
-    rows.foreach { case (i, s) => lens(i) = s.length; total += s.length }
-    require(total <= Int.MaxValue,
-      s"adjacency image of $total cells exceeds the int-indexed bound; " +
-        "raise the caller's gate only below AdjBroadcastMaxCells")
-    val offs = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { offs(i + 1) = offs(i) + lens(i); i += 1 }
-    val flat = new Array[Int](total.toInt)
+    val lens = new Array[Int](ids.length)
+    rows.foreach { case (i, s) => lens(i) = s.length }
+    val img = AdjImage.alloc(ids, lens)
     rows.foreach { case (idx, s) =>
-      System.arraycopy(s, 0, flat, offs(idx), s.length) }
-    AdjImage(ids, offs, flat)
+      System.arraycopy(s, 0, img.flat, img.offs(idx), s.length) }
+    img
   }
 
   /** Two-pointer intersection count over two sorted slices of `flat` —
@@ -890,63 +886,24 @@ object Algorithms {
     * k−2, fixpoint = unchanged survivor count, round budget, then one
     * final support pass over the fixpoint set with the >0 cut. All
     * integers — no rounding surface. */
-  private def trussPeelLocal(pairs: Array[(Long, Long)], k: Int,
+  private def trussPeelLocal(g: LocalGraph, k: Int,
                              maxRounds: Int): Array[(Long, Long, Long)] = {
-    val m = pairs.length
-    // sorted id dictionary (the [[packAdjImage]] idiom): index order =
-    // id order, so index-sorted slices intersect like the distributed
-    // sort_array(id) slices
-    val idsAll = new Array[Long](m * 2)
-    var i = 0
-    while (i < m) {
-      idsAll(2 * i) = pairs(i)._1; idsAll(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    java.util.Arrays.sort(idsAll)
-    var nIds = 0
-    i = 0
-    while (i < idsAll.length) {
-      if (nIds == 0 || idsAll(i) != idsAll(nIds - 1)) {
-        idsAll(nIds) = idsAll(i); nIds += 1
-      }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(idsAll, nIds)
-    val us = new Array[Int](m); val vs = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      us(i) = java.util.Arrays.binarySearch(ids, pairs(i)._1)
-      vs(i) = java.util.Arrays.binarySearch(ids, pairs(i)._2)
-      i += 1
-    }
+    val m = g.m
+    val us = g.src; val vs = g.dst
     val alive = new Array[Boolean](m)
     java.util.Arrays.fill(alive, true)
     var aliveCount = m
-    val offs = new Array[Int](nIds + 1)
-    var flat = new Array[Int](2 * m)
     val sup = new Array[Int](m)
     def supportPass(): Unit = {
-      java.util.Arrays.fill(offs, 0)
-      var e = 0
-      while (e < m) {
-        if (alive(e)) { offs(us(e) + 1) += 1; offs(vs(e) + 1) += 1 }
-        e += 1
-      }
+      // index order = id order, so index-sorted slices intersect like
+      // the distributed sort_array(id) slices
+      val (img, _) = g.csr(both = true, keep = alive(_))
+      val offs = img.offs; val flat = img.flat
       var x = 0
-      while (x < nIds) { offs(x + 1) += offs(x); x += 1 }
-      val pos = java.util.Arrays.copyOf(offs, nIds)
-      e = 0
-      while (e < m) {
-        if (alive(e)) {
-          flat(pos(us(e))) = vs(e); pos(us(e)) += 1
-          flat(pos(vs(e))) = us(e); pos(vs(e)) += 1
-        }
-        e += 1
-      }
-      x = 0
-      while (x < nIds) {
+      while (x < g.n) {
         java.util.Arrays.sort(flat, offs(x), offs(x + 1)); x += 1
       }
-      e = 0
+      var e = 0
       while (e < m) {
         if (alive(e)) sup(e) = sliceIntersect(flat,
           offs(us(e)), offs(us(e) + 1), offs(vs(e)), offs(vs(e) + 1)).toInt
@@ -974,7 +931,7 @@ object Algorithms {
     var e = 0
     while (e < m) {
       if (alive(e) && sup(e) > 0)
-        out += ((ids(us(e)), ids(vs(e)), sup(e).toLong))
+        out += ((g.ids(us(e)), g.ids(vs(e)), sup(e).toLong))
       e += 1
     }
     out.result()
@@ -1450,50 +1407,15 @@ object Algorithms {
                              rounds: Int): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val eRows = sym.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
+    val all = LocalGraph.collect(sym, "u", "v")
     releaseIterate(sym)
-    // membership: edge-incident node rows only (never |V| driver rows)
-    val epAll = new Array[Long](2 * eRows.length)
-    var i = 0
-    while (i < eRows.length) {
-      epAll(2 * i) = eRows(i)._1; epAll(2 * i + 1) = eRows(i)._2; i += 1
-    }
-    java.util.Arrays.sort(epAll)
-    var nEp = 0
-    i = 0
-    while (i < epAll.length) {
-      if (nEp == 0 || epAll(nEp - 1) != epAll(i)) { epAll(nEp) = epAll(i); nEp += 1 }
-      i += 1
-    }
-    val epDf = spark.sparkContext.parallelize(
-        (0 until nEp).map(epAll(_)),
-        math.max(1, math.min(math.max(nEp, 1),
-          spark.sparkContext.defaultParallelism)))
-      .toDF("id")
-    val vid = nodes.select(col("id")).join(epDf, Seq("id"), "left_semi")
-      .as[Long].collect()
-    java.util.Arrays.sort(vid)
-    val nVe = vid.length
     // CSR over edges with BOTH endpoints node rows (gather needs the
     // label side in the iterate, adopt needs the gather side in it)
-    val deg = new Array[Int](nVe)
-    val us = new Array[Int](eRows.length); val vs = new Array[Int](eRows.length)
-    var mE = 0
-    i = 0
-    while (i < eRows.length) {
-      val a = java.util.Arrays.binarySearch(vid, eRows(i)._1)
-      val b = java.util.Arrays.binarySearch(vid, eRows(i)._2)
-      if (a >= 0 && b >= 0) { us(mE) = a; vs(mE) = b; deg(a) += 1; mE += 1 }
-      i += 1
-    }
-    val offs = new Array[Int](nVe + 1)
-    i = 0
-    while (i < nVe) { offs(i + 1) = offs(i) + deg(i); i += 1 }
-    val adj = new Array[Int](mE)
-    val pos = offs.clone()
-    i = 0
-    while (i < mE) { adj(pos(us(i))) = vs(i); pos(us(i)) += 1; i += 1 }
+    val (g, _) = all.restrict(nodes.select(col("id")))
+    val vid = g.ids
+    val nVe = g.n
+    val (img, _) = g.csr(both = false)
+    val offs = img.offs; val adj = img.flat
     var lbl = vid.clone()
     var r = 0
     while (r < rounds) {
@@ -1520,13 +1442,9 @@ object Algorithms {
       lbl = next
       r += 1
     }
-    val par = spark.sparkContext.defaultParallelism
-    val rel = spark.sparkContext.parallelize(
-        (0 until nVe).map(j => (vid(j), lbl(j))),
-        math.max(1, math.min(math.max(nVe, 1), par)))
-      .toDF("id", "llbl")
-    nodes.select(col("id")).join(rel, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("llbl"), col("id")).as("lbl"))
+    LocalGraph.attach(nodes.select(col("id")), LocalGraph.relation(spark,
+        (0 until nVe).map(j => (vid(j), lbl(j))), "id", "llbl"))(
+      col("id"), coalesce(col("llbl"), col("id")).as("lbl"))
   }
 
   /** Synchronous local-move rounds per Louvain level and coarsening
@@ -1895,9 +1813,15 @@ object Algorithms {
     // regime. `keepLayer` callers gate in [[louvainRefine]] instead
     // (their refine pass folds into the same collect).
     if (!keepLayer && collectGate > 0 && canon0.count() <= collectGate) {
-      val (us, vs, ws) = collectCanonW(canon0)
-      val (ids, lbls) = louvainLocalLevels(us, vs, ws, rounds, levels)
-      return (localLabelsJoin(nodes, ids, lbls), null)
+      val spark = nodes.sparkSession
+      import spark.implicits._
+      val (g, ws) = LocalGraph.collectLongW(canon0, "u", "v", "w")
+      val comm = louvainLocalLevels(g, ws, rounds, levels)
+      // nodes off the edge list keep themselves (the stay-row fixpoint)
+      return (LocalGraph.attach(nodes.select(col("id")),
+        LocalGraph.relation(spark, g.ids.indices.map(i => (g.ids(i), comm(i))),
+          "id", "community"))(
+        col("id"), coalesce(col("community"), col("id")).as("community")), null)
     }
     var canon = canon0
     var curNodes = nodes.select(col("id"))
@@ -1946,66 +1870,24 @@ object Algorithms {
     * and the distributed loop stands. */
   val StarCollectGateEdges = 4L * 1000 * 1000
 
-  /** Min-label union-find over collected edge pairs → (id, root) rows
-    * for every node that APPEARS in a pair — the driver side of the
-    * gated CC shortcut, shared by [[connectedComponentsStar]] and
-    * [[connectedComponentsOnSym]]. Roots are each set's MINIMUM member
-    * id (ids sort ascending into the index dictionary, and every union
-    * roots at the smaller index), which is exactly both kernels'
-    * comp = min-member contract. Duplicate, reversed and self-loop
-    * pairs are tolerated (unions are idempotent), so callers can hand
-    * over raw symmetric layers without a distinct. */
-  private def unionFindLabels(spark: SparkSession,
-                              pairs: Array[(Long, Long)]): DataFrame = {
+  /** The gated CC shortcut shared by [[connectedComponentsStar]] and
+    * [[connectedComponentsOnSym]]: collect the (u, v) frame, run the
+    * [[LocalGraph]] union-find, and re-attach (id, comp) to every node.
+    * Roots are each set's MINIMUM member id, exactly both kernels'
+    * comp = min-member contract; nodes off the edge list keep their
+    * own id. Duplicate, reversed and self-loop pairs are tolerated, so
+    * callers can hand over raw symmetric layers without a distinct.
+    * Unlike the other twins' [[LocalGraph.relation]] frames, the roots
+    * ride as a local relation: that choice sets this join's plan and
+    * job count. */
+  private def unionFindLabels(nodes: DataFrame, uv: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
     import spark.implicits._
-    // sorted id dictionary (the [[packAdjImage]] idiom) → index space
-    val idsAll = new Array[Long](pairs.length * 2)
-    var i = 0
-    while (i < pairs.length) {
-      idsAll(2 * i) = pairs(i)._1; idsAll(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    java.util.Arrays.sort(idsAll)
-    var n = 0
-    i = 0
-    while (i < idsAll.length) { // in-place dedup of the sorted ids
-      if (n == 0 || idsAll(n - 1) != idsAll(i)) { idsAll(n) = idsAll(i); n += 1 }
-      i += 1
-    }
-    val parent = Array.tabulate(n)(identity)
-    def find(x0: Int): Int = { // path-halving
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    i = 0
-    while (i < pairs.length) {
-      val ru = find(java.util.Arrays.binarySearch(idsAll, 0, n, pairs(i)._1))
-      val rv = find(java.util.Arrays.binarySearch(idsAll, 0, n, pairs(i)._2))
-      // ids sort ascending, so the smaller INDEX is the smaller id:
-      // rooting at min(ru, rv) keeps each root the set's minimum member
-      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
-      i += 1
-    }
-    (0 until n).map(j => (idsAll(j), idsAll(find(j)))).toDF("id", "root")
-  }
-
-  /** Collect a canonical weighted edge frame (u, v, w — integral) into
-    * three parallel long arrays — the driver side of the gated louvain
-    * shortcut ([[louvainLocalLevels]]). */
-  private def collectCanonW(canon: DataFrame)
-      : (Array[Long], Array[Long], Array[Long]) = {
-    val spark = canon.sparkSession
-    import spark.implicits._
-    val rows = canon.select(col("u").cast("long"), col("v").cast("long"),
-      col("w").cast("long")).as[(Long, Long, Long)].collect()
-    val us = new Array[Long](rows.length)
-    val vs = new Array[Long](rows.length)
-    val ws = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      us(i) = rows(i)._1; vs(i) = rows(i)._2; ws(i) = rows(i)._3; i += 1
-    }
-    (us, vs, ws)
+    val g = LocalGraph.collect(uv, "u", "v")
+    val root = g.roots()
+    LocalGraph.attach(nodes.select(col("id")),
+      g.ids.indices.map(j => (g.ids(j), g.ids(root(j)))).toDF("id", "root"))(
+      col("id"), coalesce(col("root"), col("id")).as("comp"))
   }
 
   /** Driver-local twin of ONE [[louvainLevelKeep]] round stack over
@@ -2023,59 +1905,28 @@ object Algorithms {
     * (`Math.floorMod(id, 2)` = `pmod`). Runs the FULL round budget —
     * the distributed early exit only skips proven no-op rounds, and
     * the oracle unrolls the full budget, so the full unroll is the
-    * ground truth both converge to. Returns (sorted node ids, label id
-    * per node). */
-  private def louvainLevelLocal(us: Array[Long], vs: Array[Long],
-      ws: Array[Long], rounds: Int): (Array[Long], Array[Long]) = {
-    val mE = us.length
-    // sorted id dictionary (the [[packAdjImage]] idiom): index order =
-    // id order, so index comparisons below replay id comparisons
-    val idsAll = new Array[Long](2 * mE)
-    var i = 0
-    while (i < mE) { idsAll(2 * i) = us(i); idsAll(2 * i + 1) = vs(i); i += 1 }
-    java.util.Arrays.sort(idsAll)
-    var n = 0
-    i = 0
-    while (i < idsAll.length) {
-      if (n == 0 || idsAll(n - 1) != idsAll(i)) { idsAll(n) = idsAll(i); n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(idsAll, n)
-    val ui = new Array[Int](mE); val vi = new Array[Int](mE)
-    var mTot = 0L // total canonical weight = the invariant m
-    i = 0
-    while (i < mE) {
-      ui(i) = java.util.Arrays.binarySearch(ids, us(i))
-      vi(i) = java.util.Arrays.binarySearch(ids, vs(i))
-      mTot += ws(i)
-      i += 1
-    }
-    val m2 = 2L * mTot
+    * ground truth both converge to. Index order = id order, so index
+    * comparisons below replay id comparisons. Returns the label INDEX
+    * per node. */
+  private def louvainLevelLocal(g: LocalGraph, ws: Array[Long],
+                                rounds: Int): Array[Int] = {
+    val n = g.n
+    val ids = g.ids
+    val m2 = 2L * ws.sum // total canonical weight = the invariant m
     // CSR over PROPER edges (both orientations, weights); self-loop
     // mass goes to k only (2w) — the gather sees proper neighbours
     // only, exactly the symAll filter
     val selfW = new Array[Long](n)
-    val offs = new Array[Int](n + 1)
-    i = 0
-    while (i < mE) {
-      if (ui(i) == vi(i)) selfW(ui(i)) += ws(i)
-      else { offs(ui(i) + 1) += 1; offs(vi(i) + 1) += 1 }
+    var i = 0
+    while (i < g.m) {
+      if (g.src(i) == g.dst(i)) selfW(g.src(i)) += ws(i)
       i += 1
     }
-    var x = 0
-    while (x < n) { offs(x + 1) += offs(x); x += 1 }
-    val flat = new Array[Int](offs(n)); val fw = new Array[Long](offs(n))
-    val pos = java.util.Arrays.copyOf(offs, n)
-    i = 0
-    while (i < mE) {
-      if (ui(i) != vi(i)) {
-        flat(pos(ui(i))) = vi(i); fw(pos(ui(i))) = ws(i); pos(ui(i)) += 1
-        flat(pos(vi(i))) = ui(i); fw(pos(vi(i))) = ws(i); pos(vi(i)) += 1
-      }
-      i += 1
-    }
+    val (img, slotEdge) = g.csr(both = true, keep = e => g.src(e) != g.dst(e))
+    val offs = img.offs; val flat = img.flat
+    val fw = slotEdge.map(ws(_))
     val k = new Array[Long](n) // weighted degree: 2·selfW + Σ proper w
-    x = 0
+    var x = 0
     while (x < n) {
       var kk = 2L * selfW(x)
       var j = offs(x)
@@ -2140,10 +1991,7 @@ object Algorithms {
       val tmp = lbl; lbl = nlbl; nlbl = tmp
       r += 1
     }
-    val out = new Array[Long](n)
-    x = 0
-    while (x < n) { out(x) = ids(lbl(x)); x += 1 }
-    (ids, out)
+    lbl
   }
 
   /** The gated louvain stack: [[louvainLevelLocal]] per level with the
@@ -2153,41 +2001,33 @@ object Algorithms {
     * the same inner mapping composition. Nodes absent from the edge
     * list stay their own community at every level (their only
     * candidate is the stay row), so callers re-attach them with a
-    * coalesce — see [[localLabelsJoin]]. Returns (node ids, community
-    * id) for every edge-endpoint node. */
-  private[graft] def louvainLocalLevels(us0: Array[Long], vs0: Array[Long],
-      ws0: Array[Long], rounds: Int, levels: Int)
-      : (Array[Long], Array[Long]) = {
-    var curUs = us0; var curVs = vs0; var curWs = ws0
-    var origIds: Array[Long] = null
+    * coalesce. Returns the community id per node of `g0` (every
+    * edge-endpoint node). */
+  private def louvainLocalLevels(g0: LocalGraph, ws0: Array[Long],
+      rounds: Int, levels: Int): Array[Long] = {
+    var g = g0; var curWs = ws0
     var comm: Array[Long] = null
     var lvl = 1
     while (lvl <= levels) {
-      val (lids, llbl) = louvainLevelLocal(curUs, curVs, curWs, rounds)
-      if (lvl == 1) { origIds = lids; comm = llbl }
+      val llbl = louvainLevelLocal(g, curWs, rounds)
+      if (lvl == 1) comm = llbl.map(g.ids(_))
       else {
-        val map2 = new java.util.HashMap[java.lang.Long, java.lang.Long](
-          lids.length * 2)
-        var j = 0
-        while (j < lids.length) { map2.put(lids(j), llbl(j)); j += 1 }
         var i = 0
         while (i < comm.length) {
-          val c2 = map2.get(comm(i))
-          if (c2 != null) comm(i) = c2 // coarse isolates keep themselves
+          val j = g.index(comm(i))
+          if (j >= 0) comm(i) = g.ids(llbl(j)) // coarse isolates keep themselves
           i += 1
         }
       }
       if (lvl < levels) {
         // coarsen: canonical (min label, max label) by INDEX (index
         // order = id order), weights summed — self-loops included
-        val mE = curUs.length
+        val mE = g.m
         val keys = new Array[Long](mE)
         var i = 0
         while (i < mE) {
-          val a = java.util.Arrays.binarySearch(lids,
-            llbl(java.util.Arrays.binarySearch(lids, curUs(i))))
-          val b = java.util.Arrays.binarySearch(lids,
-            llbl(java.util.Arrays.binarySearch(lids, curVs(i))))
+          val a = llbl(g.src(i))
+          val b = llbl(g.dst(i))
           keys(i) = if (a <= b) (a.toLong << 32) | b.toLong
             else (b.toLong << 32) | a.toLong
           i += 1
@@ -2212,34 +2052,16 @@ object Algorithms {
         val nus = new Array[Long](nd); val nvs = new Array[Long](nd)
         i = 0
         while (i < nd) {
-          nus(i) = lids((distinct(i) >>> 32).toInt)
-          nvs(i) = lids((distinct(i) & 0xffffffffL).toInt)
+          nus(i) = g.ids((distinct(i) >>> 32).toInt)
+          nvs(i) = g.ids((distinct(i) & 0xffffffffL).toInt)
           i += 1
         }
-        curUs = nus; curVs = nvs
+        g = LocalGraph(nus, nvs)
         curWs = java.util.Arrays.copyOf(sums, nd)
       }
       lvl += 1
     }
-    (origIds, comm)
-  }
-
-  /** Re-attach gated-local labels to the caller's node frame: nodes
-    * off the edge list keep themselves (the distributed stay-row
-    * fixpoint). Emitted as a parallelized local relation — the
-    * [[unionFindLabels]] shape. */
-  private def localLabelsJoin(nodes: DataFrame, ids: Array[Long],
-                              lbls: Array[Long]): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val lblDf = spark.sparkContext.parallelize(
-        ids.indices.map(i => (ids(i), lbls(i))),
-        math.max(1, math.min(ids.length,
-          spark.sparkContext.defaultParallelism)))
-      .toDF("id", "community")
-    nodes.select(col("id")).join(lblDf, Seq("id"), "left_outer")
-      .select(col("id"),
-        coalesce(col("community"), col("id")).as("community"))
+    comm
   }
 
   /** Round cap for [[connectedComponentsStar]] — the alternation is
@@ -2294,14 +2116,9 @@ object Algorithms {
       // isolated nodes. Above the gate (a band/merge graph can
       // approach |V| rows at 10^10 nodes) the distributed loop
       // stands unchanged.
-      val spark = nodes.sparkSession
-      import spark.implicits._
-      val pairs = e.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].collect()
+      val out = unionFindLabels(nodes, e)
       releaseIterate(e)
-      return nodes.select(col("id"))
-        .join(unionFindLabels(spark, pairs), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
+      return out
     }
     var r = 0
     var live = true
@@ -2543,27 +2360,11 @@ object Algorithms {
                               maxRounds: Int): (DataFrame, DataFrame) = {
     val spark = nodesIn.sparkSession
     import spark.implicits._
-    val es = edgesIn.select(col("u").cast("long"), col("v").cast("long"),
-      col("w").cast("double")).as[(Long, Long, Double)].collect()
-    val mE = es.length
-    val idsAll = new Array[Long](2 * mE)
-    var i = 0
-    while (i < mE) { idsAll(2 * i) = es(i)._1; idsAll(2 * i + 1) = es(i)._2; i += 1 }
-    java.util.Arrays.sort(idsAll)
-    var n = 0
-    i = 0
-    while (i < idsAll.length) {
-      if (n == 0 || idsAll(n - 1) != idsAll(i)) { idsAll(n) = idsAll(i); n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(idsAll, n)
-    val ui = new Array[Int](mE); val vi = new Array[Int](mE)
-    i = 0
-    while (i < mE) {
-      ui(i) = java.util.Arrays.binarySearch(ids, es(i)._1)
-      vi(i) = java.util.Arrays.binarySearch(ids, es(i)._2)
-      i += 1
-    }
+    val (g, ws) = LocalGraph.collectDoubleW(edgesIn, "u", "v", "w")
+    val mE = g.m
+    val n = g.n
+    val ids = g.ids
+    val ui = g.src; val vi = g.dst
     val comp = ids.clone() // component label per endpoint node
     // struct(w, u, v, o) lexicographic-min — the aggregate's order
     def lt(aw: Double, au: Long, av: Long, ao: Long,
@@ -2584,12 +2385,12 @@ object Algorithms {
         if (old == null || lt(w, u, v, o, old._1, old._2, old._3, old._4))
           picks.put(cc, (w, u, v, o))
       }
-      i = 0
+      var i = 0
       while (i < mE) {
         val cu = comp(ui(i)); val cv = comp(vi(i))
         if (cu != cv) {
-          offer(cu, es(i)._3, es(i)._1, es(i)._2, cv)
-          offer(cv, es(i)._3, es(i)._1, es(i)._2, cu)
+          offer(cu, ws(i), ids(ui(i)), ids(vi(i)), cv)
+          offer(cv, ws(i), ids(ui(i)), ids(vi(i)), cu)
         }
         i += 1
       }
@@ -2598,24 +2399,17 @@ object Algorithms {
         // within-round pick dedup (both endpoints may pick one edge)
         val seen = new java.util.HashSet[(Long, Long, Double)]()
         // min-id-rooted union-find over the merge graph's component ids
-        val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.get(x)
-          while (p != null && p != x) { x = p; p = parent.get(x) }
-          x
-        }
+        // (component ids are member ids, so they index the dictionary)
+        val uf = new LocalGraph.UnionFind(n)
         val it = picks.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
           val (w, u, v, o) = e.getValue
           if (seen.add((u, v, w))) forest += ((u, v, w))
-          val ra = find(e.getKey); val rb = find(o)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
+          uf.union(g.index(e.getKey), g.index(o))
         }
         i = 0
-        while (i < n) { comp(i) = find(comp(i)); i += 1 }
+        while (i < n) { comp(i) = ids(uf.find(g.index(comp(i)))); i += 1 }
       }
       r += 1
     }
@@ -2623,16 +2417,10 @@ object Algorithms {
     // deterministic; the output is set-semantic — consumers order —
     // but a deterministic artifact keeps reruns byte-comparable)
     val fRows = forest.result().sortBy(t => (t._1, t._2))
-    val par = spark.sparkContext.defaultParallelism
-    val forestDf = spark.sparkContext.parallelize(fRows.toIndexedSeq,
-        math.max(1, math.min(math.max(fRows.length, 1), par)))
-      .toDF("u", "v", "w")
-    val compLocal = spark.sparkContext.parallelize(
-        ids.indices.map(j => (ids(j), comp(j))),
-        math.max(1, math.min(math.max(n, 1), par)))
-      .toDF("id", "c")
-    val compDf = nodesIn.select(col("id")).join(compLocal, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("c"), col("id")).as("c"))
+    val forestDf = LocalGraph.relation(spark, fRows.toIndexedSeq, "u", "v", "w")
+    val compDf = LocalGraph.attach(nodesIn.select(col("id")),
+      LocalGraph.relation(spark, ids.indices.map(j => (ids(j), comp(j))),
+        "id", "c"))(col("id"), coalesce(col("c"), col("id")).as("c"))
     (forestDf, compDf)
   }
 
@@ -2762,52 +2550,33 @@ object Algorithms {
                                  rounds: Int, levels: Int): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val (us, vs, ws) = collectCanonW(canonW)
-    val (ids, lbls) = louvainLocalLevels(us, vs, ws, rounds, levels)
-    val n = ids.length
+    val (g, ws) = LocalGraph.collectLongW(canonW, "u", "v", "w")
+    val lbls = louvainLocalLevels(g, ws, rounds, levels)
+    val ids = g.ids
+    val n = g.n
     // intra-community CC: union-find over proper pairs with equal
-    // labels; ids sort ascending, so min INDEX root = min member id
-    val parent = Array.tabulate(n)(identity)
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    var i = 0
-    while (i < us.length) {
-      if (us(i) != vs(i)) {
-        val a = java.util.Arrays.binarySearch(ids, us(i))
-        val b = java.util.Arrays.binarySearch(ids, vs(i))
-        if (lbls(a) == lbls(b)) {
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-        }
-      }
-      i += 1
-    }
-    val refined = new Array[Long](n)
-    i = 0
-    while (i < n) { refined(i) = ids(find(i)); i += 1 }
+    // labels (root = min member id)
+    val root = g.roots(e => g.src(e) != g.dst(e) &&
+      lbls(g.src(e)) == lbls(g.dst(e)))
+    val refined = root.map(ids(_))
     // n_parts = distinct refined roots per community
     val parts = new java.util.HashMap[java.lang.Long,
       java.util.HashSet[java.lang.Long]](n * 2)
-    i = 0
+    var i = 0
     while (i < n) {
       parts.computeIfAbsent(lbls(i), _ => new java.util.HashSet[java.lang.Long]())
         .add(refined(i))
       i += 1
     }
-    val audit = spark.sparkContext.parallelize(
-        ids.indices.map(i => (ids(i), lbls(i), refined(i),
-          parts.get(lbls(i)).size.toLong)),
-        math.max(1, math.min(n, spark.sparkContext.defaultParallelism)))
-      .toDF("id", "community", "refined_community", "n_parts")
-    nodes.select(col("id")).join(audit, Seq("id"), "left_outer")
-      .select(col("id").as("node"),
-        coalesce(col("community"), col("id")).as("community"),
-        coalesce(col("refined_community"), col("id")).as("refined_community"),
-        coalesce(col("n_parts"), lit(1L)).as("n_parts"),
-        (coalesce(col("n_parts"), lit(1L)) > 1).cast("int").as("was_split"))
+    val audit = LocalGraph.relation(spark,
+      ids.indices.map(i => (ids(i), lbls(i), refined(i),
+        parts.get(lbls(i)).size.toLong)),
+      "id", "community", "refined_community", "n_parts")
+    LocalGraph.attach(nodes.select(col("id")), audit)(col("id").as("node"),
+      coalesce(col("community"), col("id")).as("community"),
+      coalesce(col("refined_community"), col("id")).as("refined_community"),
+      coalesce(col("n_parts"), lit(1L)).as("n_parts"),
+      (coalesce(col("n_parts"), lit(1L)) > 1).cast("int").as("was_split"))
   }
 
   /** PageRank, fixed iteration count, damping d. The edge list is
@@ -2897,57 +2666,25 @@ object Algorithms {
                               rounds: Int): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val eRows = symPlan.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
-    val epAll = new Array[Long](2 * eRows.length)
-    var i = 0
-    while (i < eRows.length) {
-      epAll(2 * i) = eRows(i)._1; epAll(2 * i + 1) = eRows(i)._2; i += 1
-    }
-    java.util.Arrays.sort(epAll)
-    var nEp = 0
-    i = 0
-    while (i < epAll.length) {
-      if (nEp == 0 || epAll(nEp - 1) != epAll(i)) { epAll(nEp) = epAll(i); nEp += 1 }
-      i += 1
-    }
-    val epDf = spark.sparkContext.parallelize(
-        (0 until nEp).map(epAll(_)),
-        math.max(1, math.min(math.max(nEp, 1),
-          spark.sparkContext.defaultParallelism)))
-      .toDF("id")
-    val vid = nodes.select(col("id")).distinct()
-      .join(epDf, Seq("id"), "left_semi")
-      .as[Long].collect()
-    java.util.Arrays.sort(vid)
-    val us = new Array[Int](eRows.length); val vs = new Array[Int](eRows.length)
-    var mE = 0
-    i = 0
-    while (i < eRows.length) {
-      val a = java.util.Arrays.binarySearch(vid, eRows(i)._1)
-      val b = java.util.Arrays.binarySearch(vid, eRows(i)._2)
-      if (a >= 0 && b >= 0) { us(mE) = a; vs(mE) = b; mE += 1 }
-      i += 1
-    }
-    val nVe = vid.length
+    val (g, _) = LocalGraph.collect(symPlan, "u", "v")
+      .restrict(nodes.select(col("id")).distinct())
+    val us = g.src; val vs = g.dst
+    val mE = g.m
+    val vid = g.ids
+    val nVe = g.n
     var x = Array.fill(nVe)(1L)
     var r = 0
     while (r < rounds) {
       val next = new Array[Long](nVe)
-      i = 0
+      var i = 0
       while (i < mE) { next(us(i)) += x(vs(i)); i += 1 }
       x = next
       r += 1
     }
-    val par = spark.sparkContext.defaultParallelism
-    val rel = spark.sparkContext.parallelize(
-        (0 until nVe).map(j => (vid(j), x(j))),
-        math.max(1, math.min(math.max(nVe, 1), par)))
-      .toDF("id", "lw")
     val offVal = if (rounds == 0) 1L else 0L
-    nodes.select(col("id")).distinct()
-      .join(rel, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("lw"), lit(offVal)).as("walks"))
+    LocalGraph.attach(nodes.select(col("id")).distinct(),
+      LocalGraph.relation(spark, (0 until nVe).map(j => (vid(j), x(j))),
+        "id", "lw"))(col("id"), coalesce(col("lw"), lit(offVal)).as("walks"))
   }
 
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
@@ -3105,49 +2842,19 @@ object Algorithms {
       isPpr: Boolean, nS: Double = 0.0): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val eRows = e.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect()
+    val all = LocalGraph.collect(e, "src", "dst")
     releaseIterate(e)
-    // distinct endpoints → semi-join against the ids checkpoint: the
-    // collected membership set is ≤ 2|E| rows, never |V|
-    val epAll = new Array[Long](2 * eRows.length)
-    var i = 0
-    while (i < eRows.length) {
-      epAll(2 * i) = eRows(i)._1; epAll(2 * i + 1) = eRows(i)._2; i += 1
-    }
-    java.util.Arrays.sort(epAll)
-    var nEp = 0
-    i = 0
-    while (i < epAll.length) {
-      if (nEp == 0 || epAll(nEp - 1) != epAll(i)) { epAll(nEp) = epAll(i); nEp += 1 }
-      i += 1
-    }
-    val epDf = spark.sparkContext.parallelize(
-        (0 until nEp).map(epAll(_)),
-        math.max(1, math.min(math.max(nEp, 1),
-          spark.sparkContext.defaultParallelism)))
-      .toDF("id")
-    val veRows = ids.join(epDf, Seq("id"), "left_semi").collect()
-    val nVe = veRows.length
-    val idx = new java.util.HashMap[java.lang.Long, Integer](nVe * 2)
-    val vid = new Array[Long](nVe)
+    val (g, veRows) = all.restrict(ids)
+    val nVe = g.n
+    val vid = g.ids
+    val es = g.src; val ed = g.dst
     val odeg = new Array[Long](nVe)
     val seed = new Array[Boolean](nVe)
-    i = 0
+    var i = 0
     while (i < nVe) {
       val r = veRows(i)
-      vid(i) = r.getLong(0)
       odeg(i) = if (r.isNullAt(1)) 0L else r.getLong(1)
       seed(i) = isPpr && r.getBoolean(2)
-      idx.put(vid(i), i)
-      i += 1
-    }
-    val es = new Array[Int](eRows.length); val ed = new Array[Int](eRows.length)
-    i = 0
-    while (i < eRows.length) {
-      val a = idx.get(eRows(i)._1); val b = idx.get(eRows(i)._2)
-      es(i) = if (a == null) -1 else a.intValue()
-      ed(i) = if (b == null) -1 else b.intValue()
       i += 1
     }
     def r12(x: Double): Double = java.math.BigDecimal.valueOf(x)
@@ -3173,12 +2880,7 @@ object Algorithms {
       dang += (if (!isPpr) nOff * offRank else nOffSeed * offSeedRank)
       val acc = new Array[Double](nVe)
       i = 0
-      while (i < eRows.length) {
-        val si = es(i)
-        if (si >= 0 && ed(i) >= 0) acc(ed(i)) += rank(si) / odeg(si)
-        else if (si >= 0) { /* dst off-nodes: contribution dropped */ }
-        i += 1
-      }
+      while (i < g.m) { acc(ed(i)) += rank(es(i)) / odeg(es(i)); i += 1 }
       val next = new Array[Double](nVe)
       i = 0
       while (i < nVe) {
@@ -3193,16 +2895,12 @@ object Algorithms {
       else offSeedRank = r12(reset / nS + damping * (dang / nS))
       it += 1
     }
-    val par = spark.sparkContext.defaultParallelism
-    val rel = spark.sparkContext.parallelize(
-        (0 until nVe).map(j => (vid(j), rank(j))),
-        math.max(1, math.min(math.max(nVe, 1), par)))
-      .toDF("id", "lr")
     val offExpr =
       if (!isPpr) lit(offRank)
       else when(col("is_seed"), lit(offSeedRank)).otherwise(lit(0.0))
-    ids.join(rel, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("lr"), offExpr).as("rank"))
+    LocalGraph.attach(ids, LocalGraph.relation(spark,
+        (0 until nVe).map(j => (vid(j), rank(j))), "id", "lr"))(
+      col("id"), coalesce(col("lr"), offExpr).as("rank"))
   }
 
   /** Multi-seed hop-count BFS: the sparse reached set (seed, id, d) for
@@ -3376,51 +3074,21 @@ object Algorithms {
     // shape is what scales on a cluster.
     if (nE <= collectGate) {
       import spark.implicits._
-      val es = e0.select(col("src").cast("long"), col("dst").cast("long"),
-        col("weight").cast("double")).as[(Long, Long, Double)].collect()
-      releaseIterate(e0)
       val seedArr = seedIds.select(col("id").cast("long")).as[Long].collect()
       // dictionary over endpoints ∪ seeds (a seed off the edge list
       // still emits its 0.0 row)
-      val idsAll = new Array[Long](2 * es.length + seedArr.length)
-      var i = 0
-      while (i < es.length) {
-        idsAll(2 * i) = es(i)._1; idsAll(2 * i + 1) = es(i)._2; i += 1
-      }
-      System.arraycopy(seedArr, 0, idsAll, 2 * es.length, seedArr.length)
-      java.util.Arrays.sort(idsAll)
-      var n = 0
-      i = 0
-      while (i < idsAll.length) {
-        if (n == 0 || idsAll(n - 1) != idsAll(i)) { idsAll(n) = idsAll(i); n += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(idsAll, n)
+      val (g, ws) = LocalGraph.collectDoubleW(e0, "src", "dst", "weight", seedArr)
+      releaseIterate(e0)
+      val n = g.n
+      val ids = g.ids
       // CSR over DIRECTED edges with weights
-      val offs = new Array[Int](n + 1)
-      val si = new Array[Int](es.length); val di = new Array[Int](es.length)
-      i = 0
-      while (i < es.length) {
-        si(i) = java.util.Arrays.binarySearch(ids, es(i)._1)
-        di(i) = java.util.Arrays.binarySearch(ids, es(i)._2)
-        offs(si(i) + 1) += 1
-        i += 1
-      }
-      var x = 0
-      while (x < n) { offs(x + 1) += offs(x); x += 1 }
-      val flat = new Array[Int](es.length); val fw = new Array[Double](es.length)
-      val pos = java.util.Arrays.copyOf(offs, n)
-      i = 0
-      while (i < es.length) {
-        flat(pos(si(i))) = di(i); fw(pos(si(i))) = es(i)._3; pos(si(i)) += 1
-        i += 1
-      }
+      val (img, slotEdge) = g.csr(both = false)
+      val offs = img.offs; val flat = img.flat
+      val fw = slotEdge.map(ws(_))
       val inf = Double.PositiveInfinity
       var cur = Array.fill(n)(inf)
-      i = 0
-      while (i < seedArr.length) {
-        cur(java.util.Arrays.binarySearch(ids, seedArr(i))) = 0.0; i += 1
-      }
+      var i = 0
+      while (i < seedArr.length) { cur(g.index(seedArr(i))) = 0.0; i += 1 }
       var nxt = new Array[Double](n)
       var pass = 0
       var live = true
@@ -3448,13 +3116,8 @@ object Algorithms {
       val reached = Array.newBuilder[(Long, Double)]
       i = 0
       while (i < n) { if (cur(i) != inf) reached += ((ids(i), cur(i))); i += 1 }
-      val rows = reached.result()
-      val local = spark.sparkContext.parallelize(rows.toIndexedSeq,
-          math.max(1, math.min(rows.length,
-            spark.sparkContext.defaultParallelism)))
-        .toDF("id", "dist")
-      return nodes.select(col("id")).join(local, Seq("id"), "left_outer")
-        .select(col("id"), col("dist"))
+      return LocalGraph.attach(nodes.select(col("id")), LocalGraph.relation(
+        spark, reached.result().toIndexedSeq, "id", "dist"))(col("id"), col("dist"))
     }
     val width = loopWidth(spark, nE)
     val loopSpark = loopSession(spark, width)

@@ -16,23 +16,12 @@ object Docs {
   def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
 
-  /** (doc_id, text) re-laid to the session's core count when the
-    * native scan layout is thinner — the m_phash-decode / ANN-vector
-    * precedent (guide §1.2 step 1 + §2.5): at bench SFs the documents
-    * file is ONE parquet split, so every tokenize / n-gram explode /
-    * per-gram-hash stage downstream of the scan ran in a single task
-    * (JobProfile: 0.5–2 s SERIAL per gram build, several builds per
-    * d-key). Hash placement on doc_id keeps the layout deterministic
-    * under retries; at scale the scan is already ≥ width partitions
-    * and this is a no-op — no shuffle added where it would hurt.
-    * Values are row-local and every consumer aggregates by key or
-    * orders its output, so results are layout-independent. */
-  private[pipeline] def docsWide(spark: SparkSession, dir: String): DataFrame = {
-    val base = docs(spark, dir).select(col("doc_id"), col("text"))
-    val width = spark.sparkContext.defaultParallelism
-    if (base.rdd.getNumPartitions < width) base.repartition(width, col("doc_id"))
-    else base
-  }
+  /** (doc_id, text) through [[graft.sources.Layout.widen]]. Values are
+    * row-local and every consumer aggregates by key or orders its
+    * output, so results are layout-independent. */
+  private[pipeline] def docsWide(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Layout.widen(
+      docs(spark, dir).select(col("doc_id"), col("text")), "doc_id")
 
   /** Whitespace tokens. `split` takes a regex; a single space matches the
     * generator's single-space joining exactly (and mirrors DuckDB's

@@ -252,21 +252,10 @@ object Multimodal {
   def phashTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // The decode+fingerprint stage is the key's dominant compute
-    // (~60 MD5 digests per payload), but it inherits the SCAN's
-    // partitioning — at bench scale the documents table is one parquet
-    // split, so the whole stage ran as ONE task (JobProfile r21:
-    // 8 tasks total, 7.9 s task time ≈ 8.2 s wall — serial). Widen
-    // only when the scan is narrower than the cluster (at 100 TB the
-    // scan is already thousands of splits and the gate is a no-op, so
-    // no payload shuffle is added where it would hurt); hash layout on
-    // doc_id keeps the placement deterministic under retries
-    // (guide §2.5 — never round-robin on a stage feeding a dedup).
-    val in = withPayload(spark, dir)
-    val width = spark.sparkContext.defaultParallelism
-    val wide =
-      if (in.rdd.getNumPartitions < width) in.repartition(width, col("doc_id"))
-      else in
-    wide
+    // (~60 MD5 digests per payload) and inherits the scan's layout
+    // (JobProfile r21: one task, 7.9 s task time ≈ 8.2 s wall), so it
+    // is widened first
+    graft.sources.Layout.widen(withPayload(spark, dir), "doc_id")
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         // STUB DECODER (see multimodalMeta) — decode then fingerprint

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Layout
 
 /** Embedding similarity operators over the `embeddings` table
   * (vec_id, embedding FLOAT[64], label).
@@ -47,22 +48,6 @@ object Similarity {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(arrayDot(col("v"), col("v"))))
-
-  /** Re-lay a vectors frame off a too-thin native scan layout BEFORE
-    * its eager checkpoint feeds the per-row-heavy broadcast-join maps
-    * downstream (encode/assign argmaxes: every row pays tens of
-    * round-4 dots) — the m_phash decode precedent. JobProfile at
-    * sf0.1 showed each PQ-family key spending a 3–3.7 s SINGLE-TASK
-    * stage because the 1-task parquet scan's layout flowed through
-    * the checkpoint into every narrow stage behind it. Hash layout on
-    * vec_id keeps placement deterministic under retries (guide §2.5);
-    * at scale the scan is already ≥ width partitions and this is a
-    * no-op — no payload shuffle where it would hurt. */
-  private def widen(df: DataFrame): DataFrame = {
-    val width = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < width) df.repartition(width, col("vec_id"))
-    else df
-  }
 
   /** HALF_UP 4-dp rounding — the exact semantics of SQL `round(x, 4)`
     * in both Spark and DuckDB, for kernel-side parity. */
@@ -1063,7 +1048,7 @@ object Similarity {
     * cast to double once. `s_pq_ann`. */
   def pqAnn(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
             iters: Int = PqIters): DataFrame = {
-    val v = widen(vectors(spark, dir)).localCheckpoint(true)
+    val v = Layout.widen(vectors(spark, dir), "vec_id").localCheckpoint(true)
     val slices = pqSlices(v).localCheckpoint(true) // training + encode + dt
     pqAnnOn(v, slices, pqCodebook(slices, iters), nQueries, k)
   }
@@ -1126,7 +1111,7 @@ object Similarity {
     * top-k rescore, [[pqAnn]]'s output shape. `s_ivfpq_ann`. */
   def ivfPqAnn(spark: SparkSession, dir: String, nQueries: Int = 10,
                k: Int = 5): DataFrame = {
-    val v = widen(vectors(spark, dir)).localCheckpoint(true)
+    val v = Layout.widen(vectors(spark, dir), "vec_id").localCheckpoint(true)
     val slices = pqSlices(v).localCheckpoint(true)
     ivfPqAnnOn(v, slices, pqCodebook(slices, PqIters), nQueries, k)
   }
@@ -1401,7 +1386,7 @@ object Similarity {
     // twice and Lloyd-training the identical codebook twice. Values
     // are unchanged (same math on the same rows), so the oracle SQL
     // replays bit-for-bit.
-    val v = widen(vectors(spark, dir)).localCheckpoint(true)
+    val v = Layout.widen(vectors(spark, dir), "vec_id").localCheckpoint(true)
     val slices = pqSlices(v).localCheckpoint(true)
     val cb = pqCodebook(slices, PqIters)
     Seq(

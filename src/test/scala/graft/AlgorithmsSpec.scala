@@ -168,10 +168,14 @@ class AlgorithmsSpec extends SparkSpec {
     // adopt membership filters); integers compare exactly, the 12-dp
     // quantized doubles to 1e-12 (the contract's own tolerance class)
     val rng = new scala.util.Random(53)
-    val raw = (1 to 160).map { _ =>
+    val loopFree = (1 to 160).map { _ =>
       (rng.nextInt(44).toLong, rng.nextInt(44).toLong) // 40..43 off-node
     }.filter(t => t._1 != t._2)
-    val edges = raw.toDF("src", "dst")
+    // one more input: the same graph plus self-loops — a duplicated one,
+    // one on an off-node endpoint (41) and one on an otherwise isolated
+    // node (46), which the shared dictionary must treat like any edge
+    val withLoops = loopFree ++ Seq((3L, 3L), (3L, 3L), (12L, 12L), (41L, 41L),
+      (46L, 46L))
     val nodes = nodesDf(0L to 47L: _*) // superset: every endpoint + isolates
     // 40..43 appear in edges but are NOT node rows here (membership filter)
     val okNodes = nodesDf((0L to 39L) ++ (44L to 47L): _*)
@@ -184,19 +188,22 @@ class AlgorithmsSpec extends SparkSpec {
       assert(a.keySet == b.keySet)
       a.foreach { case (k, v) => assert(math.abs(v - b(k)) <= 1e-12, s"node $k") }
     }
-    close(dmap(Algorithms.pageRank(okNodes, edges)),
-      dmap(Algorithms.pageRank(okNodes, edges, collectGate = -1L)))
-    close(dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds)),
-      dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds, collectGate = -1L)))
-    assert(lmap(Algorithms.labelPropagation(okNodes, edges)) ==
-      lmap(Algorithms.labelPropagation(okNodes, edges, collectGate = -1L)))
-    assert(lmap(Algorithms.walkCounts(okNodes, edges)) ==
-      lmap(Algorithms.walkCounts(okNodes, edges, collectGate = -1L)))
-    // and the superset-node case (40..43 back in as plain nodes)
-    assert(lmap(Algorithms.walkCounts(nodes, edges)) ==
-      lmap(Algorithms.walkCounts(nodes, edges, collectGate = -1L)))
-    close(dmap(Algorithms.pageRank(nodes, edges)),
-      dmap(Algorithms.pageRank(nodes, edges, collectGate = -1L)))
+    for (raw <- Seq(loopFree, withLoops)) {
+      val edges = raw.toDF("src", "dst")
+      close(dmap(Algorithms.pageRank(okNodes, edges)),
+        dmap(Algorithms.pageRank(okNodes, edges, collectGate = -1L)))
+      close(dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds)),
+        dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds, collectGate = -1L)))
+      assert(lmap(Algorithms.labelPropagation(okNodes, edges)) ==
+        lmap(Algorithms.labelPropagation(okNodes, edges, collectGate = -1L)))
+      assert(lmap(Algorithms.walkCounts(okNodes, edges)) ==
+        lmap(Algorithms.walkCounts(okNodes, edges, collectGate = -1L)))
+      // and the superset-node case (40..43 back in as plain nodes)
+      assert(lmap(Algorithms.walkCounts(nodes, edges)) ==
+        lmap(Algorithms.walkCounts(nodes, edges, collectGate = -1L)))
+      close(dmap(Algorithms.pageRank(nodes, edges)),
+        dmap(Algorithms.pageRank(nodes, edges, collectGate = -1L)))
+    }
   }
 
   test("shortest paths match Dijkstra on a weighted fixture") {
@@ -288,23 +295,29 @@ class AlgorithmsSpec extends SparkSpec {
     // doubles (same additions, same mins), nulls included, and a seed
     // off the edge list keeps its 0.0 row
     val rng = new scala.util.Random(37)
-    val edges = (1 to 400).map { _ =>
+    val loopFree = (1 to 400).map { _ =>
       (rng.nextInt(90).toLong, rng.nextInt(90).toLong,
         (rng.nextInt(1000) + 1) / 7.0)
-    }.filter(t => t._1 != t._2).toDF("src", "dst", "weight")
+    }.filter(t => t._1 != t._2)
+    // one more input: the same graph plus self-loops — on a seed, on a
+    // reached node, and on a node (98) no other edge touches
+    val withLoops = loopFree ++ Seq((0L, 0L, 0.5), (7L, 7L, 1.0), (98L, 98L, 3.0))
     val nodes = (0L to 100L).toDF("id")
     val seeds = Seq(0L, 1L, 95L).toDF("id") // 95 is edge-less
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))))
       .toSet
-    val viaLocal = rows(Algorithms.shortestPaths(nodes, edges, seeds))
-    val viaLoop = rows(Algorithms.shortestPaths(nodes, edges, seeds,
-      collectGate = 0L))
-    assert(viaLocal == viaLoop)
-    assert(viaLocal.contains((95L, java.lang.Double.valueOf(0.0))),
-      "edge-less seed keeps 0.0")
-    assert(viaLocal.exists(_._2 == null), "unreachable stay null")
+    for (raw <- Seq(loopFree, withLoops)) {
+      val edges = raw.toDF("src", "dst", "weight")
+      val viaLocal = rows(Algorithms.shortestPaths(nodes, edges, seeds))
+      val viaLoop = rows(Algorithms.shortestPaths(nodes, edges, seeds,
+        collectGate = 0L))
+      assert(viaLocal == viaLoop)
+      assert(viaLocal.contains((95L, java.lang.Double.valueOf(0.0))),
+        "edge-less seed keeps 0.0")
+      assert(viaLocal.exists(_._2 == null), "unreachable stay null")
+    }
   }
 
   test("boruvka: gated local rounds equal the distributed loop") {
