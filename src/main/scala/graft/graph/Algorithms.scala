@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Gates
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms on DataFrames.
@@ -253,8 +254,7 @@ object Algorithms {
   val CcCyclesPerRound = 1
 
   def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 64,
-                          cyclesPerRound: Int = CcCyclesPerRound,
-                          collectGate: Long = StarCollectGateEdges): DataFrame = {
+                          cyclesPerRound: Int = CcCyclesPerRound): DataFrame = {
     // deliberately NOT on a pinned-width loopSession: measured at sf0.1
     // median-of-5, the pinned session is 14.2 s vs 6.5 s under the
     // caller's adaptive session — unlike SSSP's shrinking frontier,
@@ -268,8 +268,7 @@ object Algorithms {
     // references the symmetrized edge list — release it, or every
     // nested CC call (Borůvka contracts per round) pins one more
     // edge-sized block set for the session lifetime
-    val out = connectedComponentsOnSym(nodes, sym, maxIter, cyclesPerRound,
-      collectGate)
+    val out = connectedComponentsOnSym(nodes, sym, maxIter, cyclesPerRound)
     releaseIterate(sym)
     out
   }
@@ -286,13 +285,12 @@ object Algorithms {
     * when done; this function never does. */
   private[graft] def connectedComponentsOnSym(
       nodes: DataFrame, sym: DataFrame, maxIter: Int = 64,
-      cyclesPerRound: Int = CcCyclesPerRound,
-      collectGate: Long = StarCollectGateEdges): DataFrame = {
+      cyclesPerRound: Int = CcCyclesPerRound): DataFrame = {
     // the sym row count was already a gate probe here (bcOk below — a
     // cached scan of the caller-materialized checkpoint); hoisted so it
     // can also gate the driver union-find shortcut
     val symCnt = sym.count()
-    if (symCnt <= 2 * collectGate) {
+    if (symCnt <= 2 * Gates.edges) {
       // GATED DRIVER UNION-FIND — see [[connectedComponentsStar]]'s
       // twin block for the full rationale. sym carries BOTH
       // orientations of every edge, so the row gate is 2× the edge
@@ -462,9 +460,8 @@ object Algorithms {
     * the convergence probe reading the checkpointed result — the
     * [[kCore]] loop discipline, and superseded iterates released. */
   def kTruss(edges: DataFrame, k: Int,
-             maxRounds: Int = KTrussMaxRounds,
-             collectGate: Long = StarCollectGateEdges): DataFrame =
-    kTrussImg(edges, k, maxRounds, collectGate)._1
+             maxRounds: Int = KTrussMaxRounds): DataFrame =
+    kTrussImg(edges, k, maxRounds)._1
 
   /** [[kTruss]] plus the broadcast handle behind the FINAL support
     * pass's adjacency image (None on the shuffle path) — the returned
@@ -473,14 +470,8 @@ object Algorithms {
     * work in one session should destroy it once the result is
     * consumed, because block-manager blocks are not heap-collectable. */
   private[graft] def kTrussImg(edges: DataFrame, k: Int,
-      maxRounds: Int = KTrussMaxRounds,
-      collectGate: Long = StarCollectGateEdges): (DataFrame,
+      maxRounds: Int = KTrussMaxRounds): (DataFrame,
         Option[org.apache.spark.broadcast.Broadcast[AdjImage]]) = {
-    val trace = sys.env.contains("SPARK_GRAFT_TRUSS_LOG")
-    def t0 = System.nanoTime()
-    def lap(s: Long, what: String): Unit = if (trace)
-      System.err.println(f"[ktruss] $what: ${(System.nanoTime() - s) / 1e9}%.1f s")
-    var st = t0
     // CALLER-OWNED input contract (the [[boruvkaMst]] lesson, §4.13
     // r12(a)): round 0 scans `edges` as-is — three narrow scans per
     // support pass, NOT a defensive re-checkpoint, which at 150k/85M
@@ -495,9 +486,8 @@ object Algorithms {
     var surv = edges.select(col("src").as("u"), col("dst").as("v"))
     var survCp: DataFrame = null // the checkpoint behind surv, if any
     var size = surv.count()
-    lap(st, s"input count ($size edges)")
     // BOUNDED-COLLECT SHORTCUT (the [[unionFindLabels]] class of gate):
-    // below [[StarCollectGateEdges]] canonical edges the whole peel —
+    // below [[Gates.edges]] canonical edges the whole peel —
     // ≤ maxRounds synchronous support-and-filter passes plus the final
     // scoring pass — runs in one driver loop over the collected pairs
     // instead of one image collect + one checkpoint action + several
@@ -509,26 +499,21 @@ object Algorithms {
     // graph. Above the gate the per-round image/shuffle plans stand —
     // their Σdeg cell work is the intrinsic cost and parallelizes
     // per partition on a cluster.
-    if (size <= collectGate) {
+    if (size <= Gates.edges) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val g = LocalGraph.collect(surv, "u", "v")
-      lap(st, s"local peel collect (${g.m} edges)")
-      val rows = trussPeelLocal(g, k, maxRounds)
-      lap(st, "local peel")
+      val rows = trussPeelLocal(LocalGraph.collect(surv, "u", "v"), k, maxRounds)
       return (LocalGraph.relation(spark, rows.toIndexedSeq, "u", "v", "support"),
         None)
     }
     var round = 0
     var done = size == 0L
     while (!done && round < maxRounds) {
-      st = t0
       val (sup, bc) = edgeSupportImg(surv, 2 * size)
       // ONE job: the count materializes the lazy (serialized) checkpoint
       val (next, m) = checkpointCounted(sup
         .filter(col("support") >= k - 2)
         .select(col("u"), col("v")), Some(ser))
-      lap(st, s"round $round support+peel ($m survive)")
       // next is materialized: this round's adjacency image and the
       // superseded survivor checkpoint can go immediately (block-manager
       // blocks are not heap-collectable — see [[edgeSupportImg]])
@@ -544,19 +529,12 @@ object Algorithms {
     // kept edges (on a converged exit it recomputes the fixpoint
     // round's values — memory-cheaper than checkpointing the wide
     // support table every round, and pure broadcast-side compute under
-    // the [[AdjBroadcastMaxCells]] gate). The >0 guard matches the
+    // the [[Gates.cells]] gate). The >0 guard matches the
     // oracle's final inner wedge-join, which drops
     // common-neighbour-free edges too.
     val (fin, finBc) = edgeSupportImg(surv, 2 * size)
     (fin.filter(col("support") > 0), finBc)
   }
-
-  /** Broadcast gate for [[edgeSupport]]'s packed-adjacency image, in
-    * ARRAY CELLS (2|E| — each edge contributes one cell per endpoint):
-    * 256M cells ≈ 2 GB of longs, the dense-synthetic 150k/85M point.
-    * Same role as [[IterateBroadcastMaxRows]], but the payload here is
-    * edge-sized (the arrays), so the gate counts cells, not rows. */
-  val AdjBroadcastMaxCells = 256L * 1000 * 1000
 
   /** The flat adjacency image behind [[edgeSupport]]'s broadcast path:
     * node ids sorted ascending, CSR-style offsets into ONE flat
@@ -570,8 +548,8 @@ object Algorithms {
     * notEnoughMemoryToBuildAndBroadcastTableError), and a long-cell
     * image (measured next) OOMs the default 8 GiB JVM once its torrent
     * blocks and value copy sit beside the edge checkpoint. The int
-    * encoding is safe BY THE GATE: [[AdjBroadcastMaxCells]] ≤ 256M
-    * cells bounds |V| ≤ cells + 1 < 2³¹, so every index fits. */
+    * encoding is safe BY THE GATE: images are built only under
+    * [[Gates.cells]]. */
   private[graft] final case class AdjImage(
       ids: Array[Long], offs: Array[Int], flat: Array[Int]) {
     /** [start, end) slice of `flat` for node `id`; empty if absent. */
@@ -590,7 +568,7 @@ object Algorithms {
       lens.foreach(total += _)
       require(total <= Int.MaxValue,
         s"adjacency image of $total cells exceeds the int-indexed bound; " +
-          "raise the caller's gate only below AdjBroadcastMaxCells")
+          "images are built only under Gates.cells")
       val offs = new Array[Int](n + 1)
       var i = 0
       while (i < n) { offs(i + 1) = offs(i) + lens(i); i += 1 }
@@ -642,7 +620,7 @@ object Algorithms {
     * by v, i.e. Σ_e deg(u) array CELLS through the wire (measured:
     * 24 GB at 47k/8.4M on the dense synthetic, page-cache-masked until
     * the next query pays the writeback). When the caller knows the
-    * symmetric cell count (2|E|) and it clears [[AdjBroadcastMaxCells]],
+    * symmetric cell count (2|E|) and it clears [[Gates.cells]],
     * the packed adjacency is collected into a flat [[AdjImage]] and
     * broadcast ONCE, and support becomes a single narrow map over the
     * edge stream — zero joins, zero exchanges, two slice lookups + a
@@ -718,7 +696,7 @@ object Algorithms {
     * Skew note: range partitioning on the node index gives each task
     * Σ_{u∈N(v)} deg(u) cell work per node — even on the dense-blob
     * synthetic; a power-law corpus at cluster scale would deg²-weight
-    * the index ranges first. Above the [[AdjBroadcastMaxCells]] gate
+    * the index ranges first. Above the [[Gates.cells]] gate
     * the caller falls back to the wedge join — Σdeg² movement is then
     * the intrinsic exact-square cost, parallel per partition. */
   private[graft] def squareCensusImg(surv: DataFrame)
@@ -851,7 +829,7 @@ object Algorithms {
       .union(surv.select(col("v").as("node"), col("u").as("nbr")))
       .groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    if (symCellsHint >= 0 && symCellsHint <= AdjBroadcastMaxCells) {
+    if (symCellsHint >= 0 && symCellsHint <= Gates.cells) {
       val spark = surv.sparkSession
       import spark.implicits._
       val bc = collectAdjImage(adj0)
@@ -942,7 +920,7 @@ object Algorithms {
     * of [[edgeSupportImg]]'s pair map. The array-join formulation of
     * the same rescore copies BOTH endpoints' full adjacency arrays
     * into every candidate row (two keyed exchanges moving
-    * Σ_cand(deg a + deg b) CELLS); under the [[AdjBroadcastMaxCells]]
+    * Σ_cand(deg a + deg b) CELLS); under the [[Gates.cells]]
     * gate this is instead one narrow map over the candidate stream —
     * zero joins, two slice lookups + a two-pointer intersect per pair.
     * Degrees fall out of the CSR offsets for free, saving the degree
@@ -1047,7 +1025,7 @@ object Algorithms {
   val CorenessRounds = 16
 
   /** Image-gated twin of [[coreness]]'s h-index loop (the
-    * [[hopDistancesImg]] idiom): under the [[AdjBroadcastMaxCells]]
+    * [[hopDistancesImg]] idiom): under the [[Gates.cells]]
     * gate the whole synchronous iteration runs over the broadcast CSR
     * [[AdjImage]] — zero exchanges, zero per-round scheduler jobs —
     * instead of paying one checkpoint action plus ~6 AQE stage jobs
@@ -1167,8 +1145,7 @@ object Algorithms {
     * round), which the budget caps by design. */
   def coreness(nodes: DataFrame, edges: DataFrame,
                rounds: Int = CorenessRounds,
-               nSymHint: Long = -1L,
-               maxCells: Long = AdjBroadcastMaxCells): DataFrame = {
+               nSymHint: Long = -1L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the symmetric view is built in one explode pass (a self-union
     // would scan the caller's edge frame once per branch — one more
@@ -1186,7 +1163,7 @@ object Algorithms {
     // and skip the sizing pass entirely; the count doubles as the
     // image-gate probe ([[hopDistances]] precedent)
     val nSym = if (nSymHint >= 0) nSymHint else symPlan.count()
-    if (nSym <= maxCells) return corenessImg(nodes, symPlan, rounds)
+    if (nSym <= Gates.cells) return corenessImg(nodes, symPlan, rounds)
     val (sess, sym) = bigSymCheckpoint(symPlan, nSym, "v")
     val (ids, nV) = checkpointCounted(if (sess ne nodes.sparkSession)
         rebase(sess, nodes.select(col("id")))
@@ -1220,7 +1197,6 @@ object Algorithms {
     var chg: DataFrame = null
     var r = 0
     var live = true
-    val t0 = System.nanoTime()
     while (r < rounds && live) {
       // touched = nodes with ≥1 changed neighbour. sym is laid out on v
       // (the bigSymCheckpoint key), so the chg probe lands without
@@ -1259,16 +1235,12 @@ object Algorithms {
         .join(bc(h), Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("h"), col("oldc")).as("c"),
           (col("h").isNotNull && col("h") =!= col("oldc")).as("changed"))
-      if (CorenessLog && r == 1) prePlan.explain("formatted")
       // ONE job: the changed-count probe materializes the lazy iterate;
       // the count both certifies the fixpoint (0 ⇒ every later round is
       // a no-op ⇒ early exit equals the oracle's full-budget unroll)
       // and sizes next round's path
       val (next, nChanged) = loopCheckpointPredCounted(prePlan, col("changed"))
       live = nChanged > 0
-      if (CorenessLog) System.err.println(
-        f"[coreness] round ${r + 1}: changed=$nChanged/$nV " +
-          f"frontier=${chg != null} ${(System.nanoTime() - t0) / 1e9}%.1f s")
       releaseIterate(c)
       c = next.select(col("id"), col("c"))
       chg = if (nChanged * CorenessFrontierFrac >= nV) null
@@ -1290,11 +1262,6 @@ object Algorithms {
     * the full 2|E| gather once the frontier has genuinely collapsed.
     * 4 ⇒ switch to the delta path below 25% of nodes changed. */
   val CorenessFrontierFrac = 4L
-
-  /** Per-round convergence trace for [[coreness]] (round, changed
-    * count, frontier engagement, cumulative wall) — stderr, opt-in via
-    * `SPARK_GRAFT_CORENESS_LOG`, for scale-harness forensics. */
-  private val CorenessLog = sys.env.contains("SPARK_GRAFT_CORENESS_LOG")
 
   /** Broadcast ceiling for the iterative kernels' |V|-row iterate
     * frames (value/label tables, per-round aggregates, frontier
@@ -1335,14 +1302,13 @@ object Algorithms {
     * symmetrized edge list is checkpointed and pre-partitioned once;
     * each round is exactly one action (the iterate checkpoint). */
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
-                       rounds: Int = LabelPropRounds,
-                       collectGate: Long = StarCollectGateEdges): DataFrame = {
+                       rounds: Int = LabelPropRounds): DataFrame = {
     val sym = edges.select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v")))
       .repartition(col("v"))
       .localCheckpoint(true)
     // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[StarCollectGateEdges]] symmetric rows the whole round
+    // below [[Gates.edges]] symmetric rows the whole round
     // stack — per round a gather aggregate, an argmax aggregate and an
     // adopt-join checkpoint (≈6 AQE stage jobs) — runs in one driver
     // loop over the collected (u, v) rows. [[labelPropLocal]] replays
@@ -1351,7 +1317,7 @@ object Algorithms {
     // by construction; AlgorithmsSpec pins local == loop. The count
     // probe is the broadcast-gate count the loop needed anyway.
     val nSym = sym.count()
-    if (nSym <= collectGate) return labelPropLocal(sym, nodes, rounds)
+    if (nSym <= Gates.edges) return labelPropLocal(sym, nodes, rounds)
     var labels = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint(true)
     // |V|-row label frames broadcast into the edge-scale gather below
     // the shared ceiling ([[IterateBroadcastMaxRows]]): without the
@@ -1741,14 +1707,13 @@ object Algorithms {
   def louvain(nodes: DataFrame, edges: DataFrame,
               rounds: Int = LouvainRounds,
               levels: Int = LouvainLevels,
-              canonicalDistinct: Boolean = false,
-              collectGate: Long = StarCollectGateEdges): DataFrame = {
+              canonicalDistinct: Boolean = false): DataFrame = {
     val canon = edges.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v"))
     louvainOn(nodes,
       if (canonicalDistinct) canon.select(col("u"), col("v"), lit(1L).as("w"))
       else canon.groupBy(col("u"), col("v")).agg(count(lit(1)).as("w")),
-      rounds, levels, collectGate)
+      rounds, levels)
   }
 
   /** WEIGHTED Louvain: identical machinery, but the level-1 edge
@@ -1762,8 +1727,7 @@ object Algorithms {
   def louvainWeighted(nodes: DataFrame, edges: DataFrame,
                       rounds: Int = LouvainRounds,
                       levels: Int = LouvainLevels,
-                      canonicalDistinct: Boolean = false,
-                      collectGate: Long = StarCollectGateEdges): DataFrame = {
+                      canonicalDistinct: Boolean = false): DataFrame = {
     // the integer-w contract is load-bearing, not advisory: a float w
     // would truncate in the m total (cast to long) while degree sums
     // stay fractional, silently skewing the ΔQ argmax and breaking
@@ -1779,14 +1743,12 @@ object Algorithms {
     louvainOn(nodes,
       if (canonicalDistinct) canon
       else canon.groupBy(col("u"), col("v")).agg(sum(col("w")).as("w")),
-      rounds, levels, collectGate)
+      rounds, levels)
   }
 
   private def louvainOn(nodes: DataFrame, canon0: DataFrame,
-                        rounds: Int, levels: Int,
-                        collectGate: Long = StarCollectGateEdges): DataFrame =
-    louvainOnLayer(nodes, canon0, rounds, levels, keepLayer = false,
-      collectGate)._1
+                        rounds: Int, levels: Int): DataFrame =
+    louvainOnLayer(nodes, canon0, rounds, levels, keepLayer = false)._1
 
   /** [[louvainOn]] with the LEVEL-1 symmetric layer optionally kept
     * alive and returned (null when `keepLayer` is false, or trivially
@@ -1795,11 +1757,10 @@ object Algorithms {
     * composition wants them). */
   private def louvainOnLayer(nodes: DataFrame, canon0: DataFrame,
                              rounds: Int, levels: Int,
-                             keepLayer: Boolean,
-                             collectGate: Long = StarCollectGateEdges)
+                             keepLayer: Boolean)
       : (DataFrame, SymLayer) = {
     // BOUNDED-COLLECT SHORTCUT (the [[unionFindLabels]] class of gate):
-    // below [[StarCollectGateEdges]] canonical edges the whole
+    // below [[Gates.edges]] canonical edges the whole
     // level/round stack — every ΔQ gather, sigma aggregate, argmax,
     // parity adopt and the inter-level coarsening — runs in one driver
     // loop over the collected (u, v, w) rows instead of ~6 AQE stage
@@ -1812,7 +1773,7 @@ object Algorithms {
     // Above the gate the distributed loop stands — the 10^10-node
     // regime. `keepLayer` callers gate in [[louvainRefine]] instead
     // (their refine pass folds into the same collect).
-    if (!keepLayer && collectGate > 0 && canon0.count() <= collectGate) {
+    if (!keepLayer && canon0.count() <= Gates.edges) {
       val spark = nodes.sparkSession
       import spark.implicits._
       val (g, ws) = LocalGraph.collectLongW(canon0, "u", "v", "w")
@@ -1859,16 +1820,6 @@ object Algorithms {
     releaseIterate(prevLbl) // mapping checkpoint was the last reader
     (mapping, kept)
   }
-
-  /** Driver-collect gate for [[connectedComponentsStar]], in DISTINCT
-    * canonical edges: ≤ 4M pairs of longs is ~64 MB raw (a few hundred
-    * MB transient with collect boxing) — the same bounded-collect class
-    * as [[AdjBroadcastMaxCells]], well inside the 8 GiB driver. Every
-    * star call site feeds the kernel a FOREST cut (≤ |V|−1 edges) or a
-    * Borůvka merge graph (≤ current component count), so at any tested
-    * scale the gate passes; at 10^10-node scale those inputs exceed it
-    * and the distributed loop stands. */
-  val StarCollectGateEdges = 4L * 1000 * 1000
 
   /** The gated CC shortcut shared by [[connectedComponentsStar]] and
     * [[connectedComponentsOnSym]]: collect the (u, v) frame, run the
@@ -2091,14 +2042,13 @@ object Algorithms {
     * one fixpoint probe action; iterates go through [[loopCheckpoint]]
     * so carried stats stay flat. */
   def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              maxRounds: Int = StarMaxRounds,
-                              collectGate: Long = StarCollectGateEdges): DataFrame = {
+                              maxRounds: Int = StarMaxRounds): DataFrame = {
     var (e, eCnt) = loopCheckpointCounted(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct()
         .select(col("b").as("u"), col("a").as("v"))) // u > v: child→smaller
-    if (eCnt <= collectGate) {
+    if (eCnt <= Gates.edges) {
       // GATED DRIVER UNION-FIND — the bounded-collect idiom
       // ([[collectAdjImage]] / embeddingNearDup): the distinct edge
       // count just fell out of the init materialization, and when it
@@ -2223,11 +2173,10 @@ object Algorithms {
     * [[freshStats]] between rounds keeps the nested-kernel composition
     * from compounding Catalyst stats ([[refinePartition]]'s lesson). */
   private[graft] def boruvkaMst(nodesIn: DataFrame, edgesIn: DataFrame,
-                                maxRounds: Int = MstMaxRounds,
-                                collectGate: Long = StarCollectGateEdges)
+                                maxRounds: Int = MstMaxRounds)
       : (DataFrame, DataFrame) = {
     // BOUNDED-COLLECT SHORTCUT (the [[unionFindLabels]] class of gate):
-    // below [[StarCollectGateEdges]] edges the whole pick+contract
+    // below [[Gates.edges]] edges the whole pick+contract
     // round stack runs in one driver loop over the collected
     // (u, v, w) rows — [[boruvkaMstLocal]] replays the distributed
     // semantics op for op (same per-component struct-min total order,
@@ -2238,7 +2187,7 @@ object Algorithms {
     // (the kernel's input contract) and doubles as the broadcast-gate
     // count the loop needed anyway. Above the gate the distributed
     // loop stands — the 10^10-node regime.
-    if (edgesIn.count() <= collectGate)
+    if (edgesIn.count() <= Gates.edges)
       return boruvkaMstLocal(nodesIn, edgesIn, maxRounds)
     // The per-component argmin is a min over a STRUCT — not a mutable
     // primitive, so it plans as ObjectHashAggregate, whose default
@@ -2512,8 +2461,7 @@ object Algorithms {
   def louvainRefine(nodes: DataFrame, edges: DataFrame,
                     rounds: Int = LouvainRounds,
                     levels: Int = LouvainLevels,
-                    canonicalDistinct: Boolean = false,
-                    collectGate: Long = StarCollectGateEdges): DataFrame = {
+                    canonicalDistinct: Boolean = false): DataFrame = {
     val canon = edges.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v"))
     val canonW =
@@ -2529,11 +2477,10 @@ object Algorithms {
     // id, n_parts = 1), the distributed stay-row/CC-singleton
     // fixpoint. Labels and parts identical by construction; LouvainSpec
     // pins gated == distributed row sets.
-    if (collectGate > 0 && canonW.count() <= collectGate)
+    if (canonW.count() <= Gates.edges)
       return louvainRefineLocal(nodes, canonW, rounds, levels)
     val (mapping, layer) =
-      louvainOnLayer(nodes, canonW, rounds, levels, keepLayer = true,
-        collectGate = 0L)
+      louvainOnLayer(nodes, canonW, rounds, levels, keepLayer = true)
     // re-root before composing into the CC loop (the compounded-stats
     // guard) and materialize: the refine plan reads the labels four
     // times (two intra sides + the audit join pair)
@@ -2608,8 +2555,7 @@ object Algorithms {
     * partial-aggregate OOM shape). */
   def walkCounts(nodes: DataFrame, edges: DataFrame,
                  rounds: Int = EigenWalkRounds,
-                 nSymHint: Long = -1L,
-                 collectGate: Long = StarCollectGateEdges): DataFrame = {
+                 nSymHint: Long = -1L): DataFrame = {
     // input shape = [[coreness]]: one explode pass for the symmetric
     // view (not a self-union — two scans of a big pinned cache), laid
     // out by [[bigSymCheckpoint]] so the 2|E|-row frame is serialized
@@ -2623,13 +2569,13 @@ object Algorithms {
       .select(col("e.u").as("u"), col("e.v").as("v"))
     val nSym = if (nSymHint >= 0) nSymHint else symPlan.count()
     // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[StarCollectGateEdges]] symmetric rows the whole power
+    // below [[Gates.edges]] symmetric rows the whole power
     // iterate — per round one gather aggregate + one iterate
     // checkpoint — runs in one driver loop over the collected (u, v)
     // rows: EXACT int64 sums, so [[walkCountsLocal]] is identical by
     // construction (AlgorithmsSpec pins local == loop); off-edge nodes
     // emit 0 after round 1 (no in-edges), re-attached via coalesce.
-    if (nSym <= collectGate) return walkCountsLocal(symPlan, nodes, rounds)
+    if (nSym <= Gates.edges) return walkCountsLocal(symPlan, nodes, rounds)
     val (sess, sym) = bigSymCheckpoint(symPlan, nSym, "v")
     val (ids, nV) = checkpointCounted((if (sess ne nodes.sparkSession)
         rebase(sess, nodes.select(col("id")))
@@ -2687,8 +2633,7 @@ object Algorithms {
         "id", "lw"))(col("id"), coalesce(col("lw"), lit(offVal)).as("walks"))
   }
 
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-               collectGate: Long = StarCollectGateEdges): DataFrame = {
+  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     // teleport constant derived in decimal: (1 - 0.85) in binary doubles
     // is 1 ulp away from the literal 0.15 a SQL oracle parses, which
     // would skew every pre-round iterate by ~1e-17 and make the 12-dp
@@ -2707,7 +2652,7 @@ object Algorithms {
       .localCheckpoint(true) // (id, odeg|null) — carried through every iterate
     val n = ids.count().toDouble
     // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[StarCollectGateEdges]] edges the whole damped iteration
+    // below [[Gates.edges]] edges the whole damped iteration
     // runs in one driver loop over the collected (src, dst) rows —
     // [[pageRankLocal]] replays the recurrence op for op under the
     // SAME 12-dp per-iterate quantization contract that already makes
@@ -2716,7 +2661,7 @@ object Algorithms {
     // shared rank trajectory, so the driver never holds |V| rows: the
     // local state is edge-incident nodes only, plus one scalar. The
     // gate probe is the e.count() the broadcast gate needed anyway.
-    if (e.count() <= collectGate)
+    if (e.count() <= Gates.edges)
       return pageRankLocal(e, ids, n, iters, damping, reset, isPpr = false)
     // the rank iterate and the per-iteration contrib table are |V|-row
     // frames — broadcast into the edge-scale join below the shared
@@ -2769,8 +2714,7 @@ object Algorithms {
     * vs [[pageRank]]. */
   def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
                            seeds: DataFrame, iters: Int = 10,
-                           damping: Double = 0.85,
-                           collectGate: Long = StarCollectGateEdges): DataFrame = {
+                           damping: Double = 0.85): DataFrame = {
     val reset = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint(true)
@@ -2786,7 +2730,7 @@ object Algorithms {
     require(nS > 0, "personalized PageRank needs at least one seed")
     val nV = ids.count()
     // gated driver twin — see [[pageRank]]'s gate note / [[pageRankLocal]]
-    if (e.count() <= collectGate)
+    if (e.count() <= Gates.edges)
       return pageRankLocal(e, ids, nV.toDouble, iters, damping, reset,
         isPpr = true, nS = nS)
     // same iterate-broadcast gate as [[pageRank]], edge gate included
@@ -2922,12 +2866,11 @@ object Algorithms {
     * first action on (or checkpoint) the result before building the
     * next kernel's state — details at the loop's release comment. */
   def hopDistances(seeds: DataFrame, edges: DataFrame,
-                   maxRounds: Int,
-                   maxCells: Long = AdjBroadcastMaxCells): DataFrame = {
+                   maxRounds: Int): DataFrame = {
     // the edge materialization's internal count doubles as the image
     // gate probe (cells = directed edge rows)
     val (e, cells) = checkpointCounted(edges.select(col("src"), col("dst")))
-    if (cells <= maxCells) {
+    if (cells <= Gates.cells) {
       val out = hopDistancesImg(seeds, e, maxRounds)
       releaseIterate(e)
       return out
@@ -3048,8 +2991,7 @@ object Algorithms {
     * budget alignment, not convergence, is what makes parity
     * unconditional. */
   def shortestPaths(nodes: DataFrame, edges: DataFrame, seedIds: DataFrame,
-                    maxIter: Int = MaxRounds, relaxPerRound: Int = RelaxPerRound,
-                    collectGate: Long = StarCollectGateEdges): DataFrame = {
+                    maxIter: Int = MaxRounds, relaxPerRound: Int = RelaxPerRound): DataFrame = {
     val spark = nodes.sparkSession
     // materialized once (so the possibly-expensive upstream never re-runs),
     // then shuffled onto the relaxation join key at the loop width —
@@ -3072,7 +3014,7 @@ object Algorithms {
     // no-ops). AlgorithmsSpec pins local == loop on a random weighted
     // digraph. Above the gate the frontier loop stands — the wavefront
     // shape is what scales on a cluster.
-    if (nE <= collectGate) {
+    if (nE <= Gates.edges) {
       import spark.implicits._
       val seedArr = seedIds.select(col("id").cast("long")).as[Long].collect()
       // dictionary over endpoints ∪ seeds (a seed off the edge list

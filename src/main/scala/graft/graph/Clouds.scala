@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Gates
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -325,20 +326,19 @@ object Clouds {
     * come from co-membership in some neighbour's adjacency list, never
     * an all-pairs product; integer intersection/degree counts make the
     * division bit-exact cross-engine. Below the
-    * [[Algorithms.AdjBroadcastMaxCells]] gate the candidates never even
+    * [[Gates.cells]] gate the candidates never even
     * reach a shuffle: [[Algorithms.jaccardPairsImg]] scores and filters
     * them inside one narrow map over the broadcast CSR image; above it
     * the wedge self-join stands (and [[neighborJaccardCapped]] is the
     * hub-safe variant). `g_neighbor_jaccard`. */
   def neighborJaccard(spark: SparkSession, dir: String,
-                      minSim: Double = 0.3,
-                      maxCells: Long = Algorithms.AdjBroadcastMaxCells): DataFrame = {
+                      minSim: Double = 0.3): DataFrame = {
     val g = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
     val nbrs = g.edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint(true) // referenced by every branch below
     val cells = nbrs.count() // = 2|E|
-    if (cells <= maxCells) {
+    if (cells <= Gates.cells) {
       // image path (the [[squareCount]] idiom): co-neighbour counts,
       // degrees, the τ filter and the round-6 all evaluate inside ONE
       // narrow map over the broadcast CSR adjacency — the wedge
@@ -442,15 +442,14 @@ object Clouds {
 
   def neighborJaccardCapped(spark: SparkSession, dir: String,
                             minSim: Double = 0.3,
-                            cap: Int = JaccardHubCap,
-                            maxCells: Long = Algorithms.AdjBroadcastMaxCells): DataFrame = {
+                            cap: Int = JaccardHubCap): DataFrame = {
     val g = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
     val nbrs = g.edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint(true) // adjacency build + bucket sampling
     val cand = cappedCandidates(nbrs, cap)
     val cells = nbrs.count() // = 2|E|, a cached-scan count
-    if (cells <= maxCells) {
+    if (cells <= Gates.cells) {
       // image-gated rescore (the [[neighborJaccard]]/[[trussSupport]]
       // precedent): the array-join rescore below copies both full
       // adjacency arrays into EVERY candidate row — two keyed
@@ -524,15 +523,14 @@ object Clouds {
     * preferential-attachment product deg·deg. Both scores are
     * INTEGERS, so cross-engine parity is unconditional. `g_link_pred`. */
   def linkPrediction(spark: SparkSession, dir: String, minCommon: Long = 3L,
-                     cap: Int = JaccardHubCap,
-                     maxCells: Long = Algorithms.AdjBroadcastMaxCells): DataFrame = {
+                     cap: Int = JaccardHubCap): DataFrame = {
     val g = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
     val nbrs = g.edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint(true) // candidate sampling + adjacency pack
     val existing = g.edges.select(col("src").as("a"), col("dst").as("b"))
     val cells = nbrs.count() // = 2|E|, a cached-scan count
-    val out = (if (cells <= maxCells) {
+    val out = (if (cells <= Gates.cells) {
       // image-gated rescore — the [[neighborJaccardCapped]] gate, same
       // bit-identity argument: the candidate set (hash-ranked heap
       // sample minus existing edges) is untouched; only the scoring
@@ -792,7 +790,7 @@ object Clouds {
     * and every square is counted by exactly TWO diagonal pairs, so
     * n_squares = Σ C(n,2) / 2 — all integer arithmetic, replayed
     * unconditionally by the oracle. Two plans, chosen by the
-    * [[Algorithms.AdjBroadcastMaxCells]] gate (the [[trussSupport]]
+    * [[Gates.cells]] gate (the [[trussSupport]]
     * idiom): below it, [[Algorithms.squareCensusImg]] broadcasts the
     * flat CSR adjacency image once and folds the census in ONE narrow
     * zero-exchange map (Σdeg² CELL work, never Σdeg² shuffled rows);
@@ -804,7 +802,7 @@ object Clouds {
     val canon = canonQueryEdges(spark, dir).localCheckpoint(true)
     val cells = 2L * canon.count()
     val out =
-      if (cells <= Algorithms.AdjBroadcastMaxCells) {
+      if (cells <= Gates.cells) {
         // the trussSupport idiom: broadcast the CSR image once, run the
         // census as one narrow map, materialize the 1-row result, then
         // free the image + edge checkpoint immediately
@@ -1348,13 +1346,12 @@ object Clouds {
 
   /** The seed-sampled Brandes kernel over explicit (nodes, symmetrized
     * edges) — factored out so specs can drive fixture graphs. */
-  private[graft] def betweennessKernel(nodes: DataFrame, symEdges: DataFrame,
-      maxCells: Long = Algorithms.AdjBroadcastMaxCells): DataFrame = {
+  private[graft] def betweennessKernel(nodes: DataFrame, symEdges: DataFrame): DataFrame = {
     val dec = DecimalType(38, 6)
     val e = symEdges.select(col("src").as("u"), col("dst").as("v"))
       .localCheckpoint(true)
     val cells = e.count() // cached scan; the image gate probe
-    if (cells <= maxCells) {
+    if (cells <= Gates.cells) {
       // IMAGE-GATED Brandes (the [[Algorithms.squareCensusImg]] idiom):
       // forward sigma-BFS plus the backward layer accumulation ran
       // ~3 scheduler jobs per BFS layer plus one eager checkpoint per
@@ -1654,14 +1651,12 @@ object Clouds {
     * ([[cappedAdjacency]]) so hub degree never multiplies the step
     * join; the DuckDB oracle replays the cap. `g_random_walk`. */
   def randomWalks(spark: SparkSession, dir: String, len: Int = WalkLen,
-                  cap: Int = WalkAdjCap, sampleMod: Long = 1L,
-                  maxCells: Long = Algorithms.AdjBroadcastMaxCells): DataFrame = {
+                  cap: Int = WalkAdjCap, sampleMod: Long = 1L): DataFrame = {
     val g = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
     // materialized ONCE (the mst caller-owned idiom): the similarity
     // self-join would otherwise execute once per symmetrization branch
     val e = g.edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val out = randomWalksOnEdges(spark, g.nodes, e, len, cap, sampleMod,
-      maxCells)
+    val out = randomWalksOnEdges(spark, g.nodes, e, len, cap, sampleMod)
     // everything derived from the edge checkpoint is eagerly
     // materialized inside the kernel (capped adjacency, walk table) —
     // release it rather than pinning self-join output for the session
@@ -1675,9 +1670,7 @@ object Clouds {
     * before; the audit's uncapped twin now scans the same blocks). */
   private[graft] def randomWalksOnEdges(spark: SparkSession,
                   nodesIn: DataFrame, edgesIn: DataFrame, len: Int,
-                  cap: Int, sampleMod: Long = 1L,
-                  maxCells: Long = Algorithms.AdjBroadcastMaxCells,
-                  collectGate: Long = Algorithms.StarCollectGateEdges): DataFrame = {
+                  cap: Int, sampleMod: Long = 1L): DataFrame = {
     val baseAdj = edgesIn.select(col("src").as("u"), col("dst").as("v"))
       .union(edgesIn.select(col("dst").as("u"), col("src").as("v")))
     // sampleMod > 1 restricts walk STARTS to a deterministic hash
@@ -1688,20 +1681,19 @@ object Clouds {
       else nodesIn.filter(pmod(graft.Hashing.hash60(
         concat_ws("|", col("id"), lit("wsample"))), lit(sampleMod)) === 0)
     // BOUNDED-COLLECT image build (the boruvkaMstLocal class of gate):
-    // below [[Algorithms.StarCollectGateEdges]] symmetric rows the
+    // below [[Gates.edges]] symmetric rows the
     // capped adjacency image is built ON THE DRIVER from one collect
     // of the caller's edge checkpoint ([[localCappedImage]] — same
     // (hash60 asc, v asc) cap, same sorted slices, same packed CSR),
     // replacing the heap shuffle + checkpoint + groupBy/collect_list +
     // two-hop image collect. Above the gate the distributed image
-    // build (or, past [[Algorithms.AdjBroadcastMaxCells]], the step
-    // loop) stands. The gate count is one cached scan of the caller-
-    // materialized edge frame.
-    // the caller's maxCells contract binds BOTH image builds (specs
-    // force the step loop with maxCells = -1): 2|E| bounds the capped
-    // cell count from above, so below it the image is in-gate for sure
+    // build (or, past [[Gates.cells]], the step loop) stands. The
+    // gate count is one cached scan of the caller-materialized edge
+    // frame. [[Gates.cells]] binds BOTH image builds: 2|E| bounds the
+    // capped cell count from above, so below it the image is in-gate
+    // for sure
     val nE2 = 2 * edgesIn.count()
-    val localOk = nE2 <= collectGate && nE2 <= maxCells
+    val localOk = nE2 <= Gates.edges && nE2 <= Gates.cells
     var und: DataFrame = null
     val bcOpt: Option[org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage]] =
       if (localOk) {
@@ -1714,7 +1706,7 @@ object Clouds {
         und = (if (cap == Int.MaxValue) baseAdj
                else cappedAdjacency(baseAdj, cap))
           .localCheckpoint(true) // one hop join per step
-        if (und.count() <= maxCells) {
+        if (und.count() <= Gates.cells) {
           // IMAGE-GATED WALKS (the [[Algorithms.squareCensusImg]] idiom):
           // each deterministic step ran a hop join + the top-1 heap + an
           // eager checkpoint — len × (several scheduler jobs) — while the
@@ -1857,18 +1849,16 @@ object Clouds {
   private[graft] def node2vecOnEdges(spark: SparkSession, nodesIn: DataFrame,
                     edgesIn: DataFrame, len: Int = WalkLen,
                     cap: Int = WalkAdjCap, p: Double = Node2vecP,
-                    q: Double = Node2vecQ,
-                    maxCells: Long = Algorithms.AdjBroadcastMaxCells,
-                    collectGate: Long = Algorithms.StarCollectGateEdges): DataFrame = {
+                    q: Double = Node2vecQ): DataFrame = {
     val twoPow60 = math.pow(2.0, 60)
     // BOUNDED-COLLECT image build (see [[randomWalksOnEdges]]' gate):
     // below the collect gate BOTH images — the capped adjacency and
     // the canonical-membership probe — are built on the driver from
     // one collect of the caller's edge checkpoint, skipping the heap
     // shuffle, two checkpoints and two distributed image pipelines.
-    // maxCells binds both image builds — see [[randomWalksOnEdges]]
+    // [[Gates.cells]] binds both image builds — see [[randomWalksOnEdges]]
     val nE2 = 2 * edgesIn.count()
-    val localOk = nE2 <= collectGate && nE2 <= maxCells
+    val localOk = nE2 <= Gates.edges && nE2 <= Gates.cells
     var und: DataFrame = null
     var canon: DataFrame = null
     val imgs: Option[(org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage],
@@ -1895,7 +1885,7 @@ object Clouds {
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         val cells = und.count() // cached scans of the two checkpoints
         val canonCnt = canon.count()
-        if (cells <= maxCells && 2 * canonCnt <= maxCells) {
+        if (cells <= Gates.cells && 2 * canonCnt <= Gates.cells) {
           // IMAGE-GATED node2vec (see [[randomWalks]]' twin block): the
           // second-order step additionally needs the (prev, v) EDGE
           // MEMBERSHIP probe — with a second CSR image over the canonical

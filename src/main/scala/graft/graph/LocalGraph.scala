@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *     (the min-member contract of the CC kernels);
   *   - `src`/`dst` hold one int index per collected edge, in collect
   *     order. Ints are safe BY THE GATE: every caller collects at most
-  *     [[Algorithms.StarCollectGateEdges]] rows (symmetric rows for the
-  *     symmetric layers), so |ids| ≤ 2 · 4M + seeds < 2³¹;
+  *     [[graft.Gates.edges]] rows (symmetric rows for the symmetric
+  *     layers), so |ids| ≤ 2 · 4M + seeds < 2³¹;
   *   - membership with the caller's node frame ([[restrict]]) is one
   *     semi-join of that frame against the (≤ 2|E|-row) dictionary, so
   *     the driver never collects |V| node rows;

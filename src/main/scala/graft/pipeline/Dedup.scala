@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Gates
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for an LLM training-data pipeline, over the
@@ -321,20 +322,11 @@ object Dedup {
     ngramJaccardOn(dropHighDfGrams(Docs.gramTable(spark, dir)), minSim)
       .orderBy(col("a"), col("b"))
 
-  /** Bounded-collect gate for [[ngramJaccardOn]]'s driver-local pair
-    * kernel, in GRAM BYTES (the collected state is the capped
-    * (doc_id, gram) table): below it the whole sizes-aggregate +
-    * gram-key self-join + pair-count + two size joins stack is one
-    * driver pass; above it the distributed self-join stands (the
-    * 100 TB regime, where the capped join is the published shape). */
-  val PairCollectGateBytes = 256L * 1024 * 1024
-
   /** [[ngramJaccard]] over a CALLER-built df-capped gram table,
     * unordered — the shared-substrate seam ([[minhashSignaturesOn]]). */
-  private[graft] def ngramJaccardOn(grams: DataFrame, minSim: Double,
-                                    collectGate: Long = PairCollectGateBytes): DataFrame = {
+  private[graft] def ngramJaccardOn(grams: DataFrame, minSim: Double): DataFrame = {
     // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[PairCollectGateBytes]] gram bytes the pair kernel runs
+    // below [[Gates.bytes]] gram bytes the pair kernel runs
     // on the driver over the collected (doc_id, gram) rows —
     // [[ngramJaccardLocal]] replays the OCCURRENCE-count semantics op
     // for op (inter = Σ_g cnt_a·cnt_b, sizes = gram-row counts, the
@@ -344,7 +336,7 @@ object Dedup {
     // over the same gram plan the self-join would scan.
     val bytes = grams.agg(coalesce(sum(length(col("gram"))), lit(0L)))
       .collect()(0).getLong(0)
-    if (bytes <= collectGate) {
+    if (bytes <= Gates.bytes) {
       val rows = grams.select(col("doc_id").cast("long"), col("gram"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
       return ngramJaccardLocal(grams.sparkSession, rows, minSim)

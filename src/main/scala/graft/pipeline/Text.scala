@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Gates
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for an LLM training-data pipeline, over the
@@ -431,16 +432,7 @@ object Text {
     * Rounds stop early if no pair remains. The Lloyd-unroll pattern
     * makes the DuckDB oracle replay the identical rounds as a CTE
     * chain. `t_bpe_train`. */
-  /** Bounded-collect gate for [[bpeTrain]]'s driver-local rounds, in
-    * corpus BYTES (the collected state is the wrapped strings
-    * themselves): below it the driver holds one corpus copy — trivial
-    * against any production driver heap; above it the distributed
-    * round loop stands (the 100 TB regime, where each round is one
-    * scan-bound aggregate + one narrow replace pass). */
-  val BpeCollectGateBytes = 256L * 1024 * 1024
-
-  def bpeTrain(spark: SparkSession, dir: String, rounds: Int = MergeCount,
-               collectGate: Long = BpeCollectGateBytes): DataFrame = {
+  def bpeTrain(spark: SparkSession, dir: String, rounds: Int = MergeCount): DataFrame = {
     import spark.implicits._
     // LAZY iterate checkpoints: each round's argmax collect is a full
     // pass over the current corpus string anyway, so it doubles as the
@@ -459,7 +451,7 @@ object Text {
         lit(">")).as("s"))
       .localCheckpoint(false)
     // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[BpeCollectGateBytes]] the whole merge-round stack —
+    // below [[Gates.bytes]] the whole merge-round stack —
     // 2 corpus-pass actions per round — runs in one driver loop over
     // the collected wrapped strings ([[bpeTrainLocal]] replays the
     // split / pair-count / (freq desc, l, r) argmax / left-to-right
@@ -469,7 +461,7 @@ object Text {
     // — the same full pass round 1's argmax would have paid.
     val bytes = corpus.agg(coalesce(sum(length(col("s"))), lit(0L)))
       .collect()(0).getLong(0)
-    if (bytes <= collectGate) {
+    if (bytes <= Gates.bytes) {
       val rows = corpus.collect().map(_.getString(0))
       graft.graph.Algorithms.releaseIterate(corpus)
       return bpeTrainLocal(rows, rounds)

@@ -190,19 +190,20 @@ class AlgorithmsSpec extends SparkSpec {
     }
     for (raw <- Seq(loopFree, withLoops)) {
       val edges = raw.toDF("src", "dst")
+      def loop[T](body: => T): T = Gates.within(edges = -1L)(body)
       close(dmap(Algorithms.pageRank(okNodes, edges)),
-        dmap(Algorithms.pageRank(okNodes, edges, collectGate = -1L)))
+        loop(dmap(Algorithms.pageRank(okNodes, edges))))
       close(dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds)),
-        dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds, collectGate = -1L)))
+        loop(dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds))))
       assert(lmap(Algorithms.labelPropagation(okNodes, edges)) ==
-        lmap(Algorithms.labelPropagation(okNodes, edges, collectGate = -1L)))
+        loop(lmap(Algorithms.labelPropagation(okNodes, edges))))
       assert(lmap(Algorithms.walkCounts(okNodes, edges)) ==
-        lmap(Algorithms.walkCounts(okNodes, edges, collectGate = -1L)))
+        loop(lmap(Algorithms.walkCounts(okNodes, edges))))
       // and the superset-node case (40..43 back in as plain nodes)
       assert(lmap(Algorithms.walkCounts(nodes, edges)) ==
-        lmap(Algorithms.walkCounts(nodes, edges, collectGate = -1L)))
+        loop(lmap(Algorithms.walkCounts(nodes, edges))))
       close(dmap(Algorithms.pageRank(nodes, edges)),
-        dmap(Algorithms.pageRank(nodes, edges, collectGate = -1L)))
+        loop(dmap(Algorithms.pageRank(nodes, edges))))
     }
   }
 
@@ -242,8 +243,8 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("star CC: gated driver union-find equals the distributed loop") {
-    // the collect gate (StarCollectGateEdges) routes sub-gate inputs
-    // through the driver-side min-label union-find; collectGate = 0
+    // the collect gate (Gates.edges) routes sub-gate inputs through
+    // the driver-side min-label union-find; Gates.within(edges = 0)
     // forces the distributed alternation on the SAME input — labels
     // must be identical on a random multi-component graph with
     // duplicate/reversed/self-loop edges (the init's canonicalization)
@@ -256,17 +257,19 @@ class AlgorithmsSpec extends SparkSpec {
     val edges = raw.toDF("src", "dst")
     val viaDriver = Algorithms.connectedComponentsStar(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLoop = Algorithms.connectedComponentsStar(nodes, edges,
-        collectGate = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaLoop = Gates.within(edges = 0L) {
+      Algorithms.connectedComponentsStar(nodes, edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(viaDriver == viaLoop)
     assert((121L to 130L).forall(viaDriver(_) >= 121L), "isolated keep selves")
     // and the hash-to-min kernel's twin gate on the same input
     val htmDriver = Algorithms.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val htmLoop = Algorithms.connectedComponents(nodes, edges, maxIter = 256,
-        collectGate = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val htmLoop = Gates.within(edges = 0L) {
+      Algorithms.connectedComponents(nodes, edges, maxIter = 256)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(htmDriver == htmLoop)
     assert(htmDriver == viaDriver, "all four paths share the min-member contract")
   }
@@ -283,8 +286,9 @@ class AlgorithmsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val viaImg = rows(Algorithms.hopDistances(seeds, edges, maxRounds = 2))
-    val viaLoop = rows(Algorithms.hopDistances(seeds, edges, maxRounds = 2,
-      maxCells = 0L))
+    val viaLoop = Gates.within(cells = 0L) {
+      rows(Algorithms.hopDistances(seeds, edges, maxRounds = 2))
+    }
     assert(viaImg == viaLoop)
     assert(viaImg.contains((200L, 200L, 0L)), "seed off the graph keeps d=0")
     assert(viaImg.forall(_._3 <= 2), "budget respected")
@@ -311,8 +315,9 @@ class AlgorithmsSpec extends SparkSpec {
     for (raw <- Seq(loopFree, withLoops)) {
       val edges = raw.toDF("src", "dst", "weight")
       val viaLocal = rows(Algorithms.shortestPaths(nodes, edges, seeds))
-      val viaLoop = rows(Algorithms.shortestPaths(nodes, edges, seeds,
-        collectGate = 0L))
+      val viaLoop = Gates.within(edges = 0L) {
+        rows(Algorithms.shortestPaths(nodes, edges, seeds))
+      }
       assert(viaLocal == viaLoop)
       assert(viaLocal.contains((95L, java.lang.Double.valueOf(0.0))),
         "edge-less seed keeps 0.0")
@@ -334,13 +339,16 @@ class AlgorithmsSpec extends SparkSpec {
     val edges = raw.toDF("u", "v", "w")
     val nodes = (0L to 90L).toDF("id") // 80..90 isolated
     val (fLoc, cLoc) = Algorithms.boruvkaMst(nodes, edges)
-    val (fDist, cDist) = Algorithms.boruvkaMst(nodes, edges, collectGate = 0L)
     def fset(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def cmap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fset(fLoc) == fset(fDist))
-    assert(cmap(cLoc) == cmap(cDist))
+    val (fDist, cDist) = Gates.within(edges = 0L) {
+      val (f, c) = Algorithms.boruvkaMst(nodes, edges)
+      (fset(f), cmap(c))
+    }
+    assert(fset(fLoc) == fDist)
+    assert(cmap(cLoc) == cDist)
     assert((80L to 90L).forall(cmap(cLoc)(_) >= 80L), "isolated keep selves")
   }
 

@@ -99,8 +99,10 @@ class BetweennessSpec extends SparkSpec {
     val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
     val viaImg = Clouds.betweennessKernel(n, sym).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val viaLoop = Clouds.betweennessKernel(n, sym, maxCells = -1L).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val viaLoop = Gates.within(cells = -1L) {
+      Clouds.betweennessKernel(n, sym).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
     assert(viaImg == viaLoop)
   }
 

@@ -63,7 +63,7 @@ class CorenessSpec extends SparkSpec {
   }
 
   test("coreness: image-gated iteration equals the distributed loop") {
-    // maxCells = 0 forces the distributed frontier loop on the SAME
+    // Gates.within(cells = 0) forces the distributed frontier loop on the SAME
     // input — values must be identical on a random multi-component
     // graph with duplicate/reversed edges and isolated nodes
     val rng = new scala.util.Random(29)
@@ -75,8 +75,10 @@ class CorenessSpec extends SparkSpec {
     val edges = raw.toDF("src", "dst")
     val viaImg = Algorithms.coreness(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLoop = Algorithms.coreness(nodes, edges, maxCells = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaLoop = Gates.within(cells = 0L) {
+      Algorithms.coreness(nodes, edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(viaImg == viaLoop)
     assert((100L to 110L).forall(viaImg(_) == 0L), "isolated at shell 0")
     // and both agree with the PURE synchronous h-index recurrence at the

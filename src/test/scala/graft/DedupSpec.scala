@@ -72,11 +72,12 @@ class DedupSpec extends SparkSpec {
     }
     val d2 = TestSession.docsFixture(docs)
     // the real caller shape: the df-capped gram table, both paths
-    def pset(gate: Long) = rowsOf(
-      pipeline.Dedup.ngramJaccardOn(
-        pipeline.Dedup.dropHighDfGrams(pipeline.Docs.gramTable(spark, d2)),
-        minSim = 0.3, collectGate = gate))
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def pset(gate: Long) = Gates.within(bytes = gate) {
+      rowsOf(pipeline.Dedup.ngramJaccardOn(
+          pipeline.Dedup.dropHighDfGrams(pipeline.Docs.gramTable(spark, d2)),
+          minSim = 0.3))
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
     val loc = pset(Long.MaxValue)
     val dist = pset(-1L)
     assert(loc == dist, s"gated local pairs must equal distributed:\n$loc\n$dist")

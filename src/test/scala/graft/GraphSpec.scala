@@ -259,21 +259,25 @@ class GraphSpec extends SparkSpec {
       rowsOf(df).map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     val exact = pairs(Clouds.neighborJaccard(spark, SF))
     assert(exact.nonEmpty)
-    // default cap: no bucket exceeds 32 at this SF, so the sample is the
-    // whole bucket and the capped operator reproduces the exact result
-    val capped = pairs(Clouds.neighborJaccardCapped(spark, SF))
-    assert(capped == exact, "cap=32 must not bite at sf0.001")
-    // cap=2 bites: exact rescore keeps precision at 1 (every reported
-    // pair is an exact pair with the identical jaccard); recall drops
-    // but must stay useful — the hub trade the Scaladoc documents
-    val tiny = pairs(Clouds.neighborJaccardCapped(spark, SF, cap = 2))
-    tiny.foreach { case (p, j) =>
-      assert(exact.contains(p) && exact(p) == j,
-        s"capped pair $p must be an exact pair with identical jaccard")
+    // both rescores: the image path (default gate) and the array-join
+    // path (cells = -1)
+    for (cells <- Seq(Gates.cells, -1L)) Gates.within(cells = cells) {
+      // default cap: no bucket exceeds 32 at this SF, so the sample is the
+      // whole bucket and the capped operator reproduces the exact result
+      val capped = pairs(Clouds.neighborJaccardCapped(spark, SF))
+      assert(capped == exact, s"cap=32 must not bite at sf0.001 (cells gate $cells)")
+      // cap=2 bites: exact rescore keeps precision at 1 (every reported
+      // pair is an exact pair with the identical jaccard); recall drops
+      // but must stay useful — the hub trade the Scaladoc documents
+      val tiny = pairs(Clouds.neighborJaccardCapped(spark, SF, cap = 2))
+      tiny.foreach { case (p, j) =>
+        assert(exact.contains(p) && exact(p) == j,
+          s"capped pair $p must be an exact pair with identical jaccard (cells gate $cells)")
+      }
+      val recall = tiny.size.toDouble / exact.size
+      assert(recall >= 0.2 && recall <= 1.0,
+        s"cap=2 recall $recall out of the useful range (${tiny.size}/${exact.size})")
     }
-    val recall = tiny.size.toDouble / exact.size
-    assert(recall >= 0.2 && recall <= 1.0,
-      s"cap=2 recall $recall out of the useful range (${tiny.size}/${exact.size})")
   }
 
   test("link prediction scores only non-adjacent pairs with exact integer evidence") {
@@ -285,17 +289,22 @@ class GraphSpec extends SparkSpec {
       .map(e => (e.getLong(0), e.getLong(1))).toSet
     val nbrs = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val preds = rowsOf(Clouds.linkPrediction(spark, sf))
-    assert(preds.nonEmpty, "the thresholded graph has missing-edge candidates")
-    preds.foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
-      assert(a < b, "canonical pair order")
-      assert(!edges((a, b)), "predicted pairs are NOT existing edges")
-      val cn = nbrs.getOrElse(a, Set.empty).intersect(nbrs.getOrElse(b, Set.empty)).size
-      assert(r.getLong(2) == cn.toLong, s"common-neighbour count exact for ($a,$b)")
-      assert(r.getLong(3) ==
-        nbrs(a).size.toLong * nbrs(b).size.toLong, "pref attachment = deg product")
-      assert(r.getLong(2) >= 3L, "min-common filter applied")
+    // both rescores: the image path (default gate) and the array-join
+    // path (cells = -1)
+    for (cells <- Seq(Gates.cells, -1L)) {
+      val preds = Gates.within(cells = cells)(rowsOf(Clouds.linkPrediction(spark, sf)))
+      assert(preds.nonEmpty, "the thresholded graph has missing-edge candidates")
+      preds.foreach { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        assert(a < b, "canonical pair order")
+        assert(!edges((a, b)), "predicted pairs are NOT existing edges")
+        val cn = nbrs.getOrElse(a, Set.empty).intersect(nbrs.getOrElse(b, Set.empty)).size
+        assert(r.getLong(2) == cn.toLong,
+          s"common-neighbour count exact for ($a,$b) (cells gate $cells)")
+        assert(r.getLong(3) ==
+          nbrs(a).size.toLong * nbrs(b).size.toLong, "pref attachment = deg product")
+        assert(r.getLong(2) >= 3L, "min-common filter applied")
+      }
     }
   }
 
@@ -543,23 +552,25 @@ class GraphSpec extends SparkSpec {
   }
 
   test("walks: image-gated paths are bit-identical to the distributed step loops") {
-    // maxCells = -1 forces the per-step hop-join loop on the same
-    // input; collectGate = -1 forces the DISTRIBUTED image build (the
-    // default takes the driver-built image) — all three variants must
-    // reproduce the identical row set
+    // Gates.within(cells = -1) forces the per-step hop-join loop on
+    // the same input; edges = -1 forces the DISTRIBUTED image build
+    // (the default takes the driver-built image) — all three variants
+    // must reproduce the identical row set
     val g = TestGraph.graph(spark, SF)
       .filterEdges(col("distance") <= TestGraph.QueryThreshold)
     val e = g.edges.select(col("src"), col("dst"))
-    def rw(mc: Long, cg: Long) = rowsOf(Clouds.randomWalksOnEdges(spark,
-        g.nodes, e.localCheckpoint(true), Clouds.WalkLen, Clouds.WalkAdjCap,
-        maxCells = mc, collectGate = cg))
-      .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
+    def rw(mc: Long, cg: Long) = Gates.within(cells = mc, edges = cg) {
+      rowsOf(Clouds.randomWalksOnEdges(spark,
+          g.nodes, e.localCheckpoint(true), Clouds.WalkLen, Clouds.WalkAdjCap))
+        .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
+    }
     val rwLocalImg = rw(Long.MaxValue, Long.MaxValue)
     assert(rwLocalImg == rw(Long.MaxValue, -1L), "driver-built == distributed image")
     assert(rwLocalImg == rw(-1L, -1L), "image == step loop")
-    def n2v(mc: Long, cg: Long) = rowsOf(Clouds.node2vecOnEdges(spark, g.nodes,
-        e.localCheckpoint(true), maxCells = mc, collectGate = cg))
-      .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
+    def n2v(mc: Long, cg: Long) = Gates.within(cells = mc, edges = cg) {
+      rowsOf(Clouds.node2vecOnEdges(spark, g.nodes, e.localCheckpoint(true)))
+        .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
+    }
     val n2vLocalImg = n2v(Long.MaxValue, Long.MaxValue)
     assert(n2vLocalImg == n2v(Long.MaxValue, -1L), "driver-built == distributed image")
     assert(n2vLocalImg == n2v(-1L, -1L), "image == step loop")

@@ -23,11 +23,13 @@ class JitAuditSpec extends SparkSpec {
     val l = JitAudit.attachIf(enabled = true, s).get
     val nodes = s.range(500).select(col("id")).localCheckpoint(true)
     val edges = ScaleBench.syntheticEdges(s, 500, 25).localCheckpoint(true)
-    // collectGate = -1: this spec audits the DISTRIBUTED loop bodies
-    // (the surface the static sweep can't reach); the gated driver
-    // twins would short-circuit them at this fixture size
-    graph.Algorithms.connectedComponents(nodes, edges, collectGate = -1L).count()
-    graph.Algorithms.pageRank(nodes, edges, collectGate = -1L).count()
+    // Gates.within(edges = -1): this spec audits the DISTRIBUTED loop
+    // bodies (the surface the static sweep can't reach); the gated
+    // driver twins would short-circuit them at this fixture size
+    Gates.within(edges = -1L) {
+      graph.Algorithms.connectedComponents(nodes, edges).count()
+      graph.Algorithms.pageRank(nodes, edges).count()
+    }
     val seen = settle(l)
     // each CC/pagerank round materializes at least one localCheckpoint
     // action — the audit must have inspected well more plans than the

@@ -111,7 +111,7 @@ class LouvainSpec extends SparkSpec {
   }
 
   test("gated local louvain equals the distributed loop") {
-    // collectGate = 0 forces the distributed level/round stack on the
+    // Gates.within(edges = 0) forces the distributed level/round stack on the
     // SAME input — labels must be identical on a random multigraph
     // (duplicate edges exercise the multiplicity aggregate) with
     // isolated nodes, for both the unweighted and the weighted entry
@@ -124,16 +124,20 @@ class LouvainSpec extends SparkSpec {
     val edges = raw.toDF("src", "dst")
     val viaLocal = Algorithms.louvain(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLoop = Algorithms.louvain(nodes, edges, collectGate = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaLoop = Gates.within(edges = 0L) {
+      Algorithms.louvain(nodes, edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(viaLocal == viaLoop)
     assert((60L to 70L).forall(viaLocal(_) >= 60L), "isolated keep selves")
     val wedges = raw.map { case (a, b) => (a, b, (rng.nextInt(5) + 1).toLong) }
       .toDF("src", "dst", "w")
     val wLocal = Algorithms.louvainWeighted(nodes, wedges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wLoop = Algorithms.louvainWeighted(nodes, wedges, collectGate = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val wLoop = Gates.within(edges = 0L) {
+      Algorithms.louvainWeighted(nodes, wedges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(wLocal == wLoop)
   }
 
@@ -149,8 +153,7 @@ class LouvainSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4))).toSet
     val viaLocal = rows(Algorithms.louvainRefine(nodes, edges))
-    val viaLoop = rows(Algorithms.louvainRefine(nodes, edges,
-      collectGate = 0L))
+    val viaLoop = Gates.within(edges = 0L)(rows(Algorithms.louvainRefine(nodes, edges)))
     assert(viaLocal == viaLoop)
     assert(viaLocal.exists(_._1 == 55L), "off-edge node covered")
     viaLocal.filter(t => t._1 >= 50L).foreach { t =>

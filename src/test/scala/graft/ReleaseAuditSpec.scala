@@ -81,8 +81,10 @@ class ReleaseAuditSpec extends SparkSpec {
   test("the jaccard family releases its 2|E| adjacency input on every branch") {
     assertReleased("g_neighbor_jaccard (image branch)")(
       Clouds.neighborJaccard(spark, SF))
-    assertReleased("g_neighbor_jaccard (join branch)")(
-      Clouds.neighborJaccard(spark, SF, maxCells = 0L))
+    Gates.within(cells = 0L) {
+      assertReleased("g_neighbor_jaccard (join branch)")(
+        Clouds.neighborJaccard(spark, SF))
+    }
     assertReleased("g_neighbor_jaccard_capped")(
       Clouds.neighborJaccardCapped(spark, SF))
     assertReleased("g_link_pred")(Clouds.linkPrediction(spark, SF))

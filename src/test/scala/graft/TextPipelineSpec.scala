@@ -279,7 +279,7 @@ class TextPipelineSpec extends SparkSpec {
     def tbl(df: org.apache.spark.sql.DataFrame) = rowsOf(df)
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     val loc = tbl(Text.bpeTrain(spark, d, rounds = 5))
-    val dist = tbl(Text.bpeTrain(spark, d, rounds = 5, collectGate = -1L))
+    val dist = Gates.within(bytes = -1L)(tbl(Text.bpeTrain(spark, d, rounds = 5)))
     assert(loc == dist, s"gated local merges must equal distributed:\n$loc\n$dist")
   }
 

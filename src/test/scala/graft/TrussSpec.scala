@@ -70,8 +70,8 @@ class TrussSpec extends SparkSpec {
   }
 
   test("kTruss: gated local peel equals the distributed round loop") {
-    // the collect gate (StarCollectGateEdges) routes sub-gate inputs
-    // through the driver-side peel; collectGate = 0 forces the
+    // the collect gate (Gates.edges) routes sub-gate inputs through
+    // the driver-side peel; Gates.within(edges = 0) forces the
     // distributed per-round image plans on the SAME input — the
     // (edge -> support) maps must be identical on a random graph with
     // planted cliques (peel survivors) and random noise (peeled tails)
@@ -84,8 +84,10 @@ class TrussSpec extends SparkSpec {
     for (k <- Seq(3, 4)) {
       val local = rowsOf(Algorithms.kTruss(edgesDf(all), k))
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val dist = rowsOf(Algorithms.kTruss(edgesDf(all), k, collectGate = 0L))
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val dist = Gates.within(edges = 0L) {
+        rowsOf(Algorithms.kTruss(edgesDf(all), k))
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      }
       assert(local == dist, s"k=$k")
       assert(local == bruteTruss(all.toSet, k).map { case (e, s) => e -> s.toLong },
         s"k=$k vs brute peel")

@@ -5,15 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Optional GraphX fast path for the iterative analytics.
-  *
-  * The DataFrame loops in [[Algorithms]] are the 100 TB path: they
-  * spill, shuffle only (id, label) pairs, and recover from executor
-  * loss via lineage. GraphX's Pregel runtime instead pins the graph in
-  * executor memory — on a graph that FITS in cluster memory it avoids
-  * the per-round shuffle entirely and wins wall-clock, which is why
-  * both are offered behind the same column contract (`id`/`src`/`dst`).
-  * Callers choose per workload; specs assert both paths agree.
+/** GraphX Pregel versions of the iterative analytics, kept in test
+  * scope as an independent reference for the DataFrame loops in
+  * [[Algorithms]]: same column contract (`id`/`src`/`dst`), a different
+  * runtime (the graph pinned in executor memory instead of per-round
+  * shuffles), and [[graft.GraphXFastPathSpec]] asserts both agree.
   */
 object GraphXFastPath {
 
