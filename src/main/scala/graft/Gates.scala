@@ -13,7 +13,7 @@ import scala.util.DynamicVariable
   *  - [[edges]]: 4M edge rows (symmetric rows for the sym-layer
   *    kernels). 4M pairs of longs is ~64 MB raw, a few hundred MB
   *    transient with collect boxing. The forest cuts and Borůvka merge
-  *    graphs fed to the star CC are ≤ |V|−1 edges, so at any tested
+  *    graphs fed to the CC kernel are ≤ |V|−1 edges, so at any tested
   *    scale they pass; at 10^10-node scale the distributed loops stand.
   *  - [[cells]]: 256M adjacency-array cells (2|E|, one per endpoint) in
   *    a broadcast CSR image: ≈ 2 GB as longs, the dense-synthetic

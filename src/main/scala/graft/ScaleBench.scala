@@ -200,35 +200,19 @@ object ScaleBench {
     }
     timed("threshold_sweep") {
       // the g_threshold_sweep composition: one Borůvka forest, then
-      // nested star-CC cuts contracted by the previous cut's components
+      // nested CC cuts contracted by the previous cut's components
       val (forest, fullComp) = Algorithms.boruvkaMst(nodes,
         edges.select(col("src").as("u"), col("dst").as("v"),
           col("distance").as("w")))
       var prev: DataFrame = null
-      var prevT = 0.0
+      var prevT = Double.NegativeInfinity
       // sub-threshold cuts at 25/50/75% of the edge-build threshold
       // (the synthetic distances all sit below QueryThreshold)
       val cuts = Seq(0.25, 0.5, 0.75)
           .map(_ * TestGraph.QueryThreshold).map { t =>
-        val cc =
-          if (prev == null)
-            Algorithms.connectedComponentsStar(nodes,
-              forest.filter(col("w") <= t)
-                .select(col("u").as("src"), col("v").as("dst")))
-          else {
-            val band = forest
-              .filter(col("w") > prevT && col("w") <= t)
-              .join(prev.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
-              .join(prev.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
-              .select(col("cu").as("src"), col("cv").as("dst"))
-              .filter(col("src") =!= col("dst"))
-            val superCc = Algorithms.connectedComponentsStar(
-              prev.select(col("comp").as("id")).distinct(), band)
-            prev.select(col("id"), col("comp").as("pcomp"))
-              .join(superCc.select(col("id").as("pcomp"), col("comp").as("ncomp")),
-                Seq("pcomp"))
-              .select(col("id"), col("ncomp").as("comp"))
-          }
+        val cc = Algorithms.nestedCut(nodes, prev,
+          forest.filter(col("w") > prevT && col("w") <= t)
+            .select(col("u").as("src"), col("v").as("dst")))
         prev = Algorithms.freshStats(cc).localCheckpoint(true)
         prevT = t
         prev.groupBy(col("comp")).agg(count(lit(1)).as("sz"))

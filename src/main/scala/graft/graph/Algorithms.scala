@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * The reference's "clouds" (phageclouds_gdb.py) are connected components
   * of the distance-thresholded sharesDNA graph. Neo4j walks them; at
-  * 100 TB the Spark-native answer is an O(log n)-round alternating
-  * min-label/pointer-jumping loop with per-iteration `localCheckpoint`
-  * to cut lineage.
+  * 100 TB the Spark-native answer is an O(log² n)-round alternating
+  * star-contraction loop ([[connectedComponents]]) with per-iteration
+  * `localCheckpoint` to cut lineage.
   *
   * Loop discipline (the 100 TB rules this file follows):
   *   - the edge input is checkpointed ONCE — upstream plans (e.g. the
@@ -72,10 +72,11 @@ object Algorithms {
     * Used by [[shortestPaths]], whose frontier SHRINKS as the wavefront
     * passes (the coalescer's per-round sizing decisions are wasted
     * there). Deliberately NOT used by [[connectedComponents]] /
-    * [[pageRank]]: their iterate is all |V| rows every round, and
-    * benchmarking showed the pinned width slower than letting the
-    * coalescer handle those loops (their dual-referenced self-join
-    * stages reuse better under fully-adaptive planning). */
+    * [[pageRank]]: their rounds reference the previous iterate more
+    * than once, and benchmarking (the former hash-to-min CC loop,
+    * 14.2 s pinned vs 6.5 s adaptive at sf0.1) showed such
+    * dual-referenced stages reuse better under fully-adaptive
+    * planning. */
   private def loopSession(spark: org.apache.spark.sql.SparkSession, width: Int)
       : org.apache.spark.sql.SparkSession = {
     val s = spark.newSession()
@@ -111,7 +112,7 @@ object Algorithms {
   /** Eager local checkpoint for a LOOP ITERATE, with the carried origin
     * statistics scrubbed ([[org.apache.spark.sql.graft.bridge
     * .scrubOriginStats]]). A kernel whose round plan references the
-    * previous iterate more than once (CC's pointer-jump self-join)
+    * previous iterate more than once (CC's star rounds)
     * multiplies the carried BigInt sizeInBytes every round — digits
     * ~×4/round — so any run needing ~10+ rounds hangs the driver inside
     * stats estimation DURING the next checkpoint call (measured: the
@@ -219,168 +220,172 @@ object Algorithms {
       }
     }
 
-  /** Connected components on an undirected view of `edges` (src,dst).
-    * Returns (id, component) where component = min node id of the
-    * component. Hash-to-min + pointer doubling: each round takes the min
-    * of a node's neighbours' labels, then jumps labels through themselves
-    * (comp := comp(comp)), halving chain lengths — convergence in
-    * O(log diameter) rounds vs O(diameter) for plain propagation.
+  /** Round cap for [[connectedComponents]]' distributed loop — the
+    * alternation is O(log² n) worst case on ANY edge shape, so 64
+    * covers graphs far beyond any tested scale; the loop exits the
+    * round after the edge set reaches the star fixpoint. A capped exit
+    * is a CORRECTNESS failure, not a tuning choice (the CC oracle is
+    * an exact transitive closure, and an unconverged edge set silently
+    * under-merges), so it fails loudly. */
+  private val CcMaxRounds = 64
+
+  /** Connected components on the undirected view of `edges` (src, dst).
+    * Returns (id, comp) for every row of `nodes`, where comp = the
+    * component's minimum member id; nodes off the edge list keep their
+    * own id. Labels relay through EVERY edge endpoint, including
+    * endpoints that are not node rows.
     *
-    * FRONTIER DELTA: only labels that changed last round rejoin the edge
-    * list. Min-propagation is monotone — a neighbour whose label did not
-    * change since it was last gathered contributes nothing new (its old
-    * contribution is already folded into the monotonically-decreasing
-    * comp), so the gather join shrinks from |E| output rows per round to
-    * Σdeg(changed), which collapses as components settle. The pointer
-    * jump stays FULL-width on purpose: a node's comp can point at a root
-    * that is not a graph neighbour, and the jump is how a root's relabel
-    * reaches its whole tree. Next round's frontier = rows whose comp
-    * moved this round, whether via gather or jump. Convergence = empty
-    * frontier, probed on the already-checkpointed iterate (a cached
-    * scan, not a recompute). The symmetrized edge list is NOT
-    * deduplicated (a min aggregate is idempotent under duplicates; a
-    * distinct would add a full shuffle of the biggest table in the job)
-    * and is pre-partitioned on the join key so only the (frontier-sized)
-    * label side shuffles per round. */
-  /** Gather+jump cycles folded into ONE checkpoint action per round —
-    * the same action-batching knob as [[RelaxPerRound]]: extra cycles
-    * are monotone (at worst no-ops), so batching halves the Spark
-    * action count on long label chains at the cost of a deeper
-    * per-round plan. Measured at sf0.1/local[32] (median-of-5,
-    * frontier-delta loop): 1 cycle = 6.5 s, 2 cycles = 7.8 s — the
-    * doubled plan (each cycle references the previous cycle's
-    * dual-referenced self-join) costs more than the halved action
-    * count saves, the same result as SSSP's RelaxPerRound=4 A/B. */
-  val CcCyclesPerRound = 1
-
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 64,
-                          cyclesPerRound: Int = CcCyclesPerRound): DataFrame = {
-    // deliberately NOT on a pinned-width loopSession: measured at sf0.1
-    // median-of-5, the pinned session is 14.2 s vs 6.5 s under the
-    // caller's adaptive session — unlike SSSP's shrinking frontier,
-    // CC's dual-referenced self-join rounds benefit from the coalescer
-    // collapsing the tiny exchanges every round
-    val sym = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    // the returned labels are a materialized checkpoint that no longer
-    // references the symmetrized edge list — release it, or every
-    // nested CC call (Borůvka contracts per round) pins one more
-    // edge-sized block set for the session lifetime
-    val out = connectedComponentsOnSym(nodes, sym, maxIter, cyclesPerRound)
-    releaseIterate(sym)
-    out
+    * One logical kernel, two physical paths picked by size in
+    * [[Gates.edges]]. Both start from the same init materialization:
+    * the canonical (max, min) edge set, self-loops dropped, distinct —
+    * so callers may pass duplicate, reversed or self-loop edges, and
+    * the distinct edge count falls out of that single job.
+    *   - At or below the gate: one collect and the [[LocalGraph]]
+    *     union-find ([[unionFindLabels]]) instead of the O(log² n)
+    *     rounds of ~6 AQE stage jobs each. Every caller outside the
+    *     full-graph keys feeds a forest cut, a band or a merge graph
+    *     bounded by the component count, tiny next to the edge corpus.
+    *   - Above it: ALTERNATING STAR CONTRACTION (Kiveris et al. 2014,
+    *     "Connected Components in MapReduce and Beyond": two-phase
+    *     large-star/small-star). The loop restructures the EDGE LIST
+    *     itself — large-star hangs every larger neighbour under the
+    *     local minimum, small-star compresses the rest — with a proven
+    *     O(log² n) round bound independent of id placement. Label
+    *     propagation creeps ~1–2 hops per round on chains whose ids
+    *     DESCEND along the chain (measured: the single-linkage sweep's
+    *     MST chains at sf0.1 took 365 s under hash-to-min, 23 s here
+    *     for all four sweep cuts). Per round: two keyed min-aggregates
+    *     and two joins over the CURRENT edge list — which only SHRINKS
+    *     toward one star edge per non-root node — and one fixpoint
+    *     probe; iterates go through [[loopCheckpoint]] so carried stats
+    *     stay flat. */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    var (e, eCnt) = loopCheckpointCounted(
+      edges.select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .filter(col("a") =!= col("b")).distinct()
+        .select(col("b").as("u"), col("a").as("v"))) // u > v: child→smaller
+    if (eCnt <= Gates.edges) {
+      // the distinct edge count just fell out of the init
+      // materialization: below the gate the whole round stack collapses
+      // into one cached-scan collect (r20 profile: these rounds were
+      // where g_threshold_sweep's 538 and g_mst's ≈ 380 jobs went)
+      val out = unionFindLabels(nodes, e)
+      releaseIterate(e)
+      return out
+    }
+    var r = 0
+    var live = true
+    while (r < CcMaxRounds && live) {
+      // large-star: per node u (over the SYMMETRIC view), every
+      // neighbor STRICTLY LARGER than u re-attaches to u's local
+      // minimum m = min(N(u) ∪ {u})
+      val sym = e.select(col("u"), col("v"))
+        .union(e.select(col("v").as("u"), col("u").as("v")))
+      val m = sym.groupBy(col("u"))
+        .agg(least(min(col("v")), col("u").cast("long")).as("m"))
+      // large-star output, UNMATERIALIZED: `large` is referenced twice
+      // (m2's aggregate and the small-star join), but its repeated
+      // subtree is deduped by AQE's runtime exchange reuse — the extra
+      // per-round action costs more than the reuse saves: dropping
+      // the eager checkpoint here fuses each round's large+small stars
+      // into ONE materialization job (r20 A/B).
+      // the distinct is LOAD-BEARING beyond set semantics: its exchange
+      // is the boundary AQE's runtime exchange reuse dedups the twice-
+      // referenced subtree at (r20 A/B: dropping it re-executed the
+      // sym+m+join subtree per reference — g_mst 19.0 → 26.2 s wall,
+      // task time +25%)
+      val large = sym.join(m, Seq("u"))
+        .filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      // small-star: per node u (over the large-star output, already
+      // child→smaller oriented), neighbors ≤ u and u itself attach to m
+      val m2 = large.groupBy(col("u"))
+        .agg(least(min(col("v")), col("u").cast("long")).as("m"))
+      val small = large.join(m2, Seq("u"))
+        .select(explode(array(
+          struct(col("v").as("x"), col("m").as("y")),
+          struct(col("u").as("x"), col("m").as("y")))).as("p"))
+        .select(greatest(col("p.x"), col("p.y")).as("u"),
+          least(col("p.x"), col("p.y")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      // ONE job materializes `next` AND yields its row count — which
+      // carries most of the fixpoint answer (below)
+      val (next, nCnt) = loopCheckpointCounted(small)
+      // fixpoint: the edge list is a stable star forest when the round
+      // leaves it unchanged (same canonical pair set). Both iterates
+      // are DISTINCT sets, so |next| ≠ |e| already proves change with
+      // zero extra jobs (the count fell out of the materialization),
+      // and |next| = |e| ∧ next∖e = ∅ proves equality — ONE anti-join
+      // probe on the rare equal-count rounds replaces the former
+      // unconditional two (the per-round job count is the loop
+      // family's dominant cost at sf0.1, and a driver barrier per
+      // round at any scale).
+      live = nCnt != eCnt ||
+        next.join(e, Seq("u", "v"), "left_anti").limit(1).count() > 0
+      releaseIterate(e)
+      e = next
+      eCnt = nCnt
+      r += 1
+    }
+    if (live) throw new IllegalStateException(
+      s"connectedComponents: no fixpoint after $CcMaxRounds rounds")
+    // converged star edges are (child u, root v); roots/isolated keep self
+    nodes.select(col("id"))
+      .join(e.select(col("u").as("id"), col("v").as("root")), Seq("id"),
+        "left_outer")
+      .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
   }
 
-  /** [[connectedComponents]] over a CALLER-OWNED symmetric edge
-    * checkpoint — `sym` is an already-materialized (u, v) frame
-    * carrying BOTH orientations of every edge, laid out on v. The
-    * split exists for compositions that already hold such a layer
-    * (the Louvain level-1 layer feeding [[refinePartitionOnSym]]):
-    * re-deriving it through the public entry's self-union would
-    * execute the caller's edge plan once per union branch AND pin a
-    * second edge-scale checkpoint — the exact double-copy shape the
-    * 150k/85M ScaleBench point OOMs on. The caller releases `sym`
-    * when done; this function never does. */
-  private[graft] def connectedComponentsOnSym(
-      nodes: DataFrame, sym: DataFrame, maxIter: Int = 64,
-      cyclesPerRound: Int = CcCyclesPerRound): DataFrame = {
-    // the sym row count was already a gate probe here (bcOk below — a
-    // cached scan of the caller-materialized checkpoint); hoisted so it
-    // can also gate the driver union-find shortcut
-    val symCnt = sym.count()
-    if (symCnt <= 2 * Gates.edges) {
-      // GATED DRIVER UNION-FIND — see [[connectedComponentsStar]]'s
-      // twin block for the full rationale. sym carries BOTH
-      // orientations of every edge, so the row gate is 2× the edge
-      // gate; duplicates/self-loops are fine ([[unionFindLabels]]).
-      // Replaces the whole hash-to-min + pointer-jump round structure
-      // (1 scheduler job per round minimum, 3+ under AQE staging) with
-      // one collect, at identical labels (comp = min member id).
-      return unionFindLabels(nodes, sym)
-    }
-
-    val (labels0, nLabels) = loopCheckpointCounted(
-      nodes.select(col("id"), col("id").as("comp"), lit(true).as("changed")))
-    var labels = labels0
-    // |V|-row per-cycle frames broadcast into the edge-scale gather
-    // below the shared ceiling — the frontier delta and the gathered
-    // min table are both ≤ |V| rows, and without the hint the
-    // scrubbed iterate stats plan the gather as a sort-merge join
-    // that re-sorts the symmetric edge checkpoint every cycle
-    // ([[IterateBroadcastMaxRows]]; measured at sf0.1: 4.5 → 3.2 s
-    // min-of-5). The pointer-jump self-join is deliberately NOT
-    // hinted: its AQE exchange-reuse structure is measured-tuned (see
-    // below) and both sides are |V|-sized. UNLIKE the linear-chain
-    // kernels (coreness/label-prop/PageRank), CC's hint is ALSO gated
-    // on the edge scale: the hinted gather loses its exchange stage
-    // barrier, so the dual-referenced self-join races two narrow
-    // 2|E|-scan subtrees over the big shared cache — measured
-    // AGGREGATE_OUT_OF_MEMORY in round 1 at the 150k/85M single-JVM
-    // point, while below [[WidenRows]] the hints only help. Both gate
-    // probes are cached scans of already-materialized checkpoints.
-    val bcOk = nLabels <= IterateBroadcastMaxRows &&
-      symCnt < WidenRows
-
-    // one hash-to-min + pointer-jump cycle: (id, comp, changed) in,
-    // (id, comp, changed) out, unmaterialized
-    def cycle(labels: DataFrame): DataFrame = {
-      // min over CHANGED neighbours' labels only (see frontier note above)
-      val delta = labels.filter(col("changed"))
-        .select(col("id").as("v"), col("comp").as("vcomp"))
-      val nbrMin = sym.join(bcIf(bcOk, delta), Seq("v"))
-        .groupBy(col("u").as("id")).agg(min(col("vcomp")).as("nbr_comp"))
-      val stepped = labels.join(bcIf(bcOk, nbrMin), Seq("id"), "left_outer")
-        .select(col("id"), col("comp").as("prev"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-      // pointer jumping: comp := comp(comp). comp values are node ids, so
-      // the inner self-join is total. `stepped` is referenced twice but
-      // deliberately NOT checkpointed: AQE's runtime exchange reuse
-      // dedupes the repeated subtree (measured: 6.4 s median-of-5 at
-      // sf0.1 as-is vs 8.0 s with an eager checkpoint here — the extra
-      // per-round action costs more than the reuse saves; SURVEY §4
-      // rule 8 yields to measurement inside one-action-per-round loops).
-      // comp(x) ≤ x always, so the jump only ever lowers the label and
-      // `ccomp < prev` is exactly "this row moved this cycle".
-      stepped.alias("l")
-        .join(stepped.select(col("id").as("cid"), col("comp").as("ccomp")),
-          col("l.comp") === col("cid"))
-        .select(col("l.id").as("id"), col("ccomp").as("comp"),
-          (col("ccomp") < col("l.prev")).as("changed"))
-    }
-
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // a node changed in an inner cycle propagates in the NEXT inner
-      // cycle (its delta is cycle-local), so only the final cycle's
-      // changes need to carry into the next round's frontier — the same
-      // argument as the SSSP round batching. loopCheckpoint (not plain
-      // localCheckpoint): the cycle references `labels` three times, so
-      // carried stats would compound ~×4 per round and hang long runs.
-      // ONE job: the changed-count probe materializes the lazy iterate
-      // checkpoint ([[checkpointPredCounted]] — the SSSP idiom)
-      val (jumped, nChanged) = loopCheckpointPredCounted(
-        (1 to cyclesPerRound).foldLeft(labels)((d, _) => cycle(d)),
-        col("changed"))
-      done = nChanged == 0
-      releaseIterate(labels) // superseded: jumped is materialized, labels is dead
-      labels = jumped
-      iter += 1
-    }
-    // A capped exit is a CORRECTNESS failure, not a tuning choice: the
-    // CC oracle is an exact transitive closure, and an unconverged label
-    // table silently under-merges (caught at sf0.01 — the r12 threshold
-    // sweep returned 38 clouds where the graph has 30, because the MST
-    // forest's SCRAMBLED-id chains propagate min labels far slower than
-    // the ordered paths the convergence spec used). Fail loudly; callers
-    // with adversarial chain inputs raise maxIter / cyclesPerRound.
-    if (!done) throw new IllegalStateException(
-      s"connectedComponents: frontier still live after $maxIter rounds — " +
-        "raise maxIter (chain-shaped inputs propagate labels slowly)")
-    labels.select(col("id"), col("comp"))
+  /** [[connectedComponents]]' driver path: collect the distinct (u, v)
+    * edge checkpoint, run the [[LocalGraph]] union-find, and re-attach
+    * (id, comp) to every node. Roots are each set's MINIMUM member id —
+    * the kernel's comp = min-member contract, identical to the star
+    * fixpoint by construction; nodes off the edge list keep their own
+    * id. Unlike the other twins' [[LocalGraph.relation]] frames, the
+    * roots ride as a local relation: that choice sets this join's plan
+    * and job count. */
+  private def unionFindLabels(nodes: DataFrame, uv: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val g = LocalGraph.collect(uv, "u", "v")
+    val root = g.roots()
+    LocalGraph.attach(nodes.select(col("id")),
+      g.ids.indices.map(j => (g.ids(j), g.ids(root(j)))).toDF("id", "root"))(
+      col("id"), coalesce(col("root"), col("id")).as("comp"))
   }
+
+  /** One cut of a NESTED-cut sweep — a single-linkage ladder, where
+    * every component at one cut lies wholly inside one component of
+    * the next. The first cut (`prev` null) is [[connectedComponents]]
+    * over `band`. Each later cut CONTRACTS by the previous cut's
+    * components: `band` holds only the edges new since `prev`'s cut,
+    * their endpoints are relabeled to `prev`'s components, CC runs on
+    * those supernodes, and one hash join maps the labels back to nodes.
+    * Labels equal a from-scratch run (the min of component-min labels
+    * is the global min member id), but each later kernel input is the
+    * band over the shrinking supernode set instead of the whole cut.
+    * `band` is (src, dst); `prev` is the caller's materialized
+    * (id, comp) table of the previous cut. The caller owns every
+    * checkpoint. */
+  private[graft] def nestedCut(nodes: DataFrame, prev: DataFrame,
+                               band: DataFrame): DataFrame =
+    if (prev == null) connectedComponents(nodes, band)
+    else {
+      // band edges inside one supernode become self-loops, which the
+      // CC init drops
+      val superBand = band
+        .join(prev.select(col("id").as("src"), col("comp").as("cs")), Seq("src"))
+        .join(prev.select(col("id").as("dst"), col("comp").as("cd")), Seq("dst"))
+        .select(col("cs").as("src"), col("cd").as("dst"))
+      val superCc = connectedComponents(
+        prev.select(col("comp").as("id")).distinct(), superBand)
+      prev.select(col("id"), col("comp").as("pcomp"))
+        .join(superCc.select(col("id").as("pcomp"), col("comp").as("ncomp")),
+          Seq("pcomp"))
+        .select(col("id"), col("ncomp").as("comp"))
+    }
 
   /** k-core peeling budget: the peel loop strictly shrinks the member
     * set, so it converges in ≤ |V| rounds but in practice a handful; the
@@ -1451,7 +1456,7 @@ object Algorithms {
     *     only allowed toward a SMALLER label — two same-parity
     *     singletons can't swap (each would need the other's label to
     *     be smaller), the smaller-labeled one waits and the larger
-    *     joins it (the hash-to-min idiom).
+    *     joins it (the min-label idiom).
     * Both gates are plain predicates on the candidate set, identical
     * in the unrolled SQL replay. The fixed round budget bounds
     * whatever residual rotation remains (never divergent).
@@ -1501,32 +1506,24 @@ object Algorithms {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     }
 
-  /** A level's symmetric edge layer, surfaced for cross-composition
-    * reuse: the [[bigSymCheckpoint]]-laid (u, v, w) frame with BOTH
-    * orientations of every proper edge (self-loops ride once), the
-    * session it was laid in (the caller's, or a widened child past
-    * [[WidenRows]]), and its row count (an exact layout bound for any
-    * SUBSET a consumer re-checkpoints — no second counting pass). The
-    * holder owns the release. */
-  private[graft] final case class SymLayer(
-      sess: org.apache.spark.sql.SparkSession, symAll: DataFrame, nSym: Long)
-
   private[graft] def louvainLevel(nodes: DataFrame, canonEdges: DataFrame,
                                   rounds: Int): DataFrame = {
     val (lbl, layer) = louvainLevelKeep(nodes, canonEdges, rounds)
-    releaseIterate(layer.symAll)
+    releaseIterate(layer)
     lbl
   }
 
-  /** [[louvainLevel]] variant that RETURNS its symmetric edge layer
-    * instead of releasing it — the one-edge-scale-checkpoint-per-
+  /** [[louvainLevel]] variant that RETURNS its symmetric edge layer —
+    * the [[bigSymCheckpoint]]-laid (u, v, w) frame with BOTH
+    * orientations of every proper edge (self-loops ride once), whose
+    * release the caller owns — instead of releasing it — the one-edge-scale-checkpoint-per-
     * composition contract: [[louvainRefine]]'s intra-community CC
     * filters this exact checkpoint rather than re-symmetrizing the
     * caller's edges (which would execute the upstream plan once per
     * union branch and pin a second edge-scale block set — the r13
     * ScaleBench lesson applied ACROSS the kernel boundary). */
   private[graft] def louvainLevelKeep(nodes: DataFrame, canonEdges: DataFrame,
-                                      rounds: Int): (DataFrame, SymLayer) = {
+                                      rounds: Int): (DataFrame, DataFrame) = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // ONE edge-scale checkpoint, not two: the level originally pinned a
     // canonical copy AND its symmetrization (85M + 170M rows at the
@@ -1676,7 +1673,7 @@ object Algorithms {
       r += 1
     }
     releaseIterate(ids)
-    (lbl.select(col("id"), col("lbl")), SymLayer(sess, symAll, nSym))
+    (lbl.select(col("id"), col("lbl")), symAll)
   }
 
   /** Louvain community detection (Blondel et al. 2008), deterministic
@@ -1758,7 +1755,7 @@ object Algorithms {
   private def louvainOnLayer(nodes: DataFrame, canon0: DataFrame,
                              rounds: Int, levels: Int,
                              keepLayer: Boolean)
-      : (DataFrame, SymLayer) = {
+      : (DataFrame, DataFrame) = {
     // BOUNDED-COLLECT SHORTCUT (the [[unionFindLabels]] class of gate):
     // below [[Gates.edges]] canonical edges the whole
     // level/round stack — every ΔQ gather, sigma aggregate, argmax,
@@ -1788,11 +1785,11 @@ object Algorithms {
     var curNodes = nodes.select(col("id"))
     var mapping: DataFrame = null
     var prevLbl: DataFrame = null
-    var kept: SymLayer = null
+    var kept: DataFrame = null
     for (lvl <- 1 to levels) {
       val (lbl, layer) = louvainLevelKeep(curNodes, canon, rounds)
       if (lvl == 1 && keepLayer) kept = layer
-      else releaseIterate(layer.symAll)
+      else releaseIterate(layer)
       // louvainLevel eagerly checkpointed its edge/node inputs, so the
       // PREVIOUS level's label iterate (which fed this level's coarse
       // graph lazily) has no live reader left
@@ -1819,26 +1816,6 @@ object Algorithms {
     }
     releaseIterate(prevLbl) // mapping checkpoint was the last reader
     (mapping, kept)
-  }
-
-  /** The gated CC shortcut shared by [[connectedComponentsStar]] and
-    * [[connectedComponentsOnSym]]: collect the (u, v) frame, run the
-    * [[LocalGraph]] union-find, and re-attach (id, comp) to every node.
-    * Roots are each set's MINIMUM member id, exactly both kernels'
-    * comp = min-member contract; nodes off the edge list keep their
-    * own id. Duplicate, reversed and self-loop pairs are tolerated, so
-    * callers can hand over raw symmetric layers without a distinct.
-    * Unlike the other twins' [[LocalGraph.relation]] frames, the roots
-    * ride as a local relation: that choice sets this join's plan and
-    * job count. */
-  private def unionFindLabels(nodes: DataFrame, uv: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val g = LocalGraph.collect(uv, "u", "v")
-    val root = g.roots()
-    LocalGraph.attach(nodes.select(col("id")),
-      g.ids.indices.map(j => (g.ids(j), g.ids(root(j)))).toDF("id", "root"))(
-      col("id"), coalesce(col("root"), col("id")).as("comp"))
   }
 
   /** Driver-local twin of ONE [[louvainLevelKeep]] round stack over
@@ -2015,126 +1992,6 @@ object Algorithms {
     comm
   }
 
-  /** Round cap for [[connectedComponentsStar]] — the alternation is
-    * O(log² n) worst case on ANY edge shape, so 64 covers graphs far
-    * beyond any tested scale; the loop exits the round after the edge
-    * set reaches the star fixpoint, and a capped exit fails loudly
-    * like [[connectedComponents]]'s. */
-  val StarMaxRounds = 64
-
-  /** Connected components via ALTERNATING STAR CONTRACTION (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond":
-    * two-phase large-star/small-star) — the kernel to use when the
-    * input's component shape is ADVERSARIAL for label propagation.
-    * [[connectedComponents]]'s delta-frontier hash-to-min creeps ~1–2
-    * hops per round on long chains whose ids DESCEND along the chain
-    * (measured: the single-linkage sweep's MST chains at sf0.1 took
-    * 365 s there); the star alternation restructures the EDGE LIST
-    * itself — large-star hangs every larger neighbor under the local
-    * minimum, small-star compresses the rest — with a proven
-    * O(log² n) round bound independent of id placement (measured on
-    * the same sf0.1 input: 11 rounds, 23 s for all four sweep cuts).
-    *
-    * Same contract as [[connectedComponents]]: (id, comp = min member
-    * id), every node covered, singletons keep themselves. Per round:
-    * two keyed min-aggregates + two joins over the CURRENT edge list —
-    * which only SHRINKS toward one star edge per non-root node — and
-    * one fixpoint probe action; iterates go through [[loopCheckpoint]]
-    * so carried stats stay flat. */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              maxRounds: Int = StarMaxRounds): DataFrame = {
-    var (e, eCnt) = loopCheckpointCounted(
-      edges.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .select(col("b").as("u"), col("a").as("v"))) // u > v: child→smaller
-    if (eCnt <= Gates.edges) {
-      // GATED DRIVER UNION-FIND — the bounded-collect idiom
-      // ([[collectAdjImage]] / embeddingNearDup): the distinct edge
-      // count just fell out of the init materialization, and when it
-      // clears the gate the whole O(log² n)-round distributed
-      // alternation — ~6 AQE stage-materialization scheduler jobs PER
-      // ROUND at any scale factor — collapses into ONE cached-scan
-      // collect plus a local-relation join. This is where the
-      // round-tax-bound keys' jobs actually went (r20 profile:
-      // g_threshold_sweep 538 jobs / g_mst ≈ 380 for ~20 s of task
-      // time — every star call site feeds the kernel a forest cut or
-      // a merge graph bounded by the component count, tiny next to
-      // the edge corpus). Labels are IDENTICAL by construction
-      // ([[unionFindLabels]]: root = set's minimum member id — the
-      // kernel's comp contract) and the same left-outer tail covers
-      // isolated nodes. Above the gate (a band/merge graph can
-      // approach |V| rows at 10^10 nodes) the distributed loop
-      // stands unchanged.
-      val out = unionFindLabels(nodes, e)
-      releaseIterate(e)
-      return out
-    }
-    var r = 0
-    var live = true
-    while (r < maxRounds && live) {
-      // large-star: per node u (over the SYMMETRIC view), every
-      // neighbor STRICTLY LARGER than u re-attaches to u's local
-      // minimum m = min(N(u) ∪ {u})
-      val sym = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u").cast("long")).as("m"))
-      // large-star output, UNMATERIALIZED: `large` is referenced twice
-      // (m2's aggregate and the small-star join), but its repeated
-      // subtree is deduped by AQE's runtime exchange reuse — the same
-      // measured trade as the CC pointer-jump self-join ("the extra
-      // per-round action costs more than the reuse saves"): dropping
-      // the eager checkpoint here fuses each round's large+small stars
-      // into ONE materialization job (r20 A/B in the scaladoc).
-      // the distinct is LOAD-BEARING beyond set semantics: its exchange
-      // is the boundary AQE's runtime exchange reuse dedups the twice-
-      // referenced subtree at (r20 A/B: dropping it re-executed the
-      // sym+m+join subtree per reference — g_mst 19.0 → 26.2 s wall,
-      // task time +25%)
-      val large = sym.join(m, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // small-star: per node u (over the large-star output, already
-      // child→smaller oriented), neighbors ≤ u and u itself attach to m
-      val m2 = large.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u").cast("long")).as("m"))
-      val small = large.join(m2, Seq("u"))
-        .select(explode(array(
-          struct(col("v").as("x"), col("m").as("y")),
-          struct(col("u").as("x"), col("m").as("y")))).as("p"))
-        .select(greatest(col("p.x"), col("p.y")).as("u"),
-          least(col("p.x"), col("p.y")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // ONE job materializes `next` AND yields its row count — which
-      // carries most of the fixpoint answer (below)
-      val (next, nCnt) = loopCheckpointCounted(small)
-      // fixpoint: the edge list is a stable star forest when the round
-      // leaves it unchanged (same canonical pair set). Both iterates
-      // are DISTINCT sets, so |next| ≠ |e| already proves change with
-      // zero extra jobs (the count fell out of the materialization),
-      // and |next| = |e| ∧ next∖e = ∅ proves equality — ONE anti-join
-      // probe on the rare equal-count rounds replaces the former
-      // unconditional two (the per-round job count is the loop
-      // family's dominant cost at sf0.1, and a driver barrier per
-      // round at any scale).
-      live = nCnt != eCnt ||
-        next.join(e, Seq("u", "v"), "left_anti").limit(1).count() > 0
-      releaseIterate(e)
-      e = next
-      eCnt = nCnt
-      r += 1
-    }
-    if (live) throw new IllegalStateException(
-      s"connectedComponentsStar: no fixpoint after $maxRounds rounds")
-    // converged star edges are (child u, root v); roots/isolated keep self
-    nodes.select(col("id"))
-      .join(e.select(col("u").as("id"), col("v").as("root")), Seq("id"),
-        "left_outer")
-      .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
-  }
-
   /** Borůvka round cap for [[boruvkaMst]]: components at least HALVE
     * every round, so 16 covers components of 2^16 nodes; the loop
     * early-exits the round after no component has an outgoing edge. */
@@ -2258,14 +2115,11 @@ object Algorithms {
           pick.select(col("u"), col("v"), col("w")).distinct())
         val mp = pick.select(least(col("cc"), col("o")).as("src"),
           greatest(col("cc"), col("o")).as("dst")).distinct()
-        // contract with the STAR kernel, not hash-to-min: a round-1
-        // merge graph on a path-shaped input with monotone weights is a
-        // ~n-component chain in adversarial id order — exactly label
-        // propagation's worst case (it would creep 1–2 hops/round and
-        // trip the capped-exit exception on inputs barely larger than
-        // the tested scale), while the star alternation is O(log² n)
-        // on ANY shape
-        val cmap = connectedComponentsStar(
+        // a round-1 merge graph on a path-shaped input with monotone
+        // weights is a ~n-component chain in adversarial id order —
+        // label propagation's worst case; the CC kernel's star
+        // alternation is O(log² n) on ANY shape
+        val cmap = connectedComponents(
           comp.select(col("c").as("id")).distinct(), mp)
         val next = freshStats(
           comp.join(cmap.withColumnRenamed("id", "c"), Seq("c"))
@@ -2301,7 +2155,7 @@ object Algorithms {
     * candidates of struct(w, u, v, other) — `java.lang.Double.compare`
     * on w, the struct ordering Spark's min aggregate applies — then
     * within-round forest dedup, merge-graph contraction rooted at the
-    * minimum component id (the star kernel's comp = min-member
+    * minimum component id (the CC kernel's comp = min-member
     * contract), and the same round budget / emptiness exit. Off-edge
     * nodes re-attach through the component left join (own id — the
     * init's singleton row). */
@@ -2387,58 +2241,17 @@ object Algorithms {
     * aggregate keys on |communities|. */
   private[graft] def refinePartition(nodes: DataFrame, edges: DataFrame,
                                      labels: DataFrame): DataFrame = {
-    // symmetrize the intra-community edges in the SAME pass that
-    // filters them (one explode, like every kernel here) and feed the
-    // layer to the CC loop directly: routing through the public CC
-    // entry would re-execute this 2-join plan once per self-union
-    // branch — the double-scan shape the 150k ScaleBench point OOMs on
-    val intraSym = edges
+    // the intra-community edge PLAN goes to the CC kernel as is: its
+    // init canonicalizes, dedups and checkpoints in one pass, so this
+    // 2-join filter executes exactly once
+    val intra = edges
       .join(labels.select(col("id").as("src"), col("community").as("ca")),
         Seq("src"))
       .join(labels.select(col("id").as("dst"), col("community").as("cb")),
         Seq("dst"))
       .filter(col("ca") === col("cb"))
-      .select(explode(array(
-        struct(col("src").as("u"), col("dst").as("v")),
-        struct(col("dst").as("u"), col("src").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    val cc = connectedComponentsOnSym(nodes, intraSym)
-    // cc's label table is materialized — the intra layer has no reader
-    releaseIterate(intraSym)
-    refineAudit(labels, cc)
-  }
-
-  /** [[refinePartition]] over an ALREADY-SYMMETRIC caller layer (the
-    * Louvain level-1 [[SymLayer]]): the intra-community restriction is
-    * a 2-join filter of that exact checkpoint — no re-symmetrization,
-    * no second pass over the caller's edge plan — and the filtered
-    * layer is laid out by [[bigSymCheckpoint]] under the layer's own
-    * row count (an exact upper bound for the subset, so the sizing
-    * pass is free). Consumes the layer: `layer.symAll` is released as
-    * soon as the intra checkpoint is materialized. */
-  private[graft] def refinePartitionOnSym(nodes: DataFrame, layer: SymLayer,
-                                          labels: DataFrame): DataFrame = {
-    val intraPlan = layer.symAll.filter(col("u") =!= col("v"))
-      .join(labels.select(col("id").as("u"), col("community").as("ca")),
-        Seq("u"))
-      .join(labels.select(col("id").as("v"), col("community").as("cb")),
-        Seq("v"))
-      .filter(col("ca") === col("cb"))
-      .select(col("u"), col("v"))
-    val (_, intraSym) = bigSymCheckpoint(intraPlan, layer.nSym, "v")
-    releaseIterate(layer.symAll) // intra layer materialized; the
-    // louvain layer's last reader is gone
-    val cc = connectedComponentsOnSym(nodes, intraSym)
-    releaseIterate(intraSym)
-    refineAudit(labels, cc)
-  }
-
-  /** The refine report shared by both entry points: per-community part
-    * count + split flag over the (node, community, refined) join. */
-  private def refineAudit(labels: DataFrame, cc: DataFrame): DataFrame = {
-    val joined = labels.join(cc, Seq("id"))
+      .select(col("src"), col("dst"))
+    val joined = labels.join(connectedComponents(nodes, intra), Seq("id"))
     val parts = joined.groupBy(col("community"))
       .agg(countDistinct(col("comp")).as("n_parts"))
     joined.join(parts, Seq("community"))
@@ -2451,8 +2264,7 @@ object Algorithms {
     * the Leiden-style connectivity refinement of its final labels —
     * with the level-1 symmetric edge layer built ONCE and shared
     * between the ΔQ rounds and the intra-community CC
-    * ([[louvainOnLayer]] keeps it; [[refinePartitionOnSym]] consumes
-    * it). Calling [[louvain]] then [[refinePartition]] separately is
+    * ([[louvainOnLayer]] keeps it; [[refinePartition]] filters it). Calling [[louvain]] then [[refinePartition]] separately is
     * value-identical but re-symmetrizes and re-checkpoints the edge
     * set the level already laid out — measured 434.9 s vs louvain's
     * 260.8 s at the 150k/85M ScaleBench point, most of the gap being
@@ -2471,7 +2283,7 @@ object Algorithms {
     // [[louvainOnLayer]] gate: ONE collect feeds the louvain level
     // stack AND the intra-community CC (a min-label union-find over
     // the same pairs restricted to equal labels — exactly
-    // [[connectedComponentsOnSym]]'s comp = min-member contract on the
+    // [[connectedComponents]]' comp = min-member contract on the
     // intra edge subset) AND the part-count audit. Nodes off the edge
     // list re-attach through the left join (community = refined = own
     // id, n_parts = 1), the distributed stay-row/CC-singleton
@@ -2486,13 +2298,19 @@ object Algorithms {
     // times (two intra sides + the audit join pair)
     val lbl = freshStats(mapping).localCheckpoint(true)
     releaseIterate(mapping)
-    refinePartitionOnSym(nodes, layer, lbl)
+    // the layer holds both orientations of every edge, which the CC
+    // init's canonical distinct folds: the intra filter is one pass over
+    // this exact checkpoint, never a second pass over the caller's edges
+    val out = refinePartition(nodes,
+      layer.select(col("u").as("src"), col("v").as("dst")), lbl)
+    releaseIterate(layer) // the CC init materialized the intra subset
+    out
   }
 
   /** Driver side of [[louvainRefine]]'s gate: local louvain labels,
     * local intra-community union-find (roots = min member id), local
     * part counts, one narrow left join to cover off-edge nodes. Output
-    * schema and values = [[refineAudit]]'s. */
+    * schema and values = [[refinePartition]]'s. */
   private def louvainRefineLocal(nodes: DataFrame, canonW: DataFrame,
                                  rounds: Int, levels: Int): DataFrame = {
     val spark = nodes.sparkSession

@@ -1047,54 +1047,29 @@ object Clouds {
     *
     * The cuts are NESTED (single-linkage dendrogram property: a
     * component at cut tᵢ is wholly inside one component at tᵢ₊₁), so
-    * the sweep is INCREMENTAL, ascending: the first cut runs the
-    * star kernel on {forest edges ≤ t₁}; every later cut CONTRACTS by
-    * the previous cut's components — supernodes = previous component
-    * labels, edges = only the NEW band (tᵢ₋₁, tᵢ] forest edges with
-    * endpoints relabeled — and recovers node-level labels with one
-    * hash join. Labels stay identical to a from-scratch run (min of
-    * component-min labels = global min member id — the direct-CC
-    * identity spec proves it), but each later cut's kernel input is
-    * the band's edge count over the (shrinking) supernode set instead
-    * of the whole ≤ tᵢ forest. The build-threshold census is free:
-    * Borůvka's own component table IS that cut. */
+    * the sweep is INCREMENTAL, ascending ([[Algorithms.nestedCut]]):
+    * each later cut's kernel input is only the (tᵢ₋₁, tᵢ] band of
+    * forest edges over the previous cut's supernodes, and labels stay
+    * identical to a from-scratch run (the direct-CC identity spec
+    * proves it). The build-threshold census is free: Borůvka's own
+    * component table IS that cut. */
   def thresholdSweepOn(layer: (DataFrame, DataFrame, DataFrame)): DataFrame = {
     val (nodes, forest, fullComp) = layer
-    // forest cuts are CHAINS with adversarial id order — the slow
-    // case for label propagation (measured 365 s at sf0.1) — so the
-    // cuts run the O(log²)-guaranteed star-contraction kernel
     var prev: DataFrame = null
-    var prevT = 0.0
+    var prevT = Double.NegativeInfinity // below any distance, 0 included
     val cutCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val perT = SweepThresholds.sorted.map { t =>
       val cc =
         if (t == QueryThreshold) fullComp.withColumnRenamed("c", "comp")
-        else if (prev == null)
-          Algorithms.connectedComponentsStar(nodes,
-            forest.filter(col("w") <= t)
-              .select(col("u").as("src"), col("v").as("dst")))
-        else {
-          // nested-cut contraction: only the band's forest edges enter
-          // the kernel, on the previous cut's (far smaller) supernode set
-          val band = forest
-            .filter(col("w") > prevT && col("w") <= t)
-            .join(prev.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
-            .join(prev.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
-            .select(col("cu").as("src"), col("cv").as("dst"))
-            .filter(col("src") =!= col("dst"))
-          val superCc = Algorithms.connectedComponentsStar(
-            prev.select(col("comp").as("id")).distinct(), band)
-          prev.select(col("id"), col("comp").as("pcomp"))
-            .join(superCc.select(col("id").as("pcomp"), col("comp").as("ncomp")),
-              Seq("pcomp"))
-            .select(col("id"), col("ncomp").as("comp"))
-        }
+        else Algorithms.nestedCut(nodes, prev,
+          forest.filter(col("w") > prevT && col("w") <= t)
+            .select(col("u").as("src"), col("v").as("dst")))
       if (t < QueryThreshold) {
         // the next band contracts against this cut: materialize it once
         // (it fans out into the band join's two sides, the supernode
         // set, the relabel join AND this cut's census) and re-root its
-        // stats — a star-CC output composed into another star-CC loop
-        // is exactly the compounding shape freshStats exists for.
+        // stats — a CC output composed into another CC loop is
+        // exactly the compounding shape freshStats exists for.
         prev = Algorithms.freshStats(cc).localCheckpoint(true)
         cutCks += prev
         prevT = t
@@ -1561,78 +1536,48 @@ object Clouds {
       .select(col("u"), col("v"))
 
   /** Driver-built twin of the walk kernels' image pipeline (gated in
-    * [[randomWalksOnEdges]] / [[node2vecOnEdges]]): symmetrize the
-    * collected (src, dst) rows, cap each node's adjacency at the SAME
-    * (hash60("u|v") asc, v asc) rank [[cappedAdjacency]]'s heap keeps
-    * (row multiset identical — ties are identical rows), sort each
-    * surviving slice by neighbour id (the `sort_array` step), and pack
-    * the [[Algorithms.AdjImage]] the walkers consume — replacing the
-    * heap shuffle + groupBy/collect_list + two-hop collect with pure
-    * driver array work on already-collected rows. */
-  private[graft] def localCappedImage(eRows: Array[(Long, Long)],
+    * [[randomWalksOnEdges]] / [[node2vecOnEdges]]): the symmetric CSR
+    * of `g` ([[LocalGraph.csr]] over both orientations — a self-loop
+    * lands twice in its own slice, as in the symmetric view), each
+    * slice capped at the SAME (hash60("u|v") asc, v asc) rank
+    * [[cappedAdjacency]]'s heap keeps (row multiset identical — ties
+    * are identical rows) and sorted by neighbour (the `sort_array`
+    * step; index order = id order). Replaces the heap shuffle +
+    * groupBy/collect_list + two-hop image collect with driver array
+    * work; only slices longer than `cap` are hashed, so the audit's
+    * uncapped twin (cap = MaxValue) hashes nothing. */
+  private[graft] def localCappedImage(g: LocalGraph,
                                       cap: Int): Algorithms.AdjImage = {
+    val (full, _) = g.csr(both = true)
+    val ids = g.ids
     val hashFn = graft.Hashing.hash60Fn()
-    val m2 = 2 * eRows.length
-    // (u, hkey, v) triples of the symmetric view; cap = MaxValue (the
-    // audit's uncapped twin) skips hashing like the skipped heap pass
-    val rows = new Array[(Long, Long, Long)](m2)
-    var i = 0
-    while (i < eRows.length) {
-      val (s, d) = eRows(i)
-      rows(2 * i) = (s, if (cap == Int.MaxValue) 0L else hashFn(s"$s|$d"), d)
-      rows(2 * i + 1) = (d, if (cap == Int.MaxValue) 0L else hashFn(s"$d|$s"), s)
-      i += 1
+    val img = Algorithms.AdjImage.alloc(ids,
+      Array.tabulate(g.n)(x => math.min(cap, full.offs(x + 1) - full.offs(x))))
+    var x = 0
+    while (x < g.n) {
+      val a = full.offs(x)
+      val sl = java.util.Arrays.copyOfRange(full.flat, a, full.offs(x + 1))
+      val kept =
+        if (sl.length <= cap) sl
+        else sl.map(v => (hashFn(s"${ids(x)}|${ids(v)}"), v)).sorted
+          .take(cap).map(_._2)
+      java.util.Arrays.sort(kept)
+      System.arraycopy(kept, 0, img.flat, img.offs(x), kept.length)
+      x += 1
     }
-    java.util.Arrays.sort(rows, Ordering.Tuple3[Long, Long, Long])
-    // per-u: first min(cap, deg) rows in (hkey, v) order, then re-sort
-    // the kept slice by v (sort_array); ids = every source node
-    val idsB = Array.newBuilder[Long]
-    val slicesB = Array.newBuilder[Array[Long]]
-    i = 0
-    while (i < m2) {
-      var j = i
-      while (j < m2 && rows(j)._1 == rows(i)._1) j += 1
-      val take = math.min(cap.toLong, (j - i).toLong).toInt
-      val sl = new Array[Long](take)
-      var t = 0
-      while (t < take) { sl(t) = rows(i + t)._3; t += 1 }
-      java.util.Arrays.sort(sl)
-      idsB += rows(i)._1
-      slicesB += sl
-      i = j
-    }
-    val ids = idsB.result() // ascending: rows sorted by u first
-    val slices = slicesB.result()
-    val intRows = slices.indices.map { k =>
-      val sl = slices(k)
-      val s = new Array[Int](sl.length)
-      var t = 0
-      while (t < sl.length) {
-        s(t) = java.util.Arrays.binarySearch(ids, sl(t)); t += 1
-      }
-      (k, s)
-    }.toArray
-    Algorithms.packAdjImage(ids, intRows)
+    img
   }
 
   /** Driver-built twin of node2vec's canonical-membership image: the
-    * distinct (min, max) edge set symmetrized, slices sorted —
-    * [[localCappedImage]]'s sibling for the `isEdge` probe. */
-  private[graft] def localCanonSymImage(
-      eRows: Array[(Long, Long)]): Algorithms.AdjImage = {
-    val canon = new java.util.HashSet[(Long, Long)]()
-    var i = 0
-    while (i < eRows.length) {
-      val (s, d) = eRows(i)
-      if (s != d) canon.add(if (s < d) (s, d) else (d, s))
-      i += 1
-    }
-    val canonArr = new Array[(Long, Long)](canon.size())
-    val it = canon.iterator()
-    var k = 0
-    while (it.hasNext) { canonArr(k) = it.next(); k += 1 }
-    // localCappedImage symmetrizes its input: one direction in, both out
-    localCappedImage(canonArr, Int.MaxValue)
+    * distinct (min, max) non-loop edge set of `g` symmetrized, slices
+    * sorted — [[localCappedImage]]'s sibling for the `isEdge` probe. */
+  private[graft] def localCanonSymImage(g: LocalGraph): Algorithms.AdjImage = {
+    val keys = g.src.indices.filter(e => g.src(e) != g.dst(e)).map { e =>
+      val a = math.min(g.src(e), g.dst(e)); val b = math.max(g.src(e), g.dst(e))
+      (a.toLong << 32) | b
+    }.distinct.toArray
+    localCappedImage(new LocalGraph(g.ids,
+      keys.map(k => (k >>> 32).toInt), keys.map(k => k.toInt)), Int.MaxValue)
   }
 
   /** DETERMINISTIC random walks — the graph-sampling stage a
@@ -1697,9 +1642,8 @@ object Clouds {
     var und: DataFrame = null
     val bcOpt: Option[org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage]] =
       if (localOk) {
-        val eRows = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        Some(spark.sparkContext.broadcast(localCappedImage(eRows, cap)))
+        val lg = LocalGraph.collect(edgesIn, "src", "dst")
+        Some(spark.sparkContext.broadcast(localCappedImage(lg, cap)))
       } else {
         // cap = MaxValue is the audit's exact twin — skip the no-op
         // hash-heap pass rather than rank every adjacency row for nothing
@@ -1864,10 +1808,9 @@ object Clouds {
     val imgs: Option[(org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage],
                       org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage])] =
       if (localOk) {
-        val eRows = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        Some((spark.sparkContext.broadcast(localCappedImage(eRows, cap)),
-          spark.sparkContext.broadcast(localCanonSymImage(eRows))))
+        val lg = LocalGraph.collect(edgesIn, "src", "dst")
+        Some((spark.sparkContext.broadcast(localCappedImage(lg, cap)),
+          spark.sparkContext.broadcast(localCanonSymImage(lg))))
       } else {
         und = cappedAdjacency(
             edgesIn.select(col("src").as("u"), col("dst").as("v"))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     comparing two indices compares their ids, a slice of index cells
   *     sorts like the distributed `sort_array(id)`, and a union-find that
   *     roots every set at its smallest index roots it at its minimum id
-  *     (the min-member contract of the CC kernels);
+  *     (the min-member contract of the CC kernel);
   *   - `src`/`dst` hold one int index per collected edge, in collect
   *     order. Ints are safe BY THE GATE: every caller collects at most
   *     [[graft.Gates.edges]] rows (symmetric rows for the symmetric

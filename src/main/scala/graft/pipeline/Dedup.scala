@@ -1286,8 +1286,8 @@ object Dedup {
     * must collapse into ONE cluster with ONE kept representative, or
     * chained dups (A~B, B~C, A!~C) survive pairwise removal. Clusters =
     * connected components over the ≥τ Jaccard pair graph (the same
-    * O(log n)-round alternating min-label/pointer-jumping loop the
-    * phage clouds use — [[graft.graph.Algorithms.connectedComponents]]);
+    * kernel the phage clouds use —
+    * [[graft.graph.Algorithms.connectedComponents]]);
     * the keeper is the minimum doc id per cluster. Every document gets a
     * row: unpaired docs are their own singleton cluster and are kept.
     * `d_dedup_clusters`.

@@ -265,9 +265,9 @@ object Similarity {
     * ones made deterministic: core = |N_eps(p)| ≥ minPts (self
     * included); cluster label = MIN core id of the core's connected
     * component (via the shared [[graft.graph.Algorithms
-    * .connectedComponents]] hash-to-min kernel over core–core
-    * eps-edges); border points join the SMALLEST cluster label among
-    * their core neighbours (textbook DBSCAN leaves border assignment
+    * .connectedComponents]] kernel over core–core eps-edges); border
+    * points join the SMALLEST cluster label among their core
+    * neighbours (textbook DBSCAN leaves border assignment
     * scan-order-dependent — min is the order-free choice the oracle
     * can replay); everything else is noise (cluster −1).
     *
@@ -382,9 +382,9 @@ object Similarity {
     * component appear). A single-linkage cut at cos ≥ t IS the
     * connected components of the t-thresholded similarity graph, so
     * the ladder composes the [[graft.graph.Clouds.thresholdSweepOn]]
-    * idiom one block over: the STRICTEST cut runs the O(log²)
-    * star-contraction CC kernel on its (smallest) edge set, and each
-    * looser cut contracts only its (t, prev] band edges on the
+    * idiom one block over ([[graft.graph.Algorithms.nestedCut]]): the
+    * STRICTEST cut runs the CC kernel on its (smallest) edge set, and
+    * each looser cut contracts only its [t, prev) band edges on the
     * previous cut's supernode set — never the full graph again.
     * Census columns are label-invariant integers, so the oracle
     * replays each cut with an independent recursive CC. Per-cut label
@@ -409,25 +409,9 @@ object Similarity {
     var prevCut = 2.0 // above any cosine
     val cutCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val perCut = LinkageCuts.map { cut =>
-      val cc =
-        if (prev == null)
-          Algorithms.connectedComponentsStar(nodes,
-            pairs.filter(col("cos_sim") >= cut)
-              .select(col("a").as("src"), col("b").as("dst")))
-        else {
-          val band = pairs
-            .filter(col("cos_sim") >= cut && col("cos_sim") < prevCut)
-            .join(prev.select(col("id").as("a"), col("comp").as("ca")), Seq("a"))
-            .join(prev.select(col("id").as("b"), col("comp").as("cb")), Seq("b"))
-            .select(col("ca").as("src"), col("cb").as("dst"))
-            .filter(col("src") =!= col("dst"))
-          val superCc = Algorithms.connectedComponentsStar(
-            prev.select(col("comp").as("id")).distinct(), band)
-          prev.select(col("id"), col("comp").as("pcomp"))
-            .join(superCc.select(col("id").as("pcomp"), col("comp").as("ncomp")),
-              Seq("pcomp"))
-            .select(col("id"), col("ncomp").as("comp"))
-        }
+      val cc = Algorithms.nestedCut(nodes, prev,
+        pairs.filter(col("cos_sim") >= cut && col("cos_sim") < prevCut)
+          .select(col("a").as("src"), col("b").as("dst")))
       prev = Algorithms.freshStats(cc).localCheckpoint(true)
       cutCks += prev
       prevCut = cut

@@ -222,24 +222,28 @@ class AlgorithmsSpec extends SparkSpec {
     assert(got(5L).isEmpty && got(6L).isEmpty, "unreachable stays null")
   }
 
-  test("star-contraction CC agrees with hash-to-min on adversarial chains") {
+  private def ccLabels(nodes: org.apache.spark.sql.DataFrame,
+                       edges: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Algorithms.connectedComponents(nodes, edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connected components collapse a descending chain on both gate sides") {
     // a chain whose ids DESCEND along the path is label propagation's
     // worst case (the min creeps one hop per round); the star kernel's
     // round bound is shape-independent. 200 nodes: ids 200→1 chained,
-    // plus a clique, plus isolated nodes.
+    // plus a clique, plus isolated nodes — the driver union-find and
+    // the forced distributed loop must both give the expected labels
     val chain = (200L to 2L by -1).map(i => (i, i - 1))
     val clique = Seq((300L, 301L), (300L, 302L), (301L, 302L))
     val nodes = ((1L to 200L) ++ Seq(300L, 301L, 302L, 400L)).toDF("id")
     val edges = (chain ++ clique).toDF("src", "dst")
-    val star = Algorithms.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 200L).forall(star(_) == 1L), "chain collapses to min id 1")
-    assert(Seq(300L, 301L, 302L).forall(star(_) == 300L))
-    assert(star(400L) == 400L, "isolated node keeps itself")
-    // contract parity with the main kernel on the same input
-    val htm = Algorithms.connectedComponents(nodes, edges, maxIter = 256)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == htm, "both kernels share the (id, min-member) contract")
+    val expected = ((1L to 200L).map(_ -> 1L) ++
+      Seq(300L, 301L, 302L).map(_ -> 300L) :+ (400L -> 400L)).toMap
+    val viaDriver = ccLabels(nodes, edges)
+    val viaLoop = Gates.within(edges = 0L)(ccLabels(nodes, edges))
+    assert(viaDriver == expected,
+      "chain collapses to min id 1, clique to 300, isolated node keeps itself")
+    assert(viaLoop == expected, "the distributed loop shares the contract")
   }
 
   test("star CC: gated driver union-find equals the distributed loop") {
@@ -255,23 +259,18 @@ class AlgorithmsSpec extends SparkSpec {
     } ++ Seq((5L, 5L)) // self loop must be dropped by both paths
     val nodes = (0L to 130L).toDF("id") // 121..130 isolated
     val edges = raw.toDF("src", "dst")
-    val viaDriver = Algorithms.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLoop = Gates.within(edges = 0L) {
-      Algorithms.connectedComponentsStar(nodes, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    val viaDriver = ccLabels(nodes, edges)
+    val viaLoop = Gates.within(edges = 0L)(ccLabels(nodes, edges))
     assert(viaDriver == viaLoop)
     assert((121L to 130L).forall(viaDriver(_) >= 121L), "isolated keep selves")
-    // and the hash-to-min kernel's twin gate on the same input
-    val htmDriver = Algorithms.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val htmLoop = Gates.within(edges = 0L) {
-      Algorithms.connectedComponents(nodes, edges, maxIter = 256)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    assert(htmDriver == htmLoop)
-    assert(htmDriver == viaDriver, "all four paths share the min-member contract")
+    // labels relay through EVERY edge endpoint: nodes 5 and 7 meet only
+    // through endpoint 1, which is not a node row — both paths
+    val offNodes = nodesDf(5, 7, 9)
+    val offEdges = Seq((1L, 5L), (1L, 7L)).toDF("src", "dst")
+    val offExpected = Map(5L -> 1L, 7L -> 1L, 9L -> 9L)
+    assert(ccLabels(offNodes, offEdges) == offExpected)
+    assert(Gates.within(edges = 0L)(ccLabels(offNodes, offEdges)) == offExpected,
+      "the distributed loop relays through an off-node endpoint too")
   }
 
   test("hop distances: image-gated BFS equals the distributed loop") {

@@ -42,10 +42,13 @@ class GraphPropertySpec extends SparkSpec {
         val root = find(i)
         i.toLong -> (0 until n).filter(j => find(j) == root).min.toLong
       }.toMap
-      val got = Algorithms.connectedComponents(
+      def labels() = Algorithms.connectedComponents(
         (0L until n.toLong).toDF("id"), edgeDf(edges)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"seed=$seed edges=$edges")
+      assert(labels() == expected, s"seed=$seed edges=$edges")
+      // the same reference for the forced distributed loop
+      assert(Gates.within(edges = 0L)(labels()) == expected,
+        s"distributed: seed=$seed edges=$edges")
     }
   }
 
