@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{Clouds, TestGraph}
 
@@ -74,9 +74,19 @@ object Cloud {
     val dir = a.data.orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse(
       throw new IllegalArgumentException(
         "no data dir: pass --data or set SPARK_GRAFT_SF_DIR"))
-    def writeJson(df: DataFrame, path: String): String = {
-      df.write.mode("overwrite").json(path); path
-    }
+    // each mode builds its cloud's nodes and edges once and writes both
+    // JSON directories (and the taxon page) from that build; family and
+    // host nodes carry (phage, color, size, title), edges the pyvis attrs
+    def writeCloud(plan: Clouds.CloudPlan, d: Double, out: String,
+               color: Column, title: Column): Seq[String] =
+      Clouds.buildOnce(plan) { (nodes, edges) =>
+        Clouds.writeJson(
+          nodes.select(col("phage"), color.as("color"),
+            floor(col("genome_size") / TestGraph.SizeScaleFactor).cast("long").as("size"),
+            title.as("title")),
+          edges.select(Seq(col("src"), col("dst")) ++
+            Clouds.edgeAttrs(lit(d) - col("distance") + lit(0.1)): _*), out)
+      }
     (a.family, a.host) match {
       case (Some(fam), None) => // FAMILY mode
         val rank = a.taxon.getOrElse(throw new IllegalArgumentException(
@@ -90,21 +100,10 @@ object Cloud {
         val out = a.out.getOrElse(
           s"${stem(fam, d)}_${a.taxon.getOrElse(rank)}_clouds")
         // family.py:109 node title + the per-rank palette colouring
-        val nodes = Clouds.familyNodes(spark, dir, fam, d, rank)
-          .select(col("phage"), col("color"),
-            floor(col("genome_size") / TestGraph.SizeScaleFactor)
-              .cast("long").as("size"),
-            concat(lit("Source: "), col("source"),
-              lit("<br>Genome size: "), col("genome_size"),
-              lit(s"<br>$rank: "), coalesce(col("target_taxon").cast("string"),
-                lit("NA"))).as("title"))
-        Seq(writeJson(nodes, s"$out/nodes"),
-          writeJson(Clouds.familyEdges(spark, dir, fam, d)
-            .select(col("src"), col("dst"),
-              col("value").cast("decimal(12,6)").as("value"),
-              lit("lightgray").as("color"),
-              col("distance").cast("decimal(12,6)").cast("string").as("title")),
-            s"$out/edges"))
+        writeCloud(Clouds.familyPlan(spark, dir, fam, d, rank), d, out, col("color"),
+          concat(lit("Source: "), col("source"),
+            lit("<br>Genome size: "), col("genome_size"),
+            lit(s"<br>$rank: "), coalesce(col("target_taxon").cast("string"), lit("NA"))))
       case (None, Some(hg)) => // HOST mode
         val d = a.dist.orElse(a.taxon.map(_.toDouble)).getOrElse(0.25)
         val out = a.out.getOrElse(
@@ -117,34 +116,17 @@ object Cloud {
         val color = colorMap.foldLeft(lit("#ffffff")) {
           case (e, (s, c)) => when(col("source") === s, c).otherwise(e)
         }
-        val nodes = Clouds.hostCloud(spark, dir, a.harsh, hg, d)
-          .select(col("phage"), color.as("color"),
-            floor(col("genome_size") / TestGraph.SizeScaleFactor)
-              .cast("long").as("size"),
-            concat(lit("Target host genus: "),
-              coalesce(col("host_genus").cast("string"), lit("NA")),
-              lit("<br>Phage genus: "),
-              coalesce(col("phage_genus").cast("string"), lit("NA")),
-              lit("<br>Genome size: "), col("genome_size"),
-              lit(" bp")).as("title"))
-        Seq(writeJson(nodes, s"$out/nodes"),
-          writeJson(Clouds.hostEdges(spark, dir, a.harsh, hg, d)
-            .select(col("src"), col("dst"),
-              (lit(d) - col("distance") + lit(0.1))
-                .cast("decimal(12,6)").as("value"),
-              lit("lightgray").as("color"),
-              col("distance").cast("decimal(12,6)").cast("string").as("title")),
-            s"$out/edges"))
+        writeCloud(Clouds.hostPlan(spark, dir, a.harsh, hg, d), d, out, color,
+          concat(lit("Target host genus: "),
+            coalesce(col("host_genus").cast("string"), lit("NA")),
+            lit("<br>Phage genus: "),
+            coalesce(col("phage_genus").cast("string"), lit("NA")),
+            lit("<br>Genome size: "), col("genome_size"), lit(" bp")))
       case (None, None) => // TAXON mode
         val tax = a.taxon.getOrElse(
           throw new IllegalArgumentException("no mode selected\n" + usage))
         val d = a.dist.getOrElse(0.25)
-        val out = a.out.getOrElse(s"${stem(tax, d)}_clouds")
-        val written = Seq(
-          writeJson(Clouds.vizExport(spark, dir, tax, d), s"$out/nodes"),
-          writeJson(Clouds.vizExportEdges(spark, dir, tax, d), s"$out/edges"))
-        a.html.foreach { f => Clouds.exportCloudHtml(spark, dir, f, tax, d) }
-        written ++ a.html.toSeq
+        Clouds.exportTaxon(spark, dir, a.out.getOrElse(s"${stem(tax, d)}_clouds"), tax, d, a.html)
       case _ => throw new IllegalArgumentException(
         "pass at most one of -f / -g\n" + usage)
     }

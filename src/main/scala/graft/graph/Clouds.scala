@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Gates
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -19,92 +19,116 @@ object Clouds {
   // parameters (the reference scripts take them as CLI args,
   // phageclouds_gdb.py:46-47); the defaults are the oracle-checked
   // instance the driver gate runs.
-  private def seeds(spark: SparkSession, dir: String, taxon: String): DataFrame =
-    phageNodes(spark, dir)
-      .filter(col("source") === Ncbi && col("taxonomy").contains(taxon))
+
+  /** gdb.py:56 / family.py:94 seed rule: NCBI genomes whose taxonomy
+    * contains `key`. */
+  private def ncbi(key: String)(g: DataFrame): DataFrame =
+    g.filter(col("source") === Ncbi && col("taxonomy").contains(key))
+
+  /** host.py:57 seed rule: genomes infecting host genus `genus` (a semi
+    * join to the broadcast `hosts` dimension), minus GTDB when `harsh`. */
+  private def infecting(spark: SparkSession, dir: String, genus: String, harsh: Boolean)(
+      g: DataFrame): DataFrame = {
+    val inf = g.join(broadcast(hosts(spark, dir).filter(col("genus") === genus)),
+      col("hostkey") === col("host_id"), "left_semi")
+    if (harsh) inf.filter(col("source") =!= Gtdb) else inf
+  }
 
   /** gdb.py:56-58 — `MATCH (a:PhageGenome {source:'NCBI'})-[r:sharesDNA]->(b)
     * WHERE a.taxonomy CONTAINS t AND r.distance <= d RETURN a,b`. */
   def taxonCloud(spark: SparkSession, dir: String,
-                 taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame =
-    graph(spark, dir)
-      .expandFrom(seeds(spark, dir, taxon), col("distance") <= threshold)
-      .select(col("id").as("seed_phage"), col("dst").as("target_phage"))
+                 taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame = {
+    val g = genomes(spark, dir)
+    dnaPairs(ncbi(taxon)(g), g, threshold)
+      .select(col("src").as("seed_phage"), col("dst").as("target_phage"))
       .orderBy(col("seed_phage"), col("target_phage"))
-
-  /** The cloud's node-id set (union of both endpoints, gdb.py:62). */
-  private def taxonCloudIds(spark: SparkSession, dir: String,
-                            taxon: String, threshold: Double): DataFrame = {
-    val cloud = graph(spark, dir)
-      .expandFrom(seeds(spark, dir, taxon), col("distance") <= threshold)
-    cloud.select(col("id")).union(cloud.select(col("dst").as("id"))).distinct()
   }
+
+  /** A cloud's ids keyed by (hostkey, id), for all three seed rules: the
+    * 1-hop joins the seed rows, as `src`, to the genome rows `g` on the
+    * sharesDNA bucket ([[TestGraph.dnaPairs]]); the ids are both hop ends
+    * plus, when `keepSeeds`, every seed (family.py:94's OPTIONAL MATCH). */
+  private def cloudIds(g: DataFrame, seedRule: DataFrame => DataFrame,
+                       threshold: Double, keepSeeds: Boolean): DataFrame = {
+    val s = seedRule(g)
+    val hop = dnaPairs(s, g, threshold)
+      .select(col("hostkey"), explode(array(col("src"), col("dst"))).as("id"))
+    (if (keepSeeds) hop.union(s.select(col("hostkey"), col("id"))) else hop).distinct()
+  }
+
+  /** One cloud request: `rows` (the genome scan semi-joined to
+    * [[cloudIds]] on (hostkey, id)), projected to nodes by `nodesOf` and
+    * self-joined to the [[induced]] edges by `edgesOf`. */
+  private[graft] final case class CloudPlan(rows: DataFrame, nodesOf: DataFrame => DataFrame,
+                                            edgesOf: DataFrame => DataFrame) {
+    def nodes: DataFrame = nodesOf(rows)
+    def edges: DataFrame = edgesOf(rows)
+  }
+
+  private def plan(spark: SparkSession, dir: String, seedRule: DataFrame => DataFrame,
+                   threshold: Double, keepSeeds: Boolean = false)(
+      nodesOf: DataFrame => DataFrame, edgesOf: DataFrame => DataFrame): CloudPlan = {
+    val g = genomes(spark, dir)
+    CloudPlan(g.join(cloudIds(g, seedRule, threshold, keepSeeds), Seq("hostkey", "id"),
+      "left_semi"), nodesOf, edgesOf)
+  }
+
+  /** The edges among a cloud's rows (gdb.py:64-67): the sharesDNA bucket
+    * self-join of those rows alone. Exact, since a sharesDNA edge is a
+    * same-bucket pair passing a per-pair filter; Catalyst cannot derive
+    * it (a semi-join on `src`, `dst` does not push through a self-join).
+    * `valued` adds the pyvis value `thres − distance + 0.1`. */
+  private def induced(threshold: Double, valued: Boolean)(rows: DataFrame): DataFrame = {
+    val e = dnaPairs(rows, rows, threshold).select(col("src"), col("dst"), col("distance"))
+    (if (valued) e.withColumn("value", lit(threshold) - col("distance") + lit(0.1)) else e)
+      .orderBy(col("src"), col("dst"))
+  }
+
+  private[graft] def taxonPlan(spark: SparkSession, dir: String,
+                               taxon: String, threshold: Double): CloudPlan =
+    plan(spark, dir, ncbi(taxon), threshold)(
+      _.select(
+        col("id").as("phage"), col("source"), col("genome_size"),
+        col("taxonomy").contains(taxon).as("is_taxon"),
+        when(col("source") === Ncbi && col("taxonomy").contains(taxon), "green")
+          .when(col("source") === Ncbi, "red")
+          .when(col("source") === Tara, "cyan")
+          .when(col("source") === GpdIsolate, "pink")
+          .when(col("source") === GpdMetagenome, "purple")
+          .otherwise("yellow").as("color"),
+        floor(col("genome_size") / SizeScaleFactor).cast("long").as("size"))
+        .orderBy(col("phage")),
+      induced(threshold, valued = true))
+
+  // Each cloud view plans its own request ([[CloudPlan]]): 1-hop, cloud
+  // rows, then their projection or [[induced]] edges; no call shares.
 
   /** gdb.py:71-100 — induced node metadata + viz colour/size enrichment. */
   def cloudNodes(spark: SparkSession, dir: String,
-                 taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame = {
-    val g = graph(spark, dir)
-      .inducedSubgraph(taxonCloudIds(spark, dir, taxon, threshold))
-    g.nodes.select(
-      col("id").as("phage"), col("source"), col("genome_size"),
-      col("taxonomy").contains(taxon).as("is_taxon"),
-      when(col("source") === Ncbi && col("taxonomy").contains(taxon), "green")
-        .when(col("source") === Ncbi, "red")
-        .when(col("source") === Tara, "cyan")
-        .when(col("source") === GpdIsolate, "pink")
-        .when(col("source") === GpdMetagenome, "purple")
-        .otherwise("yellow").as("color"),
-      floor(col("genome_size") / SizeScaleFactor).cast("long").as("size"))
-      .orderBy(col("phage"))
-  }
+                 taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame =
+    taxonPlan(spark, dir, taxon, threshold).nodes
 
   /** gdb.py:64-67 + 112-116 — induced-subgraph edges at the threshold,
     * with the pyvis edge value `thres − distance + 0.1`. */
   def cloudEdges(spark: SparkSession, dir: String,
                  taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame =
-    graph(spark, dir)
-      .filterEdges(col("distance") <= threshold)
-      .inducedSubgraph(taxonCloudIds(spark, dir, taxon, threshold))
-      .edges
-      .select(col("src"), col("dst"), col("distance"),
-        (lit(threshold) - col("distance") + lit(0.1)).as("value"))
-      .orderBy(col("src"), col("dst"))
+    taxonPlan(spark, dir, taxon, threshold).edges
 
   /** family.py:94 — OPTIONAL MATCH + collect-union-dedup:
     * `MATCH (p {source:'NCBI'}) WHERE p.taxonomy CONTAINS f
     *  OPTIONAL MATCH (p)-[r]->(q) WHERE r.distance <= d
     *  RETURN target_phages + [x IN connected WHERE NOT x IN target]`. */
   def familyCloud(spark: SparkSession, dir: String,
-                  family: String = Family, threshold: Double = QueryThreshold): DataFrame = {
-    val s = seeds(spark, dir, family)
-    val expanded = graph(spark, dir)
-      .optionalExpandFrom(s, col("distance") <= threshold)
-    s.select(col("id"))
-      .union(expanded.filter(col("dst").isNotNull).select(col("dst").as("id")))
-      .distinct()
+                  family: String = Family, threshold: Double = QueryThreshold): DataFrame =
+    cloudIds(genomes(spark, dir), ncbi(family), threshold, keepSeeds = true)
       .select(col("id").as("phage_node"))
       .orderBy(col("phage_node"))
-  }
 
-  /** family.py:97-105 — the family cloud's node metadata, enriched with
-    * the two-level taxonomic lineage lookup (accession→taxid→rank in the
-    * reference, hostkey→nation→region here) and the reference's
-    * two-level colouring: NCBI nodes get a palette id per lineage bucket
-    * (`color_phage_tax`), everything else is white.
-    *
-    * `colorRank` mirrors the reference's `-t subfamily|genus` flag
-    * (phageclouds_gdb_family.py:83): it picks WHICH lineage rank buckets
-    * the palette — "family" colours by the coarser family-level key
-    * (region here), "genus" by the finer genus-level key (nation). Same
-    * plan either way; only the palette-key column changes. */
-  def familyNodes(spark: SparkSession, dir: String,
-                  family: String = Family, threshold: Double = QueryThreshold,
-                  colorRank: String = "family",
-                  lineageLookup: Option[DataFrame] = None): DataFrame = {
+  private[graft] def familyPlan(spark: SparkSession, dir: String, family: String,
+                                threshold: Double, colorRank: String = "family",
+                                lineageLookup: Option[DataFrame] = None): CloudPlan = {
     require(colorRank == "family" || colorRank == "genus",
       s"colorRank must be 'family' or 'genus', got '$colorRank'")
-    val ids = familyCloud(spark, dir, family, threshold)
-      .select(col("phage_node").as("id"))
     // the lookup is source-pluggable, like the reference's CSV taxid
     // file (family.py:102): any DataFrame with
     // (host_id, genus_name, family_key, family_name) works — CSV, JDBC,
@@ -112,77 +136,60 @@ object Clouds {
     val look = lineageLookup.getOrElse(lineage(spark, dir))
     val paletteKey =
       if (colorRank == "genus") col("host_id") else col("family_key")
-    phageNodes(spark, dir)
-      .join(ids, Seq("id"), "left_semi")
-      .join(broadcast(look), col("hostkey") === col("host_id"), "left_outer")
-      .select(
-        col("id").as("phage"), col("source"), col("genome_size"),
-        col("taxonomy").as("lineage"),
-        col("genus_name").as("target_taxon"),
-        when(col("source") === Ncbi,
-          concat(lit("C"), paletteKey.cast("string")))
-          .otherwise("#FFFFFF").as("color"))
-      .orderBy(col("phage"))
+    plan(spark, dir, ncbi(family), threshold, keepSeeds = true)(
+      _.join(broadcast(look), col("hostkey") === col("host_id"), "left_outer")
+        .select(
+          col("id").as("phage"), col("source"), col("genome_size"),
+          col("taxonomy").as("lineage"),
+          col("genus_name").as("target_taxon"),
+          when(col("source") === Ncbi,
+            concat(lit("C"), paletteKey.cast("string")))
+            .otherwise("#FFFFFF").as("color"))
+        .orderBy(col("phage")),
+      induced(threshold, valued = true))
   }
 
-  /** host.py:57-63 — seed = phages with `(a)-[:infects]->(:Host {genus})`
-    * (pattern existence = semi join through the FK), threshold expand,
-    * union node set, then node metadata incl. the host genus
-    * (OPTIONAL MATCH (a)-[:infects]->(h) → left outer join). */
-  /** The host cloud's node-id set (host.py:57-59 collect-union). */
-  private def hostCloudIds(spark: SparkSession, dir: String, harsh: Boolean,
-                           hostGenus: String, threshold: Double): DataFrame = {
-    val g = graph(spark, dir)
-    val host = hosts(spark, dir).filter(col("genus") === hostGenus)
-    val infecting = g.nodes
-      .join(broadcast(host), col("hostkey") === col("host_id"), "left_semi")
-    val seedSet = if (harsh) infecting.filter(col("source") =!= Gtdb) else infecting
-    val expanded = g.expandFrom(seedSet, col("distance") <= threshold)
-    expanded.select(col("id"))
-      .union(expanded.select(col("dst").as("id"))).distinct()
-  }
+  /** family.py:97-105 — the family cloud's node metadata, enriched with
+    * the two-level lineage lookup (accession→taxid→rank in the reference,
+    * hostkey→nation→region here): NCBI nodes get a palette id per lineage
+    * bucket (`color_phage_tax`), everything else is white. `colorRank`
+    * mirrors the reference's `-t subfamily|genus` flag (family.py:83):
+    * "family" colours by the region key, "genus" by the nation key. */
+  def familyNodes(spark: SparkSession, dir: String,
+                  family: String = Family, threshold: Double = QueryThreshold,
+                  colorRank: String = "family",
+                  lineageLookup: Option[DataFrame] = None): DataFrame =
+    familyPlan(spark, dir, family, threshold, colorRank, lineageLookup).nodes
 
-  def hostCloud(spark: SparkSession, dir: String, harsh: Boolean,
-                hostGenus: String = HostGenus, threshold: Double = QueryThreshold): DataFrame = {
-    val g = graph(spark, dir)
-    // cloud id set is unbounded → shuffled semi-join (AQE may still pick
-    // broadcast at runtime); the nation-shaped host table IS a dimension.
-    val ids = hostCloudIds(spark, dir, harsh, hostGenus, threshold)
-    g.nodes.join(ids, Seq("id"), "left_semi")
-      .join(broadcast(hosts(spark, dir)
+  private[graft] def hostPlan(spark: SparkSession, dir: String, harsh: Boolean,
+                              hostGenus: String, threshold: Double): CloudPlan =
+    plan(spark, dir, infecting(spark, dir, hostGenus, harsh), threshold)(
+      _.join(broadcast(hosts(spark, dir)
           .select(col("host_id"), col("genus").as("host_genus"))),
         col("hostkey") === col("host_id"), "left_outer")
-      .select(col("id").as("phage"), col("source"), col("genome_size"),
-        col("genus").as("phage_genus"), col("host_genus"))
-      .orderBy(col("phage"))
-  }
+        .select(col("id").as("phage"), col("source"), col("genome_size"),
+          col("genus").as("phage_genus"), col("host_genus"))
+        .orderBy(col("phage")),
+      induced(threshold, valued = false))
+
+  /** host.py:57-63 — seed = phages with `(a)-[:infects]->(:Host {genus})`,
+    * threshold expand, union node set, then node metadata incl. the host
+    * genus (OPTIONAL MATCH (a)-[:infects]->(h) → left outer join). */
+  def hostCloud(spark: SparkSession, dir: String, harsh: Boolean,
+                hostGenus: String = HostGenus, threshold: Double = QueryThreshold): DataFrame =
+    hostPlan(spark, dir, harsh, hostGenus, threshold).nodes
 
   /** family.py:98 + 116-120 — the induced edge list among the
-    * family-cloud nodes, with the pyvis `value = thres − distance +
-    * 0.1` attr (the same enrichment [[cloudEdges]] carries for the
-    * taxon cloud). CLI surface ([[graft.Cloud]] family mode); the
-    * registry's `g_family_cloud`/`g_family_nodes*` keys cover the
-    * node-side semantics. */
+    * family-cloud nodes, valued like [[cloudEdges]] ([[graft.Cloud]]'s
+    * family mode; no registry key). */
   def familyEdges(spark: SparkSession, dir: String,
                   family: String = Family, threshold: Double = QueryThreshold): DataFrame =
-    graph(spark, dir)
-      .filterEdges(col("distance") <= threshold)
-      .inducedSubgraph(familyCloud(spark, dir, family, threshold)
-        .select(col("phage_node").as("id")))
-      .edges
-      .select(col("src"), col("dst"), col("distance"),
-        (lit(threshold) - col("distance") + lit(0.1)).as("value"))
-      .orderBy(col("src"), col("dst"))
+    familyPlan(spark, dir, family, threshold).edges
 
   /** host.py:64 — the induced edge list among the host-cloud nodes. */
   def hostEdges(spark: SparkSession, dir: String, harsh: Boolean = false,
                 hostGenus: String = HostGenus, threshold: Double = QueryThreshold): DataFrame =
-    graph(spark, dir)
-      .filterEdges(col("distance") <= threshold)
-      .inducedSubgraph(hostCloudIds(spark, dir, harsh, hostGenus, threshold))
-      .edges
-      .select(col("src"), col("dst"), col("distance"))
-      .orderBy(col("src"), col("dst"))
+    hostPlan(spark, dir, harsh, hostGenus, threshold).edges
 
   def edgesBuild(spark: SparkSession, dir: String): DataFrame =
     sharesDna(spark, dir).orderBy(col("src"), col("dst"))
@@ -192,7 +199,7 @@ object Clouds {
 
   def twoHop(spark: SparkSession, dir: String): DataFrame =
     graph(spark, dir)
-      .hopFrontier(seeds(spark, dir, Taxon), 2, col("distance") <= QueryThreshold)
+      .hopFrontier(ncbi(Taxon)(phageNodes(spark, dir)), 2, col("distance") <= QueryThreshold)
       .select(col("id").as("node"))
       .orderBy(col("node"))
 
@@ -314,7 +321,7 @@ object Clouds {
     val g = graph(spark, dir)
     Algorithms.personalizedPageRank(g.nodes,
       g.edges.filter(col("distance") <= QueryThreshold),
-      seeds(spark, dir, Taxon))
+      ncbi(Taxon)(phageNodes(spark, dir)))
       .orderBy(col("id"))
   }
 
@@ -746,13 +753,13 @@ object Clouds {
     * is a 3-row literal, so nothing here is quadratic in anything.
     * `g_cloud_overlap`. */
   def cloudOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val tagged =
-      taxonCloudIds(spark, dir, Taxon, QueryThreshold)
-        .withColumn("tag", lit("taxon"))
-      .union(hostCloudIds(spark, dir, harsh = false, HostGenus, QueryThreshold)
-        .withColumn("tag", lit("host")))
-      .union(hostCloudIds(spark, dir, harsh = true, HostGenus, QueryThreshold)
-        .withColumn("tag", lit("host_harsh")))
+    val g = genomes(spark, dir)
+    def ids(seedRule: DataFrame => DataFrame, tag: String) =
+      cloudIds(g, seedRule, QueryThreshold, keepSeeds = false)
+        .select(col("id"), lit(tag).as("tag"))
+    val tagged = ids(ncbi(Taxon), "taxon")
+      .union(ids(infecting(spark, dir, HostGenus, harsh = false), "host"))
+      .union(ids(infecting(spark, dir, HostGenus, harsh = true), "host_harsh"))
       .localCheckpoint(true) // three consumers: sizes + both join sides
     val sizes = tagged.groupBy(col("tag")).agg(count(lit(1)).as("n"))
     val common = tagged.select(col("id"), col("tag").as("cloud_a"))
@@ -1273,7 +1280,7 @@ object Clouds {
                 taxon: String = Taxon): DataFrame = {
     val g = graph(spark, dir)
     Algorithms.hopDistances(
-      seeds(spark, dir, taxon).select(col("id")),
+      ncbi(taxon)(phageNodes(spark, dir)).select(col("id")),
       g.symmetrizedEdges.filter(col("distance") <= QueryThreshold), k)
       .filter(col("d") >= 1)
       .select(col("seed").as("seed_phage"), col("id").as("reached"),
@@ -2048,7 +2055,7 @@ object Clouds {
     val sym = g.copy(edges =
       g.symmetrizedEdges.filter(col("distance") <= QueryThreshold)
         .withColumnRenamed("distance", "weight"))
-    Algorithms.shortestPaths(sym.nodes, sym.edges, seeds(spark, dir, Taxon))
+    Algorithms.shortestPaths(sym.nodes, sym.edges, ncbi(Taxon)(phageNodes(spark, dir)))
       .filter(col("dist").isNotNull)
       .orderBy(col("id"))
   }
@@ -2057,7 +2064,10 @@ object Clouds {
     * per node of the taxon cloud. */
   def vizExport(spark: SparkSession, dir: String,
                 taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame =
-    cloudNodes(spark, dir, taxon, threshold).select(
+    vizNodes(cloudNodes(spark, dir, taxon, threshold))
+
+  private def vizNodes(nodes: DataFrame): DataFrame =
+    nodes.select(
       col("phage"),
       to_json(struct(
         col("size"),
@@ -2079,25 +2089,56 @@ object Clouds {
     * disagree (at 4 dp, 0.16195 did exactly that). */
   def vizExportEdges(spark: SparkSession, dir: String,
                      taxon: String = Taxon, threshold: Double = QueryThreshold): DataFrame =
-    cloudEdges(spark, dir, taxon, threshold).select(
-      col("src"), col("dst"),
-      to_json(struct(
-        col("value").cast("decimal(12,6)").as("value"),
-        lit("lightgray").as("color"),
-        col("distance").cast("decimal(12,6)").cast("string").as("title"))).as("attrs"))
+    vizEdges(cloudEdges(spark, dir, taxon, threshold))
+
+  private def vizEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), to_json(struct(edgeAttrs(col("value")): _*)).as("attrs"))
       .orderBy(col("src"), col("dst"))
+
+  /** The pyvis edge attrs of [[vizExportEdges]] and the CLI's family and
+    * host edges: `value`, lightgray, and the distance as the title. */
+  private[graft] def edgeAttrs(value: Column): Seq[Column] = Seq(
+    value.cast("decimal(12,6)").as("value"), lit("lightgray").as("color"),
+    col("distance").cast("decimal(12,6)").cast("string").as("title"))
+
+  /** Runs `write` over one build of a request's nodes and edges: the
+    * cloud's rows, then nodes and edges over them, each materialized once
+    * by [[Algorithms.loopCheckpoint]], so an export's JSON writes and
+    * HTML collects share it. All three are released when `write` ends. */
+  private[graft] def buildOnce[T](p: CloudPlan)(write: (DataFrame, DataFrame) => T): T = {
+    var built = List.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val ck = Algorithms.loopCheckpoint(df); built ::= ck; ck
+    }
+    try {
+      val rows = pin(p.rows)
+      write(pin(p.nodesOf(rows)), pin(p.edgesOf(rows)))
+    } finally built.foreach(Algorithms.releaseLineage)
+  }
+
+  /** Writes nodes and edges as the JSON-lines directories `<outPath>/nodes`
+    * and `<outPath>/edges` (one part per task); returns both paths. */
+  private[graft] def writeJson(nodes: DataFrame, edges: DataFrame, outPath: String): Seq[String] =
+    Seq("nodes" -> nodes, "edges" -> edges).map { case (part, df) =>
+      df.write.mode("overwrite").json(s"$outPath/$part"); s"$outPath/$part"
+    }
 
   /** Sink analogue of the reference's `pyvis_graph.save_graph(...)`
     * (gdb.py:118-120): persists the cloud's node and edge viz attrs as
-    * JSON-lines directories — distributed write, one part per task,
-    * ready for any renderer. */
+    * JSON-lines directories from one build of the cloud. */
   def exportCloud(spark: SparkSession, dir: String, outPath: String,
-                  taxon: String = Taxon, threshold: Double = QueryThreshold): Unit = {
-    vizExport(spark, dir, taxon, threshold)
-      .write.mode("overwrite").json(s"$outPath/nodes")
-    vizExportEdges(spark, dir, taxon, threshold)
-      .write.mode("overwrite").json(s"$outPath/edges")
-  }
+                  taxon: String = Taxon, threshold: Double = QueryThreshold): Unit =
+    exportTaxon(spark, dir, outPath, taxon, threshold, html = None)
+
+  /** [[exportCloud]] plus, at `html`, the default [[exportCloudHtml]] page
+    * from the same build; returns the paths written ([[graft.Cloud]]). */
+  private[graft] def exportTaxon(spark: SparkSession, dir: String, outPath: String,
+                                 taxon: String, threshold: Double,
+                                 html: Option[String]): Seq[String] =
+    buildOnce(taxonPlan(spark, dir, taxon, threshold)) { (nodes, edges) =>
+      writeJson(vizNodes(nodes), vizEdges(edges), outPath) ++
+        html.map { f => writePage(nodes, edges, f); f }
+    }
 
   /** Physics solvers the HTML export accepts — pyvis's barnes_hut /
     * force_atlas_2based options (gdb.py:102-105 configures exactly
@@ -2120,13 +2161,19 @@ object Clouds {
                       controls: Boolean = true): Unit = {
     require(PhysicsSolvers(solver),
       s"solver must be one of $PhysicsSolvers, got '$solver'")
+    buildOnce(taxonPlan(spark, dir, taxon, threshold))(
+      writePage(_, _, outFile, solver, controls))
+  }
+
+  private def writePage(nodes: DataFrame, edges: DataFrame, outFile: String,
+                        solver: String = "forceAtlas2Based", controls: Boolean = true): Unit = {
     def jsonArray(df: DataFrame): String =
       df.toJSON.collect().mkString("[", ",\n", "]")
-    val nodes = jsonArray(cloudNodes(spark, dir, taxon, threshold).select(
+    val nodeJson = jsonArray(nodes.select(
       col("phage").as("id"), col("phage").cast("string").as("label"),
       floor(col("genome_size") / SizeScaleFactor).cast("long").as("size"),
       col("color")))
-    val edges = jsonArray(cloudEdges(spark, dir, taxon, threshold).select(
+    val edgeJson = jsonArray(edges.select(
       col("src").as("from"), col("dst").as("to"), col("value")))
     val configure =
       if (controls)
@@ -2141,8 +2188,8 @@ object Clouds {
          |<style>#cloud{width:1500px;height:1500px;border:1px solid #ddd}
          |#controls{width:1500px;max-height:400px;overflow-y:auto}</style>
          |</head><body><div id="cloud"></div><div id="controls"></div><script>
-         |const nodes = new vis.DataSet($nodes);
-         |const edges = new vis.DataSet($edges);
+         |const nodes = new vis.DataSet($nodeJson);
+         |const edges = new vis.DataSet($edgeJson);
          |new vis.Network(document.getElementById("cloud"), {nodes, edges},
          |  {${configure}physics: {solver: "$solver"}});
          |</script></body></html>""".stripMargin
@@ -2176,25 +2223,13 @@ object Clouds {
            AND r.distance <= 0.10),
        cloud_ids AS (SELECT s AS id FROM cloud UNION SELECT t FROM cloud)"""
 
-  private def hostOracle(harsh: Boolean): String = {
-    val harshPred = if (harsh) " AND a.source <> 'FURNITURE'" else ""
-    s"""$OracleCte,
-       hostset AS (
-         SELECT e.src AS id FROM edges e
-           JOIN nodes a ON a.id = e.src
-           JOIN nation h ON a.hostkey = h.n_nationkey
-         WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10$harshPred
-         UNION
-         SELECT e.dst FROM edges e
-           JOIN nodes a ON a.id = e.src
-           JOIN nation h ON a.hostkey = h.n_nationkey
-         WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10$harshPred)
+  private def hostOracle(harsh: Boolean): String =
+    s"""$OracleCte, ${hostSetCte(harsh)}
        SELECT n.id AS phage, n.source AS source, n.genome_size AS genome_size,
               n.genus AS phage_genus, h.n_name AS host_genus
        FROM nodes n JOIN hostset ON n.id = hostset.id
        LEFT JOIN nation h ON n.hostkey = h.n_nationkey
        ORDER BY phage"""
-  }
 
   /** Family-cloud node-metadata oracle; `genusRank` mirrors
     * [[familyNodes]]'s colorRank — the palette key is the nation key
@@ -2203,12 +2238,7 @@ object Clouds {
     val paletteKey =
       if (genusRank) "na.n_nationkey" else "re.r_regionkey"
     s"""$OracleCte,
-       fam AS (
-         SELECT id FROM nodes WHERE source='BUILDING' AND contains(taxonomy,'1')
-         UNION
-         SELECT r.dst FROM nodes s JOIN edges r ON r.src = s.id
-         WHERE s.source='BUILDING' AND contains(s.taxonomy,'1')
-           AND r.distance <= 0.10)
+       fam AS ($FamilySet)
        SELECT n.id AS phage, n.source AS source, n.genome_size AS genome_size,
               n.taxonomy AS lineage,
               na.n_name AS target_taxon,
@@ -2221,18 +2251,38 @@ object Clouds {
        ORDER BY phage"""
   }
 
-  /** Shared hostset CTE body for the host-cloud edge oracle. */
-  private val HostSetCte: String =
-    """hostset AS (
-         SELECT e.src AS id FROM edges e
+  /** The oracles' induced edges at 0.10 among the ids of CTE `set`. */
+  private def inducedSql(set: String): String =
+    s"""FROM edges e JOIN $set s1 ON e.src = s1.id JOIN $set s2 ON e.dst = s2.id
+         WHERE e.distance <= 0.10 ORDER BY src, dst"""
+
+  /** The taxon cloud's viz colour (gdb.py:80-95) of the taxon oracles. */
+  private val TaxonColorSql: String =
+    """CASE WHEN n.source='BUILDING' AND contains(n.taxonomy,'4') THEN 'green'
+         WHEN n.source='BUILDING' THEN 'red' WHEN n.source='AUTOMOBILE' THEN 'cyan'
+         WHEN n.source='MACHINERY' THEN 'pink' WHEN n.source='HOUSEHOLD' THEN 'purple'
+         ELSE 'yellow' END"""
+
+  /** The host cloud's id-set CTE `name` (host.py:57-59) of the oracles. */
+  private def hostSetCte(harsh: Boolean, name: String = "hostset"): String = {
+    val seed = """FROM edges e
            JOIN nodes a ON a.id = e.src
            JOIN nation h ON a.hostkey = h.n_nationkey
-         WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10
+         WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10""" +
+      (if (harsh) " AND a.source <> 'FURNITURE'" else "")
+    s"""$name AS (
+         SELECT e.src AS id $seed
          UNION
-         SELECT e.dst FROM edges e
-           JOIN nodes a ON a.id = e.src
-           JOIN nation h ON a.hostkey = h.n_nationkey
-         WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10)"""
+         SELECT e.dst $seed)"""
+  }
+
+  /** The family cloud's id set (family.py:94) of the family oracles. */
+  private val FamilySet: String =
+    """SELECT id FROM nodes WHERE source='BUILDING' AND contains(taxonomy,'1')
+         UNION
+         SELECT r.dst FROM nodes s JOIN edges r ON r.src = s.id
+         WHERE s.source='BUILDING' AND contains(s.taxonomy,'1')
+           AND r.distance <= 0.10"""
 
   /** Bellman-Ford unrolled to `stages` relaxation CTEs. The converged
     * fixpoint is bitwise engine-independent: every path sum associates
@@ -2875,21 +2925,10 @@ object Clouds {
     "g_louvain" -> louvainOracle(Algorithms.LouvainRounds),
     "g_louvain_weighted" -> louvainWeightedOracle(Algorithms.LouvainRounds),
     "g_community_refine" -> communityRefineOracle(Algorithms.LouvainRounds),
-    "g_cloud_overlap" -> {
-      def hostSetSql(name: String, harshPred: String) =
-        s"""$name AS (
-           SELECT e.src AS id FROM edges e
-             JOIN nodes a ON a.id = e.src
-             JOIN nation h ON a.hostkey = h.n_nationkey
-           WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10$harshPred
-           UNION
-           SELECT e.dst FROM edges e
-             JOIN nodes a ON a.id = e.src
-             JOIN nation h ON a.hostkey = h.n_nationkey
-           WHERE h.n_name = 'NATION_7' AND e.distance <= 0.10$harshPred)"""
+    "g_cloud_overlap" ->
       s"""$OracleCte,
-         ${hostSetSql("hs", "")},
-         ${hostSetSql("hsh", " AND a.source <> 'FURNITURE'")},
+         ${hostSetCte(harsh = false, "hs")},
+         ${hostSetCte(harsh = true, "hsh")},
          tagged AS (
            SELECT 'taxon' AS tag, id FROM cloud_ids
            UNION ALL SELECT 'host', id FROM hs
@@ -2915,8 +2954,7 @@ object Clouds {
          JOIN sizes sb ON sb.tag = p.cloud_b
          LEFT JOIN common c ON c.cloud_a = p.cloud_a
                            AND c.cloud_b = p.cloud_b
-         ORDER BY p.cloud_a, p.cloud_b"""
-    },
+         ORDER BY p.cloud_a, p.cloud_b""",
     "g_mst" -> mstOracle(MstOracleRounds),
     "g_mst_weight" -> mstWeightOracle(MstOracleRounds),
     "g_threshold_sweep" -> thresholdSweepOracle(MstOracleRounds),
@@ -3014,12 +3052,7 @@ object Clouds {
          SELECT n.id AS phage,
                 '{"size":' || CAST(CAST(FLOOR(n.genome_size/3000) AS BIGINT) AS VARCHAR) ||
                 ',"color":{"border":"#000000","background":"' ||
-                CASE WHEN n.source='BUILDING' AND contains(n.taxonomy,'4') THEN 'green'
-                     WHEN n.source='BUILDING' THEN 'red'
-                     WHEN n.source='AUTOMOBILE' THEN 'cyan'
-                     WHEN n.source='MACHINERY' THEN 'pink'
-                     WHEN n.source='HOUSEHOLD' THEN 'purple'
-                     ELSE 'yellow' END || '"}}' AS attrs
+                $TaxonColorSql || '"}}' AS attrs
          FROM nodes n JOIN cloud_ids ci ON n.id = ci.id
          ORDER BY phage""",
     // The numeric attrs are fixed-scale decimals (see vizExportEdges):
@@ -3032,10 +3065,7 @@ object Clouds {
                 CAST(CAST(0.1 - e.distance + 0.1 AS DECIMAL(12,6)) AS VARCHAR) ||
                 ',"color":"lightgray","title":"' ||
                 CAST(CAST(e.distance AS DECIMAL(12,6)) AS VARCHAR) || '"}' AS attrs
-         FROM edges e JOIN cloud_ids s1 ON e.src = s1.id
-                      JOIN cloud_ids s2 ON e.dst = s2.id
-         WHERE e.distance <= 0.10
-         ORDER BY src, dst""",
+         ${inducedSql("cloud_ids")}""",
     "g_edges_build" ->
       s"$OracleCte SELECT src, dst, distance FROM edges ORDER BY src, dst",
     "g_taxon_cloud" ->
@@ -3046,40 +3076,24 @@ object Clouds {
       s"""$OracleCte
          SELECT n.id AS phage, n.source AS source, n.genome_size AS genome_size,
                 contains(n.taxonomy, '4') AS is_taxon,
-                CASE WHEN n.source='BUILDING' AND contains(n.taxonomy,'4') THEN 'green'
-                     WHEN n.source='BUILDING' THEN 'red'
-                     WHEN n.source='AUTOMOBILE' THEN 'cyan'
-                     WHEN n.source='MACHINERY' THEN 'pink'
-                     WHEN n.source='HOUSEHOLD' THEN 'purple'
-                     ELSE 'yellow' END AS color,
+                $TaxonColorSql AS color,
                 CAST(FLOOR(n.genome_size/3000) AS BIGINT) AS size
          FROM nodes n JOIN cloud_ids ci ON n.id = ci.id
          ORDER BY phage""",
     "g_cloud_edges" ->
       s"""$OracleCte
          SELECT e.src, e.dst, e.distance, 0.1 - e.distance + 0.1 AS value
-         FROM edges e JOIN cloud_ids s1 ON e.src = s1.id
-                      JOIN cloud_ids s2 ON e.dst = s2.id
-         WHERE e.distance <= 0.10
-         ORDER BY src, dst""",
+         ${inducedSql("cloud_ids")}""",
     "g_family_cloud" ->
       s"""$OracleCte
-         SELECT id AS phage_node FROM (
-           SELECT id FROM nodes WHERE source='BUILDING' AND contains(taxonomy,'1')
-           UNION
-           SELECT r.dst FROM nodes s JOIN edges r ON r.src = s.id
-           WHERE s.source='BUILDING' AND contains(s.taxonomy,'1')
-             AND r.distance <= 0.10) t
+         SELECT id AS phage_node FROM ($FamilySet) t
          ORDER BY phage_node""",
     "g_host_cloud" -> hostOracle(harsh = false),
     "g_host_cloud_harsh" -> hostOracle(harsh = true),
     "g_host_edges" ->
-      s"""$OracleCte, $HostSetCte
+      s"""$OracleCte, ${hostSetCte(harsh = false)}
          SELECT e.src, e.dst, e.distance
-         FROM edges e JOIN hostset s1 ON e.src = s1.id
-                      JOIN hostset s2 ON e.dst = s2.id
-         WHERE e.distance <= 0.10
-         ORDER BY src, dst""",
+         ${inducedSql("hostset")}""",
     "g_family_nodes" -> familyNodesOracle(genusRank = false),
     "g_family_nodes_genus" -> familyNodesOracle(genusRank = true),
     "g_degrees" ->

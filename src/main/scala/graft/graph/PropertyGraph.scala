@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *
   *   - Cypher `MATCH (a)-[r]->(b) WHERE ...` = filter + equi-join
   *     (seed side broadcast when small — caller passes a hint);
-  *   - `OPTIONAL MATCH` = left outer join;
   *   - pattern-existence (`WHERE (a)-[:t]->(x)`) = left-semi join;
-  *   - induced subgraph = two left-semi joins on the node-id set.
+  *   - induced subgraph = two left-semi joins on the node-id set (the
+  *     cloud views self-join the cloud's own rows instead, [[Clouds]]).
   */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 
@@ -43,14 +43,6 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
                  broadcastSeeds: Boolean = false): DataFrame = {
     val s = if (broadcastSeeds) broadcast(seeds) else seeds
     s.join(edges.filter(edgeCond), s("id") === col("src"))
-  }
-
-  /** OPTIONAL MATCH flavour of [[expandFrom]]: keeps seeds with no
-    * qualifying edge (edge columns null) — reference family.py:94. */
-  def optionalExpandFrom(seeds: DataFrame, edgeCond: Column = lit(true),
-                         broadcastSeeds: Boolean = false): DataFrame = {
-    val s = if (broadcastSeeds) broadcast(seeds) else seeds
-    s.join(edges.filter(edgeCond), s("id") === col("src"), "left_outer")
   }
 
   /** Subgraph induced by a node-id set (`ids` has a single `id` column):

@@ -52,13 +52,18 @@ object TestGraph {
     * per-phage genus property (phageclouds_gdb_host.py:62 `a.genus`) —
     * a deterministic categorical derived from the key. */
   def phageNodes(spark: SparkSession, dir: String): DataFrame =
+    genomes(spark, dir).drop("balance")
+
+  /** [[phageNodes]] plus the `balance` (c_acctbal) the distance reads. */
+  private[graph] def genomes(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir).select(
       col("c_custkey").as("id"),
       col("c_mktsegment").as("source"),
       floor(abs(col("c_acctbal")) * 10).cast("long").as("genome_size"),
       col("c_name").as("taxonomy"),
       col("c_nationkey").as("hostkey"),
-      concat(lit("G"), (col("c_custkey") % 7).cast("string")).as("genus"))
+      concat(lit("G"), (col("c_custkey") % 7).cast("string")).as("genus"),
+      col("c_acctbal").as("balance"))
 
   /** Two-level taxonomic lineage lookup — the analogue of the reference's
     * `phages.accessions.txt.taxid` → NCBI lineage chain
@@ -76,17 +81,22 @@ object TestGraph {
 
   /** sharesDNA-shaped weighted similarity edges (see class doc). */
   def sharesDna(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-      .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-    val a = c.select(col("c_custkey").as("src"), col("c_nationkey").as("nk"),
-      col("c_acctbal").as("abal"))
-    val b = c.select(col("c_custkey").as("dst"), col("c_nationkey").as("nk2"),
-      col("c_acctbal").as("bbal"))
-    a.join(b, col("nk") === col("nk2") && col("src") < col("dst"))
-      .select(col("src"), col("dst"),
-        (abs(col("abal") - col("bbal")) / DistanceNorm).as("distance"))
-      .filter(col("distance") <= BuildThreshold)
+    val g = genomes(spark, dir)
+    dnaPairs(g, g, BuildThreshold).drop("hostkey")
   }
+
+  /** The sharesDNA pair rule between two genome row sets (`id`,
+    * `hostkey`, `balance`): a join on the nation bucket with `src < dst`,
+    * kept when `|Δbalance| / DistanceNorm` is within both
+    * [[BuildThreshold]] and `threshold`. Returns (src, dst, distance,
+    * hostkey). The cloud plans ([[Clouds.CloudPlan]]) share it. */
+  private[graph] def dnaPairs(a: DataFrame, b: DataFrame, threshold: Double): DataFrame =
+    a.select(col("id").as("src"), col("hostkey"), col("balance").as("abal"))
+      .join(b.select(col("id").as("dst"), col("hostkey").as("nk"), col("balance").as("bbal")),
+        col("hostkey") === col("nk") && col("src") < col("dst"))
+      .select(col("src"), col("dst"),
+        (abs(col("abal") - col("bbal")) / DistanceNorm).as("distance"), col("hostkey"))
+      .filter(col("distance") <= math.min(threshold, BuildThreshold))
 
   /** Host-shaped node table (genus = n_name). */
   def hosts(spark: SparkSession, dir: String): DataFrame =

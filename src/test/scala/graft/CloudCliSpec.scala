@@ -3,7 +3,9 @@ package graft
 /** Smoke coverage for the [[Cloud]] reference-parity CLI: each of the
   * three modes (taxon / family / host — the three reference scripts)
   * parses its flag set and writes non-empty node/edge viz JSON over
-  * the sf0.001 corpus, and the flag overloads dispatch correctly. */
+  * the sf0.001 corpus, and the flag overloads dispatch correctly. At
+  * each mode's own default threshold, the written JSON holds exactly
+  * the views' nodes and edges, and the taxon page embeds them. */
 class CloudCliSpec extends SparkSpec {
   private def tmpOut(tag: String): String =
     java.nio.file.Files.createTempDirectory(
@@ -64,5 +66,43 @@ class CloudCliSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(colors.subsetOf(Set("#8acb4a", "#39dede", "#f1e653",
       "#9b4aed", "#c734df", "#ffffff")), s"host palette only: $colors")
+  }
+
+  test("each mode at its default threshold writes exactly the views' cloud, taxon --html too") {
+    import graph.{Clouds, TestGraph}
+    import org.apache.spark.sql.DataFrame
+    def ids(df: DataFrame): Set[Long] = df.collect().map(_.getAs[Long]("phage")).toSet
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSet
+    // (flags without -d/-t threshold, the views at the CLI default)
+    val modes = Seq(
+      ("tax", Seq("-t", TestGraph.Taxon),
+        Clouds.cloudNodes(spark, SF, TestGraph.Taxon, 0.25),
+        Clouds.cloudEdges(spark, SF, TestGraph.Taxon, 0.25)),
+      ("fam", Seq("-f", TestGraph.Family, "-t", "subfamily"),
+        Clouds.familyNodes(spark, SF, TestGraph.Family, 0.15),
+        Clouds.familyEdges(spark, SF, TestGraph.Family, 0.15)),
+      ("host", Seq("-g", TestGraph.HostGenus),
+        Clouds.hostCloud(spark, SF, harsh = false, TestGraph.HostGenus, 0.25),
+        Clouds.hostEdges(spark, SF, harsh = false, TestGraph.HostGenus, 0.25)))
+    modes.foreach { case (tag, flags, nodes, edges) =>
+      val out = tmpOut(s"default_$tag")
+      val html = s"$out/cloud.html"
+      val extra = if (tag == "tax") Seq("--html", html) else Nil
+      val written = Cloud.run(spark, Cloud.parseArgs(
+        flags ++ Seq("--data", SF, "--out", out) ++ extra))
+      assert(written.toSet == Set(s"$out/nodes", s"$out/edges") ++ extra.drop(1), tag)
+      val (wroteNodes, wroteEdges) =
+        (ids(spark.read.json(s"$out/nodes")), pairs(spark.read.json(s"$out/edges")))
+      assert(wroteNodes.nonEmpty && wroteEdges.nonEmpty, s"$tag: non-empty cloud")
+      assert(wroteNodes == ids(nodes), s"$tag: written nodes equal the view")
+      assert(wroteEdges == pairs(edges), s"$tag: written edges equal the view")
+      if (tag == "tax") {
+        val page = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(html)), "UTF-8")
+        assert(page.split("\"label\":").length - 1 == wroteNodes.size, "page nodes")
+        assert(page.split("\"from\":").length - 1 == wroteEdges.size, "page edges")
+      }
+    }
   }
 }

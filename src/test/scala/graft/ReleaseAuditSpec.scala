@@ -109,4 +109,18 @@ class ReleaseAuditSpec extends SparkSpec {
     assertReleased("s_nn_descent")(pipeline.Similarity.nnDescentGraph(spark, SF))
     assertReleased("t_bpe_encode")(pipeline.Text.bpeEncode(spark, SF))
   }
+
+  test("the cloud CLI releases its one build in all three modes") {
+    val out = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "cloud_release").toString
+    Seq(Seq("-t", graph.TestGraph.Taxon, "--html", s"$out/tax.html"),
+      Seq("-f", graph.TestGraph.Family, "-t", "genus"),
+      Seq("-g", graph.TestGraph.HostGenus, "--harsh")).zipWithIndex.foreach {
+      case (flags, i) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        Cloud.run(spark, Cloud.parseArgs(flags ++ Seq("--data", SF, "--out", s"$out/$i")))
+        val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+        assert(left.isEmpty, s"Cloud ${flags.head} leaves persistent RDDs $left")
+    }
+  }
 }

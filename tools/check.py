@@ -13,12 +13,16 @@ Dev tooling only — the Scala library never depends on this.
 """
 import sys, os, json, glob, subprocess
 
+# the checkout this script sits in (tools/..), so a second checkout
+# verifies its own sources
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     if "--skip-run" not in sys.argv:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=ROOT, capture_output=True, text=True)
         sys.stdout.write(r.stdout[-3000:])
         if r.returncode != 0:
             print(r.stderr[-3000:]); print("VERIFY RUN FAILED"); sys.exit(1)
