@@ -44,20 +44,23 @@ object Clouds {
       .orderBy(col("seed_phage"), col("target_phage"))
   }
 
-  /** A cloud's ids keyed by (hostkey, id), for all three seed rules: the
-    * 1-hop joins the seed rows, as `src`, to the genome rows `g` on the
-    * sharesDNA bucket ([[TestGraph.dnaPairs]]); the ids are both hop ends
-    * plus, when `keepSeeds`, every seed (family.py:94's OPTIONAL MATCH). */
+  /** The taxon seed genomes (gdb.py:56) as [[phageNodes]] rows. */
+  private def seeds(spark: SparkSession, dir: String, taxon: String): DataFrame =
+    ncbi(taxon)(phageNodes(spark, dir))
+
+  /** A cloud's genome ids, for all three seed rules: the 1-hop joins the
+    * seed rows, as `src`, to the genome rows `g` on the sharesDNA bucket
+    * ([[TestGraph.dnaPairs]]); the ids are both hop ends plus, when
+    * `keepSeeds`, every seed (family.py:94's OPTIONAL MATCH). */
   private def cloudIds(g: DataFrame, seedRule: DataFrame => DataFrame,
                        threshold: Double, keepSeeds: Boolean): DataFrame = {
     val s = seedRule(g)
-    val hop = dnaPairs(s, g, threshold)
-      .select(col("hostkey"), explode(array(col("src"), col("dst"))).as("id"))
-    (if (keepSeeds) hop.union(s.select(col("hostkey"), col("id"))) else hop).distinct()
+    val hop = dnaPairs(s, g, threshold).select(explode(array(col("src"), col("dst"))).as("id"))
+    (if (keepSeeds) hop.union(s.select(col("id"))) else hop).distinct()
   }
 
   /** One cloud request: `rows` (the genome scan semi-joined to
-    * [[cloudIds]] on (hostkey, id)), projected to nodes by `nodesOf` and
+    * [[cloudIds]] on `id`), projected to nodes by `nodesOf` and
     * self-joined to the [[induced]] edges by `edgesOf`. */
   private[graft] final case class CloudPlan(rows: DataFrame, nodesOf: DataFrame => DataFrame,
                                             edgesOf: DataFrame => DataFrame) {
@@ -69,8 +72,8 @@ object Clouds {
                    threshold: Double, keepSeeds: Boolean = false)(
       nodesOf: DataFrame => DataFrame, edgesOf: DataFrame => DataFrame): CloudPlan = {
     val g = genomes(spark, dir)
-    CloudPlan(g.join(cloudIds(g, seedRule, threshold, keepSeeds), Seq("hostkey", "id"),
-      "left_semi"), nodesOf, edgesOf)
+    CloudPlan(g.join(cloudIds(g, seedRule, threshold, keepSeeds), Seq("id"), "left_semi"),
+      nodesOf, edgesOf)
   }
 
   /** The edges among a cloud's rows (gdb.py:64-67): the sharesDNA bucket
@@ -199,7 +202,7 @@ object Clouds {
 
   def twoHop(spark: SparkSession, dir: String): DataFrame =
     graph(spark, dir)
-      .hopFrontier(ncbi(Taxon)(phageNodes(spark, dir)), 2, col("distance") <= QueryThreshold)
+      .hopFrontier(seeds(spark, dir, Taxon), 2, col("distance") <= QueryThreshold)
       .select(col("id").as("node"))
       .orderBy(col("node"))
 
@@ -321,7 +324,7 @@ object Clouds {
     val g = graph(spark, dir)
     Algorithms.personalizedPageRank(g.nodes,
       g.edges.filter(col("distance") <= QueryThreshold),
-      ncbi(Taxon)(phageNodes(spark, dir)))
+      seeds(spark, dir, Taxon))
       .orderBy(col("id"))
   }
 
@@ -1280,7 +1283,7 @@ object Clouds {
                 taxon: String = Taxon): DataFrame = {
     val g = graph(spark, dir)
     Algorithms.hopDistances(
-      ncbi(taxon)(phageNodes(spark, dir)).select(col("id")),
+      seeds(spark, dir, taxon).select(col("id")),
       g.symmetrizedEdges.filter(col("distance") <= QueryThreshold), k)
       .filter(col("d") >= 1)
       .select(col("seed").as("seed_phage"), col("id").as("reached"),
@@ -2055,7 +2058,7 @@ object Clouds {
     val sym = g.copy(edges =
       g.symmetrizedEdges.filter(col("distance") <= QueryThreshold)
         .withColumnRenamed("distance", "weight"))
-    Algorithms.shortestPaths(sym.nodes, sym.edges, ncbi(Taxon)(phageNodes(spark, dir)))
+    Algorithms.shortestPaths(sym.nodes, sym.edges, seeds(spark, dir, Taxon))
       .filter(col("dist").isNotNull)
       .orderBy(col("id"))
   }
@@ -2137,13 +2140,14 @@ object Clouds {
                                  html: Option[String]): Seq[String] =
     buildOnce(taxonPlan(spark, dir, taxon, threshold)) { (nodes, edges) =>
       writeJson(vizNodes(nodes), vizEdges(edges), outPath) ++
-        html.map { f => writePage(nodes, edges, f); f }
+        html.map { f => writePage(nodes, edges, f, DefaultSolver, controls = true); f }
     }
 
   /** Physics solvers the HTML export accepts — pyvis's barnes_hut /
     * force_atlas_2based options (gdb.py:102-105 configures exactly
     * these knobs on the pyvis Network). */
   val PhysicsSolvers: Set[String] = Set("barnesHut", "forceAtlas2Based", "repulsion")
+  private val DefaultSolver = "forceAtlas2Based"
 
   /** Self-contained HTML page rendering the cloud with vis-network —
     * the same artifact the reference's pyvis `save_graph` emits
@@ -2157,7 +2161,7 @@ object Clouds {
     * collected, never the graph. */
   def exportCloudHtml(spark: SparkSession, dir: String, outFile: String,
                       taxon: String = Taxon, threshold: Double = QueryThreshold,
-                      solver: String = "forceAtlas2Based",
+                      solver: String = DefaultSolver,
                       controls: Boolean = true): Unit = {
     require(PhysicsSolvers(solver),
       s"solver must be one of $PhysicsSolvers, got '$solver'")
@@ -2166,7 +2170,7 @@ object Clouds {
   }
 
   private def writePage(nodes: DataFrame, edges: DataFrame, outFile: String,
-                        solver: String = "forceAtlas2Based", controls: Boolean = true): Unit = {
+                        solver: String, controls: Boolean): Unit = {
     def jsonArray(df: DataFrame): String =
       df.toJSON.collect().mkString("[", ",\n", "]")
     val nodeJson = jsonArray(nodes.select(

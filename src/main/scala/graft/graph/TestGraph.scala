@@ -80,22 +80,20 @@ object TestGraph {
         col("family_name"))
 
   /** sharesDNA-shaped weighted similarity edges (see class doc). */
-  def sharesDna(spark: SparkSession, dir: String): DataFrame = {
-    val g = genomes(spark, dir)
-    dnaPairs(g, g, BuildThreshold).drop("hostkey")
-  }
+  def sharesDna(spark: SparkSession, dir: String): DataFrame =
+    dnaPairs(genomes(spark, dir), genomes(spark, dir), BuildThreshold)
 
   /** The sharesDNA pair rule between two genome row sets (`id`,
     * `hostkey`, `balance`): a join on the nation bucket with `src < dst`,
     * kept when `|Δbalance| / DistanceNorm` is within both
-    * [[BuildThreshold]] and `threshold`. Returns (src, dst, distance,
-    * hostkey). The cloud plans ([[Clouds.CloudPlan]]) share it. */
+    * [[BuildThreshold]] and `threshold`. Returns (src, dst, distance).
+    * The cloud plans ([[Clouds.CloudPlan]]) share it. */
   private[graph] def dnaPairs(a: DataFrame, b: DataFrame, threshold: Double): DataFrame =
     a.select(col("id").as("src"), col("hostkey"), col("balance").as("abal"))
       .join(b.select(col("id").as("dst"), col("hostkey").as("nk"), col("balance").as("bbal")),
         col("hostkey") === col("nk") && col("src") < col("dst"))
       .select(col("src"), col("dst"),
-        (abs(col("abal") - col("bbal")) / DistanceNorm).as("distance"), col("hostkey"))
+        (abs(col("abal") - col("bbal")) / DistanceNorm).as("distance"))
       .filter(col("distance") <= math.min(threshold, BuildThreshold))
 
   /** Host-shaped node table (genus = n_name). */

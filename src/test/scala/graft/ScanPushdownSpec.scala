@@ -138,26 +138,29 @@ class ScanPushdownSpec extends SparkSpec {
   /** (key, table) scans allowed to read the FULL table width — the key
     * genuinely consumes every column (triaged against the SQL/output,
     * r20). */
-  private val fullWidthExempt: Map[(String, String), String] = {
-    // the seed side of a cloud's bucketed 1-hop filters on source and
-    // taxonomy (c_mktsegment, c_name) and joins on the nation bucket
-    // with id and balance (c_nationkey, c_custkey, c_acctbal): every
-    // column of the five-column customer table
-    val seedHop = "SEED-HOP: the bucketed 1-hop's seed rows filter on " +
-      "source+taxonomy and join on nation with id+balance — all 5"
-    Seq("g_taxon_cloud", "g_cloud_nodes", "g_cloud_edges", "g_family_cloud",
-      "g_viz_export", "g_viz_export_edges", "g_cloud_overlap")
-      .map(k => (k, "customer") -> seedHop).toMap ++ Map(
-      ("g_family_nodes", "customer") ->
-        "the family metadata projection emits every customer attribute",
-      ("g_family_nodes_genus", "customer") ->
-        "same projection as g_family_nodes, genus-ranked colouring",
-      ("q2_min_cost_supplier", "supplier") ->
-        "Q2 emits s_acctbal+s_name and joins on s_suppkey+s_nationkey — all 4",
-      ("q20_potential_part", "supplier") ->
-        "Q20 emits s_name+s_acctbal and joins on s_suppkey+s_nationkey — all 4"
-    )
-  }
+  private val fullWidthExempt: Map[(String, String), String] = Map(
+    ("g_family_nodes", "customer") ->
+      "the family metadata projection emits every customer attribute",
+    ("g_family_nodes_genus", "customer") ->
+      "same projection as g_family_nodes, genus-ranked colouring",
+    ("q2_min_cost_supplier", "supplier") ->
+      "Q2 emits s_acctbal+s_name and joins on s_suppkey+s_nationkey — all 4",
+    ("q20_potential_part", "supplier") ->
+      "Q20 emits s_name+s_acctbal and joins on s_suppkey+s_nationkey — all 4"
+  )
+
+  /** SEED-HOP: the seed side of a taxon or family cloud's bucketed 1-hop
+    * filters on source and taxonomy (c_mktsegment, c_name) and joins on
+    * the nation bucket with id and balance (c_nationkey, c_custkey,
+    * c_acctbal) — every column of the five-column customer table. Only
+    * the scan that pushes that seed rule is exempt, so the same keys'
+    * node-side and edge-side scans must still prune. */
+  private val seedHopKeys = Set("g_taxon_cloud", "g_cloud_nodes", "g_cloud_edges",
+    "g_family_cloud", "g_viz_export", "g_viz_export_edges", "g_cloud_overlap")
+  private def seedHop(s: ScanInfo): Boolean =
+    seedHopKeys(s.key) && s.table == "customer" &&
+      s.pushed.contains(s"EqualTo(c_mktsegment,${graph.TestGraph.Ncbi})") &&
+      s.pushed.contains("StringContains(c_name,")
 
   test("every registered key's scans are auditable (plans build)") {
     assert(buildFailures.isEmpty,
@@ -186,7 +189,7 @@ class ScanPushdownSpec extends SparkSpec {
   test("rule 4b: a scan of a wide table prunes its read schema") {
     val offenders = allScans
       .filter(s => s.tableWidth >= 4 && s.readCols.size >= s.tableWidth)
-      .filterNot(s => fullWidthExempt.contains((s.key, s.table)))
+      .filterNot(s => fullWidthExempt.contains((s.key, s.table)) || seedHop(s))
     assert(offenders.isEmpty,
       s"scans read the full table width with no allowlisted reason: " +
         offenders.map(_.label).distinct.mkString("; "))
