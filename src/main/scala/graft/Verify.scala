@@ -3,7 +3,11 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (run(args).nonEmpty) sys.exit(1)
+
+  /** Runs the queries into `args(1)` and returns the keys that failed. */
+  def run(args: Array[String]): Seq[String] = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated key subset for fast local
     // iteration (the driver always invokes with exactly two args)
@@ -51,6 +55,6 @@ object Verify {
     println(s"[verify] emitted ${emitted.size}/${SparkEntry.queries.size} queries" +
       (if (failures.nonEmpty) s"; FAILED: ${failures.map(_._1).mkString(", ")}" else ""))
     spark.stop()
-    if (failures.nonEmpty) sys.exit(1)
+    failures.map(_._1).toSeq
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import graft.Gates
 import org.apache.spark.sql.functions._
 
@@ -1176,7 +1176,7 @@ object Algorithms {
     // WIDE inputs: materialized alone before the join — fed lazily
     // into it, the |E|-wide count's map stage runs concurrently with
     // the ids-side shuffle and the combined sorter pressure can starve
-    // first-page allocations in a single-JVM pool (the louvainLevel
+    // first-page allocations in a single-JVM pool (the louvainLevelKeep
     // deg lesson). Narrow inputs skip the extra action.
     val wide = sess ne nodes.sparkSession
     val degPlan = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("c"))
@@ -1289,6 +1289,193 @@ object Algorithms {
   private def bcIf(ok: Boolean, df: DataFrame): DataFrame =
     if (ok) broadcast(df) else df
 
+  /** One synchronous gather-round vertex program, run by
+    * [[gatherRounds]] on either executor: each round every node gathers
+    * the messages its neighbours send over the edges, combines them and
+    * adopts the update. The distributed half is Columns over the
+    * iterate row — `id`, the base frame's attribute columns (plus
+    * `odeg` with [[outDegree]]) and the value `x`; the driver half
+    * ([[GatherLocal]]) states each part again over arrays, and each
+    * program writes the two side by side. */
+  private[graft] abstract class GatherProgram[V](val enc: Encoder[V]) {
+    /** Messages travel both ways along every edge; else src → dst only. */
+    def symmetric: Boolean
+    /** Carry each node's out-degree, the gathered edge rows it sends
+      * on (null for none), as the attribute `odeg`. */
+    def outDegree: Boolean = false
+    /** The value before round 1, over the node row. */
+    def init: Column
+    /** What a node sends each round, over its iterate row: its value
+      * unless the program says otherwise. */
+    def message: Column = col("x")
+    /** The combine: a receiver's (id, m) message rows → (id, agg). */
+    def combine(msgs: DataFrame): DataFrame
+    /** The next value over the iterate row, `agg` (null when no message
+      * arrived) and the round's global `g`. */
+    def update: Column
+    /** A per-round aggregate over the iterate that `update` reads as
+      * `g`; null when the program has none. */
+    def global: Column = null
+    /** The driver half over the rows [[gatherRounds]] collects (the
+      * edge-incident base rows in id order, then, for a program with a
+      * global, one per attribute tuple of the edgeless nodes) and their
+      * out-degrees. */
+    def local(rows: Array[Row], odeg: Array[Long]): GatherLocal[V]
+  }
+
+  /** The driver half of a [[GatherProgram]], over node indices,
+    * specialized so that the round loop in [[run]] reads and writes
+    * primitive arrays. */
+  private[graft] abstract class GatherLocal[@specialized(Long, Double) V: scala.reflect.ClassTag] {
+    def init(i: Int): V
+    def message(i: Int, x: V): V = x
+    /** The combine over the messages `m(snd(j))`, j in [lo, hi); an empty
+      * slice gives what the column update's coalesce gives for no message. */
+    def fold(own: V, m: Array[V], snd: Array[Int], lo: Int, hi: Int): V
+    def update(i: Int, agg: V, g: Double): V = agg
+    /** Node i's term of the round's global sum. */
+    def global(i: Int, x: V): Double = 0.0
+
+    /** `rounds` synchronous rounds over the receiver-keyed CSR (`offs`,
+      * `snd`; a node with an empty slice receives nothing). The global,
+      * a `weight`-weighted sum, is summed only when `hasGlobal`.
+      * Returns the last values and global. */
+    final def run(rounds: Int, offs: Array[Int], snd: Array[Int],
+                  weight: Array[Double], hasGlobal: Boolean): (Array[V], Double) = {
+      val len = weight.length
+      var x = new Array[V](len)
+      var i = 0
+      while (i < len) { x(i) = init(i); i += 1 }
+      var glob = 0.0
+      var r = 0
+      while (r < rounds) {
+        val msg = new Array[V](len); val next = new Array[V](len)
+        glob = 0.0; i = 0
+        while (i < len) {
+          msg(i) = message(i, x(i))
+          if (hasGlobal) glob += weight(i) * global(i, x(i))
+          i += 1
+        }
+        i = 0
+        while (i < len) { next(i) = update(i, fold(x(i), msg, snd, offs(i), offs(i + 1)), glob); i += 1 }
+        x = next
+        r += 1
+      }
+      (x, glob)
+    }
+  }
+
+  /** Runs `prog` for `rounds` rounds over the (src, dst) `edges` and the
+    * node frame `base` (`id` plus the program's attribute columns, one
+    * row per id). Returns (id, x) for every base row.
+    *
+    * Contract, the same on both executors:
+    *   - rounds are synchronous: round r reads only round r−1's values;
+    *   - a message counts only when its sender and its receiver are both
+    *     node rows. Repeated edges send one message per copy, self-loops
+    *     count like any edge, and edges to ids that are not node rows
+    *     send nothing;
+    *   - a node with no edges receives nothing, so it takes
+    *     `update(init, null, g)` of the last round (`init` when rounds =
+    *     0): the kernel's fixpoint value, because every update here
+    *     either ignores the old value or keeps it when nothing arrives;
+    *   - the gate is read once, on the gathered edge rows: 2|E| for a
+    *     symmetric program, |E| otherwise, against [[Gates.edges]].
+    *
+    * The input is counted once, on `edges` (or taken from the caller's
+    * count `nEdges`), then read once more: collected below the gate,
+    * or built into one checkpoint already laid out by
+    * [[bigSymCheckpoint]] above it, so no checkpoint is ever re-laid.
+    *
+    * At or below the gate: one collect, one [[LocalGraph.restrict]] to
+    * the node rows, array rounds over a receiver-keyed CSR, one
+    * [[LocalGraph.attach]]. Only edge-incident nodes live on the
+    * driver; a global also sums the edgeless nodes, as one weighted row
+    * per attribute tuple. Above it: the gathered rows laid out by
+    * [[bigSymCheckpoint]], and per round a broadcast-gated
+    * ([[IterateBroadcastMaxRows]]) join of the iterate's messages, the
+    * combine, a left join that adopts the update (crossed with the
+    * 1-row global, if any), the iterate checkpoint and the release of
+    * its predecessor. */
+  private[graft] def gatherRounds[V](prog: GatherProgram[V],
+      base: DataFrame, edges: DataFrame, rounds: Int,
+      nEdges: Long = -1L): DataFrame = {
+    // u receives from v: both orientations of every edge in one explode
+    // pass (a self-union scans a big pinned cache twice), or dst ← src
+    val plan =
+      if (prog.symmetric) edges.select(explode(array(
+          struct(col("src").as("u"), col("dst").as("v")),
+          struct(col("dst").as("u"), col("src").as("v")))).as("e"))
+        .select(col("e.u").as("u"), col("e.v").as("v"))
+      else edges.select(col("dst").as("u"), col("src").as("v"))
+    val gathered = (if (prog.symmetric) 2 else 1) *
+      (if (nEdges >= 0) nEdges else edges.count())
+    if (gathered <= Gates.edges) gatherLocal(prog, base, plan, rounds)
+    else {
+      val (sess, sym) = bigSymCheckpoint(plan, gathered, "v")
+      gatherLoop(prog, base, sess, sym, rounds)
+    }
+  }
+
+  private def gatherLocal[V](prog: GatherProgram[V], base: DataFrame,
+      plan: DataFrame, rounds: Int): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    // receiver-major: row k carries a message from dst(k) to src(k)
+    val all = LocalGraph.collect(plan, "u", "v")
+    val sent = new Array[Long](all.n)
+    all.dst.foreach(v => sent(v) += 1)
+    val (g, members) = all.restrict(base)
+    val img = g.csr(both = false)._1
+    val edgeless =
+      if (prog.global == null) Array.empty[Row]
+      else base.join(LocalGraph.relation(spark, all.ids.toIndexedSeq, "id"),
+          Seq("id"), "left_anti")
+        .groupBy(base.columns.toSeq.filter(_ != "id").map(col): _*)
+        .agg(count(lit(1)).as("n_rows")).collect()
+    val n = g.n
+    val weight = Array.fill(n)(1.0) ++ edgeless.map(_.getAs[Long]("n_rows").toDouble)
+    // the edgeless rows past n get empty CSR slices
+    val (x, glob) = prog.local(members ++ edgeless,
+        g.ids.map(id => sent(all.index(id))) ++ edgeless.map(_ => 0L))
+      .run(rounds, img.offs ++ edgeless.map(_ => img.offs(n)), img.flat, weight,
+        prog.global != null)
+    implicit val enc: Encoder[(Long, V)] = Encoders.tuple(Encoders.scalaLong, prog.enc)
+    LocalGraph.attach(base.withColumn("x", prog.init).withColumn("agg", lit(null))
+        .withColumn("g", lit(glob)),
+      LocalGraph.relation(spark, (0 until n).map(j => (g.ids(j), x(j))), "id", "lx"))(
+      col("id"), coalesce(col("lx"), if (rounds == 0) col("x") else prog.update).as("x"))
+  }
+
+  private def gatherLoop[V](prog: GatherProgram[V], base: DataFrame,
+      sess: SparkSession, sym: DataFrame, rounds: Int): DataFrame = {
+    val nodes = {
+      val b = if (sess ne base.sparkSession) rebase(sess, base) else base
+      if (!prog.outDegree) b
+      else b.join(sym.groupBy(col("v").as("id")).agg(count(lit(1)).as("odeg")),
+        Seq("id"), "left_outer")
+    }
+    val (x0, nV) = checkpointCounted(nodes.withColumn("x", prog.init))
+    // at every edge size: the bigSymCheckpoint layout keeps the fused
+    // per-task state small (the coreness contract)
+    val bcOk = nV <= IterateBroadcastMaxRows
+    var x = x0
+    for (_ <- 1 to rounds) {
+      val msgs = sym
+        .join(bcIf(bcOk, x.select(col("id").as("v"), prog.message.as("m"))), Seq("v"))
+        .select(col("u").as("id"), col("m"))
+      val adopt = x.join(bcIf(bcOk, prog.combine(msgs)), Seq("id"), "left_outer")
+      val next = (if (prog.global == null) adopt
+          else adopt.crossJoin(broadcast(x.agg(prog.global.as("g")))))
+        .select(nodes.columns.toSeq.map(col) :+ prog.update.as("x"): _*)
+        .localCheckpoint(true)
+      releaseIterate(x)
+      x = next
+    }
+    releaseIterate(sym)
+    x.select(col("id"), col("x"))
+  }
+
   /** Synchronous label-propagation rounds (fixed by contract, like
     * [[pageRank]]'s iteration count — the oracle unrolls exactly this
     * many). */
@@ -1300,129 +1487,88 @@ object Algorithms {
     * toward the SMALLEST label — that, plus synchronous rounds, makes
     * the algorithm fully deterministic, unlike the textbook
     * random-order variant). Isolated nodes keep their own label.
-    *
-    * Scale shape: one shuffle per round keyed on the gather node for
-    * the (neighbour-label, count) aggregate — integer counts only, no
-    * floats anywhere, so cross-engine parity is unconditional. The
-    * symmetrized edge list is checkpointed and pre-partitioned once;
-    * each round is exactly one action (the iterate checkpoint). */
+    * A [[gatherRounds]] program: integer counts only, no floats
+    * anywhere, so cross-engine parity is unconditional. */
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
-                       rounds: Int = LabelPropRounds): DataFrame = {
-    val sym = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[Gates.edges]] symmetric rows the whole round
-    // stack — per round a gather aggregate, an argmax aggregate and an
-    // adopt-join checkpoint (≈6 AQE stage jobs) — runs in one driver
-    // loop over the collected (u, v) rows. [[labelPropLocal]] replays
-    // the synchronous gather / (count desc, label asc) argmax / adopt
-    // semantics op for op in exact integers, so labels are identical
-    // by construction; AlgorithmsSpec pins local == loop. The count
-    // probe is the broadcast-gate count the loop needed anyway.
-    val nSym = sym.count()
-    if (nSym <= Gates.edges) return labelPropLocal(sym, nodes, rounds)
-    var labels = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint(true)
-    // |V|-row label frames broadcast into the edge-scale gather below
-    // the shared ceiling ([[IterateBroadcastMaxRows]]): without the
-    // hint the scrubbed iterate stats re-sort the symmetric checkpoint
-    // under a sort-merge join every round (sf0.1 min-of-5: ~4+ → 3.0 s).
-    // Edge-gated like CC's ([[WidenRows]]): hinted rounds fuse work
-    // into the big-cache scan stage, the single-JVM shape that OOMs at
-    // the 150k/85M point (see the pageRank gate note).
-    val bcOk = labels.count() <= IterateBroadcastMaxRows &&
-      nSym < WidenRows
-    for (_ <- 1 to rounds) {
-      val gathered = sym
-        .join(bcIf(bcOk,
-          labels.select(col("id").as("v"), col("lbl").as("nlbl"))), Seq("v"))
-        // one exchange for BOTH aggregates: hash-partitioning on u
-        // satisfies clustering on (u, nlbl) AND on u, so the count and
-        // the argmax reuse this single shuffle
-        .repartition(col("u"))
-        .groupBy(col("u").as("id"), col("nlbl"))
-        .agg(count(lit(1)).as("c"))
-      // argmax count with min-label tiebreak: max(struct(c, -lbl)).
-      // Deliberately NOT the top1PerGroup heap: this argmax output is
-      // BROADCAST into the adopt join, and an r20 A/B measured the
-      // heap-under-BroadcastExchange shape 3-4× SLOWER wall on the
-      // louvain family at identical task time and job count (driver-
-      // side AQE stage latency per round), while the aggregate's
-      // struct-max sort fallback costs nothing measurable here
-      // (g_label_prop 3.43 → 3.55 s min-of-5 with the heap).
-      val best = gathered
+                       rounds: Int = LabelPropRounds): DataFrame =
+    gatherRounds(new GatherProgram[Long](Encoders.scalaLong) {
+      val symmetric = true
+      val init = col("id")
+      // argmax count with min-label tiebreak: max(struct(c, -label)).
+      // One exchange for BOTH aggregates: hash-partitioning on the
+      // receiver satisfies clustering on (id, m) AND on id. Deliberately
+      // NOT the top1PerGroup heap: an r20 A/B measured that shape under a
+      // BroadcastExchange 3-4× SLOWER wall on the louvain family.
+      def combine(msgs: DataFrame): DataFrame = msgs.repartition(col("id"))
+        .groupBy(col("id"), col("m")).agg(count(lit(1)).as("c"))
         .groupBy(col("id"))
-        .agg(max(struct(col("c"), (-col("nlbl")).as("neg"))).as("b"))
-        .select(col("id"), (-col("b.neg")).as("blbl"))
-      val next = labels.join(bcIf(bcOk, best), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("blbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      releaseIterate(labels)
-      labels = next
-    }
-    labels
-  }
-
-  /** Driver-local twin of [[labelPropagation]]'s round loop (gated
-    * there). Replays the distributed semantics op for op on the
-    * collected symmetric (u, v) rows: per round every node
-    * SIMULTANEOUSLY gathers its neighbours' current labels over edges
-    * whose label-side endpoint is a node row (the gather join),
-    * counts them with multi-edge multiplicity (exact integers), and
-    * adopts the (count desc, label asc) argmax — keeping its label
-    * when no neighbour qualifies (the adopt left join). Off-edge
-    * nodes keep their own id (re-attached through the final
-    * coalesce, the distributed fixpoint). */
-  private def labelPropLocal(sym: DataFrame, nodes: DataFrame,
-                             rounds: Int): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val all = LocalGraph.collect(sym, "u", "v")
-    releaseIterate(sym)
-    // CSR over edges with BOTH endpoints node rows (gather needs the
-    // label side in the iterate, adopt needs the gather side in it)
-    val (g, _) = all.restrict(nodes.select(col("id")))
-    val vid = g.ids
-    val nVe = g.n
-    val (img, _) = g.csr(both = false)
-    val offs = img.offs; val adj = img.flat
-    var lbl = vid.clone()
-    var r = 0
-    while (r < rounds) {
-      val next = new Array[Long](nVe)
-      val cnt = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      var u = 0
-      while (u < nVe) {
-        var bestL = 0L; var bestC = 0L
-        cnt.clear()
-        var j = offs(u)
-        while (j < offs(u + 1)) {
-          val l = lbl(adj(j))
-          val c0 = cnt.get(l)
-          val c = (if (c0 == null) 0L else c0.longValue()) + 1L
-          cnt.put(l, c)
-          if (bestC == 0L || c > bestC || (c == bestC && l < bestL)) {
-            bestC = c; bestL = l
+        .agg(max(struct(col("c"), (-col("m")).as("neg"))).as("b"))
+        .select(col("id"), (-col("b.neg")).as("agg"))
+      val update = coalesce(col("agg"), col("x"))
+      def local(rows: Array[Row], odeg: Array[Long]): GatherLocal[Long] = new GatherLocal[Long] {
+        private val cnt = new java.util.HashMap[Long, Long]()
+        def init(i: Int): Long = rows(i).getLong(0)
+        def fold(own: Long, m: Array[Long], snd: Array[Int], lo: Int, hi: Int): Long = {
+          var bestL = own; var bestC = 0L
+          cnt.clear()
+          var j = lo
+          while (j < hi) {
+            val l = m(snd(j))
+            val c: Long = cnt.merge(l, 1L, _ + _)
+            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
+            j += 1
           }
-          j += 1
+          bestL
         }
-        next(u) = if (bestC == 0L) lbl(u) else bestL
-        u += 1
       }
-      lbl = next
-      r += 1
-    }
-    LocalGraph.attach(nodes.select(col("id")), LocalGraph.relation(spark,
-        (0 until nVe).map(j => (vid(j), lbl(j))), "id", "llbl"))(
-      col("id"), coalesce(col("llbl"), col("id")).as("lbl"))
-  }
+    }, nodes.select(col("id")).distinct(), edges, rounds)
+      .select(col("id"), col("x").as("lbl"))
 
   /** Synchronous local-move rounds per Louvain level and coarsening
     * levels (fixed by contract — the oracle unrolls exactly this
     * shape, like [[LabelPropRounds]]). */
   val LouvainRounds = 6
   val LouvainLevels = 2
+
+  /** Row threshold past which a loop's big symmetric checkpoint is
+    * re-laid by [[bigSymCheckpoint]] — ~16.7M rows is where the 32-way
+    * layout's per-task cache blocks and aggregate slices start
+    * starving the single-JVM execution pool (32 concurrent readers
+    * PIN their in-memory blocks, so execution cannot evict storage
+    * and first-page allocations get 0). */
+  val WidenRows: Long = 1L << 24
+
+  /** Lay out a loop's big symmetric edge checkpoint, SIZED BY DATA
+    * (the caller counts the plan's rows with a cheap streaming pass
+    * first — no checkpoint is ever built at the wrong layout and then
+    * re-laid, because every read of a mis-laid 170M-row cache is
+    * itself an OOM hazard: 32 concurrent readers PIN their in-memory
+    * blocks, so execution cannot evict storage and first-page
+    * allocations get 0 — measured repeatedly at the 150k/85M
+    * ScaleBench point, including in the re-lay shuffle itself).
+    * Below [[WidenRows]] rows: the caller's session and layout,
+    * deserialized blocks — small graphs and the bench fleet keep
+    * today's plans. At or above: a CHILD session with proportionally
+    * more shuffle partitions, an EXPLICIT repartition count (a bare
+    * repartition(col) takes the session conf width and AQE's
+    * coalescer merges it straight back — observed 352 → 34), and
+    * SERIALIZED blocks (deserialized UnsafeRow caches are ~3× the
+    * bytes plus their GC load — measured raw heap OOM). More,
+    * smaller, serialized blocks: per-reader pins shrink ~linearly and
+    * every downstream aggregate map and join slice with them. */
+  private[graft] def bigSymCheckpoint(plan: DataFrame, nRows: Long,
+                                      key: String)
+      : (org.apache.spark.sql.SparkSession, DataFrame) =
+    if (nRows < WidenRows)
+      (plan.sparkSession, plan.repartition(col(key)).localCheckpoint(true))
+    else {
+      val s = plan.sparkSession.newSession()
+      val parts = math.min(1024L, 32L * (nRows / WidenRows + 1)).toInt
+      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      (s, rebase(s, plan).repartition(parts, col(key))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    }
 
   /** One Louvain level: synchronous modularity-ascent local moves over
     * a weighted undirected multigraph given as CANONICAL edges
@@ -1465,59 +1611,13 @@ object Algorithms {
     * list is checkpointed and pre-partitioned on the gather key once;
     * each round is one shuffle for the (node, community) gather, one
     * small community-degree aggregate (≤ #communities rows, shrinking
-    * every round), and one argmax — the iterate is (id, lbl) only. */
-  /** Row threshold past which a loop's big symmetric checkpoint is
-    * re-laid by [[bigSymCheckpoint]] — ~16.7M rows is where the 32-way
-    * layout's per-task cache blocks and aggregate slices start
-    * starving the single-JVM execution pool (32 concurrent readers
-    * PIN their in-memory blocks, so execution cannot evict storage
-    * and first-page allocations get 0). */
-  val WidenRows: Long = 1L << 24
-
-  /** Lay out a loop's big symmetric edge checkpoint, SIZED BY DATA
-    * (the caller counts the plan's rows with a cheap streaming pass
-    * first — no checkpoint is ever built at the wrong layout and then
-    * re-laid, because every read of a mis-laid 170M-row cache is
-    * itself an OOM hazard: 32 concurrent readers PIN their in-memory
-    * blocks, so execution cannot evict storage and first-page
-    * allocations get 0 — measured repeatedly at the 150k/85M
-    * ScaleBench point, including in the re-lay shuffle itself).
-    * Below [[WidenRows]] rows: the caller's session and layout,
-    * deserialized blocks — small graphs and the bench fleet keep
-    * today's plans. At or above: a CHILD session with proportionally
-    * more shuffle partitions, an EXPLICIT repartition count (a bare
-    * repartition(col) takes the session conf width and AQE's
-    * coalescer merges it straight back — observed 352 → 34), and
-    * SERIALIZED blocks (deserialized UnsafeRow caches are ~3× the
-    * bytes plus their GC load — measured raw heap OOM). More,
-    * smaller, serialized blocks: per-reader pins shrink ~linearly and
-    * every downstream aggregate map and join slice with them. */
-  private[graft] def bigSymCheckpoint(plan: DataFrame, nRows: Long,
-                                      key: String)
-      : (org.apache.spark.sql.SparkSession, DataFrame) =
-    if (nRows < WidenRows)
-      (plan.sparkSession, plan.repartition(col(key)).localCheckpoint(true))
-    else {
-      val s = plan.sparkSession.newSession()
-      val parts = math.min(1024L, 32L * (nRows / WidenRows + 1)).toInt
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      (s, rebase(s, plan).repartition(parts, col(key))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    }
-
-  private[graft] def louvainLevel(nodes: DataFrame, canonEdges: DataFrame,
-                                  rounds: Int): DataFrame = {
-    val (lbl, layer) = louvainLevelKeep(nodes, canonEdges, rounds)
-    releaseIterate(layer)
-    lbl
-  }
-
-  /** [[louvainLevel]] variant that RETURNS its symmetric edge layer —
-    * the [[bigSymCheckpoint]]-laid (u, v, w) frame with BOTH
-    * orientations of every proper edge (self-loops ride once), whose
-    * release the caller owns — instead of releasing it — the one-edge-scale-checkpoint-per-
-    * composition contract: [[louvainRefine]]'s intra-community CC
+    * every round), and one argmax — the iterate is (id, lbl) only.
+    *
+    * The level RETURNS its symmetric edge layer, whose release the
+    * caller owns: the [[bigSymCheckpoint]]-laid (u, v, w) frame with
+    * BOTH orientations of every proper edge (self-loops ride once).
+    * That is the one-edge-scale-checkpoint-per-composition contract:
+    * [[louvainRefine]]'s intra-community CC
     * filters this exact checkpoint rather than re-symmetrizing the
     * caller's edges (which would execute the upstream plan once per
     * union branch and pin a second edge-scale block set — the r13
@@ -1594,7 +1694,8 @@ object Algorithms {
     // the |E|-scale gather/candidate stream several times per round.
     // Edge-gated ([[WidenRows]], nSym already counted) like the other
     // kernels: hinted rounds fuse aggregates into big-cache scan
-    // stages — the single-JVM OOM shape the pageRank gate documents.
+    // stages, which measured AGGREGATE_OUT_OF_MEMORY over a plain-laid
+    // edge cache at the 150k/85M single-JVM point.
     val bcOk = nIds <= IterateBroadcastMaxRows && nSym < WidenRows
     // early exit needs TWO consecutive zero-move rounds: a round where
     // the gated parity class stands pat says nothing about the OTHER
@@ -1790,7 +1891,7 @@ object Algorithms {
       val (lbl, layer) = louvainLevelKeep(curNodes, canon, rounds)
       if (lvl == 1 && keepLayer) kept = layer
       else releaseIterate(layer)
-      // louvainLevel eagerly checkpointed its edge/node inputs, so the
+      // louvainLevelKeep eagerly checkpointed its edge/node inputs, so the
       // PREVIOUS level's label iterate (which fed this level's coarse
       // graph lazily) has no live reader left
       releaseIterate(prevLbl)
@@ -2344,10 +2445,6 @@ object Algorithms {
       (coalesce(col("n_parts"), lit(1L)) > 1).cast("int").as("was_split"))
   }
 
-  /** PageRank, fixed iteration count, damping d. The edge list is
-    * checkpointed once so upstream plans run exactly once; each iteration
-    * is ONE action. Dangling-node mass is folded back in as a broadcast
-    * 1-row aggregate join — never a separate driver action. */
   /** Round budget for [[walkCounts]] — fixed SHORT on purpose: the
     * iterate is the power method on the adjacency matrix, and t rounds
     * count walks of length t, whose magnitude grows like (mean deg)^t;
@@ -2365,304 +2462,101 @@ object Algorithms {
     * (Bonacich 1987), with the usual per-round normalization REPLACED
     * by exact integer counts (rankings are scale-invariant; the
     * oracle replays integer sums unconditionally, where normalized
-    * doubles would need the 12-dp quantization contract). Loop shape =
-    * [[pageRank]]: symmetric edge table pre-partitioned and
-    * checkpointed ONCE, only the |V|-row iterate moves per round,
-    * broadcast into the edge-scale gather below
-    * [[IterateBroadcastMaxRows]] (and [[WidenRows]] — the fused
-    * partial-aggregate OOM shape). */
+    * doubles would need the 12-dp quantization contract). A
+    * [[gatherRounds]] program; a caller that already counted its edges
+    * passes `nSymHint` (2·|E|) and the kernel skips its own count. */
   def walkCounts(nodes: DataFrame, edges: DataFrame,
                  rounds: Int = EigenWalkRounds,
-                 nSymHint: Long = -1L): DataFrame = {
-    // input shape = [[coreness]]: one explode pass for the symmetric
-    // view (not a self-union — two scans of a big pinned cache), laid
-    // out by [[bigSymCheckpoint]] so the 2|E|-row frame is serialized
-    // and pre-partitioned on the gather key (a plain deserialized
-    // checkpoint measured UNABLE_TO_ACQUIRE_MEMORY in the round-1
-    // gather at the 150k/85M point — the §4.13 reader-pin shape)
-    val symPlan = edges.select(col("src"), col("dst"))
-      .select(explode(array(
-        struct(col("src").as("u"), col("dst").as("v")),
-        struct(col("dst").as("u"), col("src").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-    val nSym = if (nSymHint >= 0) nSymHint else symPlan.count()
-    // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[Gates.edges]] symmetric rows the whole power
-    // iterate — per round one gather aggregate + one iterate
-    // checkpoint — runs in one driver loop over the collected (u, v)
-    // rows: EXACT int64 sums, so [[walkCountsLocal]] is identical by
-    // construction (AlgorithmsSpec pins local == loop); off-edge nodes
-    // emit 0 after round 1 (no in-edges), re-attached via coalesce.
-    if (nSym <= Gates.edges) return walkCountsLocal(symPlan, nodes, rounds)
-    val (sess, sym) = bigSymCheckpoint(symPlan, nSym, "v")
-    val (ids, nV) = checkpointCounted((if (sess ne nodes.sparkSession)
-        rebase(sess, nodes.select(col("id")))
-      else nodes.select(col("id"))).distinct())
-    // the |V|-row iterate broadcasts into the edge-scale gather at all
-    // edge sizes — the bigSymCheckpoint layout keeps the fused per-task
-    // state small, the same contract [[coreness]] runs green on
-    val bcOk = nV <= IterateBroadcastMaxRows
-    var x = ids.select(col("id"), lit(1L).as("walks")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val gathered = sym
-        .join(bcIf(bcOk, x.select(col("id").as("v"), col("walks").as("w"))),
-          Seq("v"))
-        .groupBy(col("u").as("id")).agg(sum(col("w")).as("walks"))
-      val next = ids.join(bcIf(bcOk, gathered), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("walks"), lit(0L)).as("walks"))
-        .localCheckpoint(true)
-      releaseIterate(x)
-      x = next
-    }
-    releaseIterate(sym) // the final iterate is materialized
-    releaseIterate(ids)
-    x
-  }
+                 nSymHint: Long = -1L): DataFrame =
+    gatherRounds(new GatherProgram[Long](Encoders.scalaLong) {
+      val symmetric = true
+      val init = lit(1L)
+      def combine(msgs: DataFrame): DataFrame =
+        msgs.groupBy(col("id")).agg(sum(col("m")).as("agg"))
+      val update = coalesce(col("agg"), lit(0L))
+      def local(rows: Array[Row], odeg: Array[Long]): GatherLocal[Long] = new GatherLocal[Long] {
+        def init(i: Int): Long = 1L
+        def fold(own: Long, m: Array[Long], snd: Array[Int], lo: Int, hi: Int): Long = {
+          var s = 0L; var j = lo
+          while (j < hi) { s += m(snd(j)); j += 1 }
+          s
+        }
+      }
+    }, nodes.select(col("id")).distinct(), edges, rounds,
+      if (nSymHint >= 0) nSymHint / 2 else -1L)
+      .select(col("id"), col("x").as("walks"))
 
-  /** Driver-local twin of [[walkCounts]]' power iterate (gated there).
-    * Exact int64 sums over the collected symmetric (u, v) rows — the
-    * one loop kernel with NO floating point, so equality with the
-    * distributed rounds is unconditional. Gather restricted to edges
-    * whose walk-side endpoint is a node row (the gather join) and
-    * whose receiving endpoint is one too (the iterate left join);
-    * off-edge nodes re-attach as 0 (1 when rounds == 0). */
-  private def walkCountsLocal(symPlan: DataFrame, nodes: DataFrame,
-                              rounds: Int): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val (g, _) = LocalGraph.collect(symPlan, "u", "v")
-      .restrict(nodes.select(col("id")).distinct())
-    val us = g.src; val vs = g.dst
-    val mE = g.m
-    val vid = g.ids
-    val nVe = g.n
-    var x = Array.fill(nVe)(1L)
-    var r = 0
-    while (r < rounds) {
-      val next = new Array[Long](nVe)
-      var i = 0
-      while (i < mE) { next(us(i)) += x(vs(i)); i += 1 }
-      x = next
-      r += 1
-    }
-    val offVal = if (rounds == 0) 1L else 0L
-    LocalGraph.attach(nodes.select(col("id")).distinct(),
-      LocalGraph.relation(spark, (0 until nVe).map(j => (vid(j), x(j))),
-        "id", "lw"))(col("id"), coalesce(col("lw"), lit(offVal)).as("walks"))
-  }
+  /** PageRank, fixed iteration count, damping d: [[personalizedPageRank]]
+    * with every node a seed, so the teleport and dangling terms divide
+    * by the node count. Ranks are quantized to 12 dp each iteration, so
+    * the unrolled DuckDB oracle replays the loop exactly. */
+  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
+               damping: Double = 0.85): DataFrame =
+    seededRank(nodes, edges, None, iters, damping)
 
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    // teleport constant derived in decimal: (1 - 0.85) in binary doubles
-    // is 1 ulp away from the literal 0.15 a SQL oracle parses, which
-    // would skew every pre-round iterate by ~1e-17 and make the 12-dp
-    // quantization a coin flip near rounding boundaries. BigDecimal
-    // subtraction yields the exact decimal 0.15, whose nearest double is
-    // the same value both engines parse from the literal.
-    val reset = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
-    // pre-partitioned on the join key: the (big) edge table is shuffled
-    // once here instead of once per iteration — only the (small) rank
-    // iterate moves each round
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("odeg"))
-    val ids = nodes.select(col("id")).distinct()
-      .join(outDeg, Seq("id"), "left_outer")
-      .localCheckpoint(true) // (id, odeg|null) — carried through every iterate
-    val n = ids.count().toDouble
-    // BOUNDED-COLLECT SHORTCUT (the boruvkaMstLocal class of gate):
-    // below [[Gates.edges]] edges the whole damped iteration
-    // runs in one driver loop over the collected (src, dst) rows —
-    // [[pageRankLocal]] replays the recurrence op for op under the
-    // SAME 12-dp per-iterate quantization contract that already makes
-    // the DuckDB oracle's (differently-ordered) double sums replay the
-    // loop bit-for-bit. Off-edge nodes are all dangling with one
-    // shared rank trajectory, so the driver never holds |V| rows: the
-    // local state is edge-incident nodes only, plus one scalar. The
-    // gate probe is the e.count() the broadcast gate needed anyway.
-    if (e.count() <= Gates.edges)
-      return pageRankLocal(e, ids, n, iters, damping, reset, isPpr = false)
-    // the rank iterate and the per-iteration contrib table are |V|-row
-    // frames — broadcast into the edge-scale join below the shared
-    // ceiling ([[IterateBroadcastMaxRows]]), so the pre-partitioned
-    // edge checkpoint is never re-sorted under a per-iteration SMJ
-    // (sf0.1 min-of-5: ~4+ → 3.1 s). ALSO edge-gated ([[WidenRows]]):
-    // the hinted iteration fuses the contrib PARTIAL aggregate into
-    // the stage that scans the big shared edge cache, and under 32
-    // concurrent readers pinning that cache the fused hash aggregate
-    // gets no execution memory — measured AGGREGATE_OUT_OF_MEMORY at
-    // the 150k/85M single-JVM point (iteration 1), while below
-    // WidenRows the hints only help. The count is one cached scan.
-    val bcOk = n <= IterateBroadcastMaxRows && e.count() < WidenRows
-    var pr = ids.select(col("id"), col("odeg"), lit(1.0 / n).as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val dangling = pr.filter(col("odeg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-      val live = pr.filter(col("odeg").isNotNull)
-      val contribs = bcIf(bcOk, live)
-        .join(e, live("id") === e("src"))
-        .select(col("dst").as("id"), (col("rank") / col("odeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-      // ranks are quantized to 12 dp each iteration: the contrib SUM is
-      // a shuffle aggregate whose double-addition order is run- and
-      // engine-dependent (~1e-18 noise); quantizing makes every iterate
-      // bit-deterministic, so the DuckDB oracle replays the loop exactly
-      val next = pr.select(col("id"), col("odeg"))
-        .join(bcIf(bcOk, contribs), Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("odeg"),
-          round(lit(reset / n) + lit(damping) *
-            (coalesce(col("contrib"), lit(0.0)) + col("dang") / n), 12).as("rank"))
-        .localCheckpoint(true)
-      releaseIterate(pr)
-      pr = next
-    }
-    pr.select(col("id"), col("rank"))
-  }
-
-  /** Personalized PageRank (random walk with restart): identical loop
-    * shape to [[pageRank]], but the teleport mass — and the dangling
-    * redistribution — lands ONLY on the seed set (uniformly, 1/|S|),
-    * so the stationary ranks measure proximity to the seeds instead of
-    * global importance. Same 12-dp per-iterate quantization contract
-    * (the contrib sum is order-dependent double addition; quantizing
-    * each iterate makes the recurrence bit-deterministic, so the
-    * unrolled SQL oracle replays it exactly). The seed membership is
-    * one extra boolean carried through the iterate — no new shuffles
-    * vs [[pageRank]]. */
+  /** Personalized PageRank (random walk with restart): the teleport
+    * mass — and the dangling redistribution — lands ONLY on the seed
+    * set (uniformly, 1/|S|), so the stationary ranks measure proximity
+    * to the seeds instead of global importance. */
   def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
                            seeds: DataFrame, iters: Int = 10,
-                           damping: Double = 0.85): DataFrame = {
-    val reset = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("odeg"))
-    val ids = nodes.select(col("id")).distinct()
-      .join(outDeg, Seq("id"), "left_outer")
-      .join(seeds.select(col("id")).distinct()
-        .withColumn("is_seed", lit(true)), Seq("id"), "left_outer")
-      .select(col("id"), col("odeg"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint(true)
-    val nS = ids.filter(col("is_seed")).count().toDouble
-    require(nS > 0, "personalized PageRank needs at least one seed")
-    val nV = ids.count()
-    // gated driver twin — see [[pageRank]]'s gate note / [[pageRankLocal]]
-    if (e.count() <= Gates.edges)
-      return pageRankLocal(e, ids, nV.toDouble, iters, damping, reset,
-        isPpr = true, nS = nS)
-    // same iterate-broadcast gate as [[pageRank]], edge gate included
-    val bcOk = nV <= IterateBroadcastMaxRows &&
-      e.count() < WidenRows
-    var pr = ids.select(col("id"), col("odeg"), col("is_seed"),
-        when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val dangling = pr.filter(col("odeg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-      val live = pr.filter(col("odeg").isNotNull)
-      val contribs = bcIf(bcOk, live)
-        .join(e, live("id") === e("src"))
-        .select(col("dst").as("id"), (col("rank") / col("odeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-      val next = pr.select(col("id"), col("odeg"), col("is_seed"))
-        .join(bcIf(bcOk, contribs), Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("odeg"), col("is_seed"),
-          round(
-            when(col("is_seed"),
-              lit(reset / nS) + lit(damping) *
-                (coalesce(col("contrib"), lit(0.0)) + col("dang") / nS))
-              .otherwise(lit(damping) * coalesce(col("contrib"), lit(0.0))),
-            12).as("rank"))
-        .localCheckpoint(true)
-      releaseIterate(pr)
-      pr = next
-    }
-    pr.select(col("id"), col("rank"))
-  }
+                           damping: Double = 0.85): DataFrame =
+    seededRank(nodes, edges, Some(seeds), iters, damping)
 
-  /** Driver-local twin of [[pageRank]] / [[personalizedPageRank]]'s
-    * round loop (gated there). Replays the damped recurrence op for
-    * op on the collected (src, dst) rows under the SAME 12-dp
-    * per-iterate quantization contract the oracle replay rests on
-    * (the contrib/dangling sums are order-dependent double adds whose
-    * ~1e-16 relative noise the quantization absorbs — this twin's
-    * summation order is one more such order, exactly like DuckDB's).
-    * The driver state is EDGE-INCIDENT nodes only: every off-edge
-    * node is dangling with no in-edges, so the whole class shares one
-    * scalar rank trajectory (two for PPR: seed / non-seed, the latter
-    * identically 0.0), folded into the dangling mass by
-    * multiplication and re-attached through the final left join —
-    * the driver never holds |V| rows. Edges whose src is not a node
-    * row contribute nothing (the distributed gather joins on the
-    * iterate), and contributions to non-node dsts are dropped (the
-    * iterate left join) — both replayed here via the membership
-    * filter. */
-  private def pageRankLocal(e: DataFrame, ids: DataFrame, n: Double,
-      iters: Int, damping: Double, reset: Double,
-      isPpr: Boolean, nS: Double = 0.0): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val all = LocalGraph.collect(e, "src", "dst")
-    releaseIterate(e)
-    val (g, veRows) = all.restrict(ids)
-    val nVe = g.n
-    val vid = g.ids
-    val es = g.src; val ed = g.dst
-    val odeg = new Array[Long](nVe)
-    val seed = new Array[Boolean](nVe)
-    var i = 0
-    while (i < nVe) {
-      val r = veRows(i)
-      odeg(i) = if (r.isNullAt(1)) 0L else r.getLong(1)
-      seed(i) = isPpr && r.getBoolean(2)
-      i += 1
-    }
+  /** The PageRank program over directed edges (no seed set = every node
+    * a seed). Each node sends rank/out-degree along its out-edges; the
+    * out-degree counts every edge, so mass sent to an id that is not a
+    * node row is lost, and a node with no out-edge is dangling: its
+    * rank is the program's global, folded back in as a broadcast 1-row
+    * aggregate. Ranks are quantized to 12 dp each iteration: the
+    * contrib and dangling sums are double additions whose order is run-
+    * and engine-dependent (~1e-18 noise), and quantizing makes every
+    * iterate bit-deterministic, so the unrolled DuckDB oracle replays
+    * the loop exactly; the driver fold's summation order is one more
+    * such order. The teleport constant is derived in decimal: (1 − 0.85)
+    * in binary doubles is 1 ulp away from the literal 0.15 a SQL oracle
+    * parses, which would skew every iterate by ~1e-17 and make the
+    * quantization a coin flip near rounding boundaries. */
+  private def seededRank(nodes: DataFrame, edges: DataFrame,
+                         seeds: Option[DataFrame], iters: Int,
+                         damping: Double): DataFrame = {
+    val reset = (BigDecimal(1) - BigDecimal(damping.toString)).toDouble
+    val ids = nodes.select(col("id")).distinct()
+    // (id, is_seed), materialized in the job that counts the seeds
+    val (base, nSeeds) = checkpointPredCounted(seeds.fold(ids.withColumn("is_seed", lit(true)))(
+      s => ids.join(s.select(col("id"), lit(true).as("hit")).distinct(), Seq("id"), "left_outer")
+        .select(col("id"), col("hit").isNotNull.as("is_seed"))), col("is_seed"))
+    if (seeds.isDefined)
+      require(nSeeds > 0, "personalized PageRank needs at least one seed")
+    val nS = nSeeds.toDouble
     def r12(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    var rank = new Array[Double](nVe)
-    i = 0
-    while (i < nVe) {
-      rank(i) = if (!isPpr) 1.0 / n else if (seed(i)) 1.0 / nS else 0.0
-      i += 1
-    }
-    var nSeedVe = 0L
-    i = 0
-    while (i < nVe) { if (seed(i)) nSeedVe += 1; i += 1 }
-    val nOff = n - nVe            // plain: all off-edge nodes, all dangling
-    val nOffSeed = nS - nSeedVe   // ppr: off-edge seeds (non-seeds stay 0.0)
-    var offRank = if (!isPpr) 1.0 / n else 0.0      // plain off-edge class
-    var offSeedRank = if (isPpr) 1.0 / nS else 0.0  // ppr off-edge seeds
-    var it = 0
-    while (it < iters) {
-      var dang = 0.0
-      i = 0
-      while (i < nVe) { if (odeg(i) == 0L) dang += rank(i); i += 1 }
-      dang += (if (!isPpr) nOff * offRank else nOffSeed * offSeedRank)
-      val acc = new Array[Double](nVe)
-      i = 0
-      while (i < g.m) { acc(ed(i)) += rank(es(i)) / odeg(es(i)); i += 1 }
-      val next = new Array[Double](nVe)
-      i = 0
-      while (i < nVe) {
-        next(i) =
-          if (!isPpr) r12(reset / n + damping * (acc(i) + dang / n))
-          else if (seed(i)) r12(reset / nS + damping * (acc(i) + dang / nS))
-          else r12(damping * acc(i))
-        i += 1
+    gatherRounds(new GatherProgram[Double](Encoders.scalaDouble) {
+      val symmetric = false
+      override val outDegree = true
+      val init = when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0))
+      override val message = col("x") / col("odeg")
+      def combine(msgs: DataFrame): DataFrame =
+        msgs.groupBy(col("id")).agg(sum(col("m")).as("agg"))
+      val update = round(
+        when(col("is_seed"),
+          lit(reset / nS) + lit(damping) * (coalesce(col("agg"), lit(0.0)) + col("g") / nS))
+          .otherwise(lit(damping) * coalesce(col("agg"), lit(0.0))), 12)
+      override val global = coalesce(sum(when(col("odeg").isNull, col("x"))), lit(0.0))
+      def local(rows: Array[Row], odeg: Array[Long]): GatherLocal[Double] = new GatherLocal[Double] {
+        private val seed = rows.map(_.getAs[Boolean]("is_seed"))
+        def init(i: Int): Double = if (seed(i)) 1.0 / nS else 0.0
+        override def message(i: Int, x: Double): Double = x / odeg(i)
+        def fold(own: Double, m: Array[Double], snd: Array[Int], lo: Int, hi: Int): Double = {
+          var s = 0.0; var j = lo
+          while (j < hi) { s += m(snd(j)); j += 1 }
+          s
+        }
+        override def update(i: Int, agg: Double, g: Double): Double =
+          r12(if (seed(i)) reset / nS + damping * (agg + g / nS) else damping * agg)
+        override def global(i: Int, x: Double): Double = if (odeg(i) == 0L) x else 0.0
       }
-      rank = next
-      if (!isPpr) offRank = r12(reset / n + damping * (dang / n))
-      else offSeedRank = r12(reset / nS + damping * (dang / nS))
-      it += 1
-    }
-    val offExpr =
-      if (!isPpr) lit(offRank)
-      else when(col("is_seed"), lit(offSeedRank)).otherwise(lit(0.0))
-    LocalGraph.attach(ids, LocalGraph.relation(spark,
-        (0 until nVe).map(j => (vid(j), rank(j))), "id", "lr"))(
-      col("id"), coalesce(col("lr"), offExpr).as("rank"))
+    }, base, edges, iters).select(col("id"), col("x").as("rank"))
   }
 
   /** Multi-seed hop-count BFS: the sparse reached set (seed, id, d) for
@@ -2682,42 +2576,72 @@ object Algorithms {
     * exit holds one, already materialized). Callers chaining kernels
     * back-to-back, or looping over seed batches, should run their
     * first action on (or checkpoint) the result before building the
-    * next kernel's state — details at the loop's release comment. */
+    * next kernel's state. */
   def hopDistances(seeds: DataFrame, edges: DataFrame,
                    maxRounds: Int): DataFrame = {
     // the edge materialization's internal count doubles as the image
     // gate probe (cells = directed edge rows)
     val (e, cells) = checkpointCounted(edges.select(col("src"), col("dst")))
-    if (cells <= Gates.cells) {
+    if (cells > Gates.cells) bfsRounds(seeds, e, maxRounds, sigma = false)
+    else {
       val out = hopDistancesImg(seeds, e, maxRounds)
       releaseIterate(e)
-      return out
+      out
     }
-    var dist = seeds.select(col("id").as("seed"), col("id"), lit(0L).as("d"))
+  }
+
+  /** The shortest-path COUNTS variant of [[hopDistances]]' distributed
+    * loop over an edge frame the CALLER already materialized
+    * (checkpoint or cheap projection of one): (seed, id, d, sigma) where
+    * sigma = number of distinct shortest paths seed→id — the forward
+    * pass of Brandes' betweenness algorithm (Brandes 2001). The
+    * betweenness kernel shares ONE edge checkpoint between this forward
+    * pass and its backward layers; a second internal checkpoint would
+    * double the largest object in the job (measured: 2 × ~170M-row
+    * copies OOM an 8 GiB executor JVM at the 150k-node ScaleBench point
+    * where one copy fits). Kernel for [[graft.graph.Clouds.betweenness]]. */
+  private[graft] def hopDistancesSigmaOn(seeds: DataFrame, e: DataFrame,
+                                         maxRounds: Int): DataFrame =
+    bfsRounds(seeds, e, maxRounds, sigma = true)
+
+  /** The frontier-delta BFS loop behind [[hopDistances]] and
+    * [[hopDistancesSigmaOn]]. With `sigma`, each row also carries its
+    * shortest-path count. Correctness rides on the BFS layer invariant:
+    * every shortest-path predecessor of a node first reached in round r
+    * sits at distance r−1, i.e. exactly in the previous round's
+    * newly-reached frontier — so `sum(sigma)` over the frontier-join
+    * rows IS the path count, in the same single keyed aggregate as the
+    * distance. Sigma is DECIMAL(38,0): path counts multiply along dense
+    * layers and can pass 2^63 long before the row counts are a problem;
+    * the decimal sum is exact (and overflow → null, never a silent
+    * wrap). */
+  private def bfsRounds(seeds: DataFrame, e: DataFrame, maxRounds: Int,
+                        sigma: Boolean): DataFrame = {
+    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
+    def withSigma(base: Seq[Column], s: Column): Seq[Column] =
+      if (sigma) base :+ s.as("sigma") else base
+    var dist = seeds.select(withSigma(Seq(col("id").as("seed"), col("id"),
+        lit(0L).as("d")), lit(1).cast(dec0)): _*)
       .localCheckpoint(true)
     // ONE action per round (the SSSP pattern): `newly`'s count job also
     // materializes the LAZY union checkpoint of the previous round's
     // iterate (the anti-join reads it), so the eager per-round union
     // job is gone. An iterate may only be released once the next union
     // that reads its blocks has materialized — i.e. two rounds later —
-    // so the supersede window is two iterates deep, not one.
-    // Memory contract on the maxRounds exit (live still true when the
-    // bound trips): the returned `dist` is the final round's LAZY union
-    // checkpoint — not yet materialized — and the last `older` iterate
-    // is intentionally retained (its blocks feed that union). Until the
-    // caller's first action on the result, TWO iterates stay resident;
-    // callers chaining kernels back-to-back at the 150k-node ScaleBench
-    // point should run their first action (or checkpoint) on the result
-    // before building the next kernel's state. The converged exit
-    // returns a materialized iterate and holds only one.
+    // so the supersede window is two iterates deep, not one. On the
+    // maxRounds exit the last `older` stays resident on purpose: its
+    // blocks feed the returned lazy union ([[hopDistances]]' memory
+    // contract).
     var older: DataFrame = null
     var frontier = dist
     var r = 0
     var live = true
     while (r < maxRounds && live) {
       val cand = frontier.join(e, frontier("id") === e("src"))
-        .select(col("seed"), col("dst").as("id"), (col("d") + 1).as("d"))
-        .groupBy(col("seed"), col("id")).agg(min(col("d")).as("d"))
+        .select(withSigma(Seq(col("seed"), col("dst").as("id"), (col("d") + 1).as("d")),
+          col("sigma")): _*)
+        .groupBy(col("seed"), col("id"))
+        .agg(min(col("d")).as("d"), withSigma(Nil, sum(col("sigma")).cast(dec0)): _*)
       // one-job count + materialization ([[checkpointCounted]] — this
       // loop pioneered the fused idiom; the helper upgrades its count
       // from an AQE-staged aggregate to a single RDD job)
@@ -2726,62 +2650,6 @@ object Algorithms {
       live = nNew > 0 // the count job materialized newly AND the lazy iterate
       // `dist` is materialized now; the iterate two rounds back can no
       // longer be read by anything live
-      if (older ne null) { releaseIterate(older); older = null }
-      if (live) {
-        older = dist
-        dist = dist.unionByName(newly).localCheckpoint(false)
-        frontier = newly
-      }
-      r += 1
-    }
-    dist
-  }
-
-  /** [[hopDistances]] extended with shortest-path COUNTS: (seed, id, d,
-    * sigma) where sigma = number of distinct shortest paths seed→id —
-    * the forward pass of Brandes' betweenness algorithm (Brandes 2001).
-    * Correctness rides on the BFS layer invariant: every shortest-path
-    * predecessor of a node first reached in round r sits at distance
-    * r−1, i.e. exactly in the previous round's newly-reached frontier —
-    * so `sum(sigma)` over the frontier-join rows IS the path count, in
-    * the same single keyed aggregate the distance loop already runs.
-    * Sigma is DECIMAL(38,0): path counts multiply along dense layers
-    * and can pass 2^63 long before the row counts are a problem; the
-    * decimal sum is exact (and overflow → null, never a silent wrap).
-    * Kernel for [[graft.graph.Clouds.betweenness]]. */
-  def hopDistancesSigma(seeds: DataFrame, edges: DataFrame,
-                        maxRounds: Int): DataFrame =
-    hopDistancesSigmaOn(seeds,
-      edges.select(col("src"), col("dst")).localCheckpoint(true), maxRounds)
-
-  /** [[hopDistancesSigma]] over an edge frame the CALLER already
-    * materialized (checkpoint or cheap projection of one) — the
-    * betweenness kernel shares ONE edge checkpoint between this
-    * forward pass and its backward layers; a second internal
-    * checkpoint would double the largest object in the job (measured:
-    * 2 × ~170M-row copies OOM an 8 GiB executor JVM at the 150k-node
-    * ScaleBench point where one copy fits). */
-  private[graft] def hopDistancesSigmaOn(seeds: DataFrame, e: DataFrame,
-                                         maxRounds: Int): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    var dist = seeds.select(col("id").as("seed"), col("id"), lit(0L).as("d"),
-        lit(1).cast(dec0).as("sigma"))
-      .localCheckpoint(true)
-    // one action per round; two-deep supersede window (see hopDistances)
-    var older: DataFrame = null
-    var frontier = dist
-    var r = 0
-    var live = true
-    while (r < maxRounds && live) {
-      val cand = frontier.join(e, frontier("id") === e("src"))
-        .select(col("seed"), col("dst").as("id"), (col("d") + 1).as("d"),
-          col("sigma"))
-        .groupBy(col("seed"), col("id"))
-        .agg(min(col("d")).as("d"), sum(col("sigma")).cast(dec0).as("sigma"))
-      // one-job count + materialization (see hopDistances)
-      val (newly, nNew) = checkpointCounted(cand
-        .join(dist.select(col("seed"), col("id")), Seq("seed", "id"), "left_anti"))
-      live = nNew > 0 // the count job materialized newly AND the lazy iterate
       if (older ne null) { releaseIterate(older); older = null }
       if (live) {
         older = dist

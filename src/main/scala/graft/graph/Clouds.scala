@@ -1296,7 +1296,7 @@ object Clouds {
     * over the SAME [[EccSeeds]]-seed / [[EccMaxRounds]]-hop budgeted
     * BFS as [[eccentricity]]/[[harmonic]], on the symmetrized
     * query-threshold graph. Per seed s: forward BFS counts shortest
-    * paths ([[Algorithms.hopDistancesSigma]] — sigma rides the
+    * paths ([[Algorithms.hopDistancesSigmaOn]] — sigma rides the
     * existing frontier-delta loop), then layers accumulate backward,
     *   δ(u) = Σ_{v ∈ succ(u)} σ(u)/σ(v) · (1 + δ(v)),
     * and b(v) = Σ_s δ_s(v) for v ≠ s (the K-sample estimator; no
@@ -2703,36 +2703,6 @@ object Clouds {
                     CAST(4 * m * m AS DOUBLE), 6) AS modularity
        FROM ms, ec, ag"""
 
-  /** PageRank unrolled to `iters` stages. The per-node contribution SUM
-    * is order-dependent double addition, so BOTH engines quantize each
-    * iterate to 12 dp (see [[Algorithms.pageRank]]) — the recurrence is
-    * then bit-deterministic and replays identically here. */
-  private def pagerankOracle(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""p$i AS MATERIALIZED (
-         SELECT b.id, b.odeg,
-           ROUND(0.15 / nn.n + 0.85 * (COALESCE(c.contrib, 0) +
-             (SELECT COALESCE(SUM(rank), 0) FROM p${i - 1} WHERE odeg IS NULL) / nn.n), 12)
-             AS rank
-         FROM base b CROSS JOIN ncount nn LEFT JOIN (
-           SELECT e.dst AS id, SUM(p.rank / p.odeg) AS contrib
-           FROM p${i - 1} p JOIN te e ON e.src = p.id
-           WHERE p.odeg IS NOT NULL GROUP BY e.dst) c ON c.id = b.id)"""
-    }.mkString(",\n")
-    s"""$OracleCte,
-       te AS MATERIALIZED (SELECT src, dst FROM edges WHERE distance <= 0.10),
-       ncount AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-       base AS MATERIALIZED (
-         SELECT n.id, o.odeg FROM nodes n
-         LEFT JOIN (SELECT src, COUNT(*) AS odeg FROM te GROUP BY src) o
-           ON n.id = o.src),
-       p0 AS MATERIALIZED (
-         SELECT b.id, b.odeg, 1.0 / nn.n AS rank
-         FROM base b CROSS JOIN ncount nn),
-       $steps
-       SELECT id, rank FROM p$iters ORDER BY id"""
-  }
-
   /** [[eigenWalks]] replay: the power iterate unrolled to `rounds`
     * stages — pure integer sums (x₀ = 1, xₜ₊₁(v) = Σ_{u∼v} xₜ(u)), so
     * the replay is unconditional; the SUM lands in DuckDB's HUGEINT
@@ -2778,10 +2748,13 @@ object Clouds {
        FROM bfs GROUP BY seed, id HAVING MIN(d) >= 1
        ORDER BY seed_phage, reached"""
 
-  /** [[personalizedPageRank]] replay: the [[pagerankOracle]] recurrence
-    * with the teleport/dangling terms gated by seed membership and
-    * divided by |S| instead of n — same 12-dp iterate quantization. */
-  private def pprOracle(iters: Int): String = {
+  /** [[personalizedPageRank]] replay, unrolled to `iters` stages, over
+    * the seeds `seedRule` selects; [[pageRank]]'s with the rule `TRUE`
+    * (every node a seed, |S| = n), as in [[Algorithms.pageRank]]. The
+    * per-node contribution SUM is order-dependent double addition, so
+    * BOTH engines quantize each iterate to 12 dp — the recurrence is
+    * then bit-deterministic and replays identically here. */
+  private def pprOracle(iters: Int, seedRule: String): String = {
     val steps = (1 to iters).map { i =>
       s"""r$i AS MATERIALIZED (
          SELECT b.id, b.odeg, b.is_seed,
@@ -2796,8 +2769,7 @@ object Clouds {
     }.mkString(",\n")
     s"""$OracleCte,
        te AS MATERIALIZED (SELECT src, dst FROM edges WHERE distance <= 0.10),
-       sset AS (SELECT id FROM nodes
-                WHERE source='BUILDING' AND contains(taxonomy,'4')),
+       sset AS (SELECT id FROM nodes WHERE $seedRule),
        scount AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM sset),
        pbase AS MATERIALIZED (
          SELECT n.id, o.odeg, s.id IS NOT NULL AS is_seed FROM nodes n
@@ -3044,9 +3016,9 @@ object Clouds {
          FROM i JOIN deg da ON da.node = i.a JOIN deg db ON db.node = i.b
          WHERE i.common_neighbors >= 3
          ORDER BY i.a, i.b""",
-    "g_pagerank" -> pagerankOracle(10),
+    "g_pagerank" -> pprOracle(10, "TRUE"),
     "g_eigen_walks" -> eigenWalksOracle(Algorithms.EigenWalkRounds),
-    "g_ppr" -> pprOracle(10),
+    "g_ppr" -> pprOracle(10, "source='BUILDING' AND contains(taxonomy,'4')"),
     "g_khop_reach" -> khopOracle(KhopMaxHops),
     // JSON attr payloads rebuilt by string concatenation: longs/strings
     // render identically, and DuckDB's double->varchar is the same

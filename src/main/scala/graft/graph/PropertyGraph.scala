@@ -21,7 +21,6 @@ import org.apache.spark.sql.functions._
   */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 
-  def filterNodes(cond: Column): PropertyGraph = copy(nodes = nodes.filter(cond))
   def filterEdges(cond: Column): PropertyGraph = copy(edges = edges.filter(cond))
 
   /** Both edge directions, preserving property columns. */

@@ -191,6 +191,7 @@ class AlgorithmsSpec extends SparkSpec {
     for (raw <- Seq(loopFree, withLoops)) {
       val edges = raw.toDF("src", "dst")
       def loop[T](body: => T): T = Gates.within(edges = -1L)(body)
+      def driver[T](body: => T): T = Gates.within(edges = Long.MaxValue)(body)
       close(dmap(Algorithms.pageRank(okNodes, edges)),
         loop(dmap(Algorithms.pageRank(okNodes, edges))))
       close(dmap(Algorithms.personalizedPageRank(okNodes, edges, seeds)),
@@ -204,7 +205,49 @@ class AlgorithmsSpec extends SparkSpec {
         loop(lmap(Algorithms.walkCounts(nodes, edges))))
       close(dmap(Algorithms.pageRank(nodes, edges)),
         loop(dmap(Algorithms.pageRank(nodes, edges))))
+      // plain PageRank is PPR with every node a seed, bit for bit, on
+      // both gate sides
+      for (ns <- Seq(okNodes, nodes)) {
+        assert(driver(dmap(Algorithms.personalizedPageRank(ns, edges, seeds = ns))) ==
+          driver(dmap(Algorithms.pageRank(ns, edges))))
+        assert(loop(dmap(Algorithms.personalizedPageRank(ns, edges, seeds = ns))) ==
+          loop(dmap(Algorithms.pageRank(ns, edges))))
+      }
     }
+    // which path ran: the driver executor's job count does not depend
+    // on the round count, the distributed loop's grows with it. Counts
+    // every job a call launches, its result collect included, with a
+    // listener (the status store keeps only the last 1000 jobs),
+    // settled the way ExactTwinSpec settles its count
+    val started = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    def jobsSeen(): Long = started.get()
+    def jobs(body: => Unit): Long = {
+      val before = JitAudit.awaitStable(() => jobsSeen(), pollMs = 50)
+      body
+      JitAudit.awaitStable(() => jobsSeen(), pollMs = 50) - before
+    }
+    val edges = withLoops.toDF("src", "dst")
+    val kernels = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (r => Algorithms.pageRank(okNodes, edges, iters = r)),
+      "personalizedPageRank" -> (r =>
+        Algorithms.personalizedPageRank(okNodes, edges, seeds, iters = r)),
+      "labelPropagation" -> (r => Algorithms.labelPropagation(okNodes, edges, rounds = r)),
+      "walkCounts" -> (r => Algorithms.walkCounts(okNodes, edges, rounds = r)))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((name, run) <- kernels) {
+        def count(bound: Long, rounds: Int): Long =
+          Gates.within(edges = bound)(jobs(run(rounds).collect()))
+        val (d1, d6) = (count(Long.MaxValue, 1), count(Long.MaxValue, 6))
+        assert(d1 == d6, s"$name: the driver executor ran $d1 jobs at 1 round, $d6 at 6")
+        val (l1, l6) = (count(-1L, 1), count(-1L, 6))
+        assert(l6 > l1, s"$name: the distributed loop ran $l1 jobs at 1 round, $l6 at 6")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("shortest paths match Dijkstra on a weighted fixture") {
