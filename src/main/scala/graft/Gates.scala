@@ -18,7 +18,11 @@ import scala.util.DynamicVariable
   *  - [[cells]]: 256M adjacency-array cells (2|E|, one per endpoint) in
   *    a broadcast CSR image: ≈ 2 GB as longs, the dense-synthetic
   *    150k/85M point. Images index nodes by int, which this bound keeps
-  *    safe: ≤ 256M cells means |V| ≤ cells + 1 < 2³¹.
+  *    safe: ≤ 256M cells means |V| ≤ cells + 1 < 2³¹. One place reads
+  *    it for every image: [[graph.Algorithms.collectAdjImage]], the
+  *    image tier that builds, gates and destroys each broadcast image.
+  *    The walk kernels' driver-built images also check it beside
+  *    [[edges]].
   *  - [[bytes]]: 256 MiB of collected strings, for the driver-local
   *    pair kernel over the capped (doc_id, gram) table and for the BPE
   *    trainer's wrapped corpus — one copy of either is trivial against

@@ -142,52 +142,33 @@ object ScaleBench {
     timed("eigen_walks") {
       Algorithms.walkCounts(nodes, edges, nSymHint = 2L * nEdges)
     }
-    // the truss pair pins a broadcast adjacency image per result —
-    // destroy each once counted so later kernels get the heap back
-    // (broadcast blocks are invisible to the persistent-RDD sweep)
-    var trussBc: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     timed("truss_support") {
-      val (df, bc) = Algorithms.edgeSupportImg(
-        edges.select(col("src").as("u"), col("dst").as("v")),
-        symCellsHint = 2 * nEdges)
-      trussBc = bc
-      df
+      Algorithms.edgeSupport(edges.select(col("src").as("u"), col("dst").as("v")))
     }
-    trussBc.foreach(_.destroy()); trussBc = None
     timed("ktruss") {
       // dense-blob caveat: the synthetic same-group blobs barely peel
       // at k=4 (support ≈ blob size), so this measures the
       // fixpoint-detect cost (2 support passes) rather than a long
       // peel — the per-round cost is the truss_support row above
-      val (df, bc) = Algorithms.kTrussImg(
-        edges.select(col("src"), col("dst")), k = 4)
-      trussBc = bc
-      df
+      Algorithms.kTruss(edges.select(col("src"), col("dst")), k = 4)
     }
-    trussBc.foreach(_.destroy())
-    var sqBc: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     timed("square_count") {
-      // the g_square_count image path: zero-exchange census over the
-      // broadcast CSR adjacency (Σdeg² cells as a narrow map)
-      val (df, bc) = Algorithms.squareCensusImg(
+      // the g_square_count kernel: under the image bound, the
+      // zero-exchange census over the broadcast CSR adjacency (Σdeg²
+      // cells as a narrow map)
+      graft.graph.Clouds.squareCountOnCanon(
         edges.select(col("src").as("u"), col("dst").as("v")))
-      sqBc = Some(bc)
-      df
     }
-    sqBc.foreach(_.destroy()); sqBc = None
     timed("neighbor_jaccard") {
-      // image-path pair emission, COUNTED not checkpointed: on the
+      // the g_neighbor_jaccard kernel, its pairs materialized: on the
       // dense-blob synthetic every within-blob pair clears τ=0.3, so
       // the qualifying-pair volume itself is the dominant term here
       // (a real similarity graph's τ filter prunes far harder)
-      val (df, bc) = Algorithms.jaccardPairsImg(
+      graft.graph.Clouds.neighborJaccardOn(
         edges.select(col("src").as("node"), col("dst").as("nbr"))
           .unionByName(edges.select(col("dst").as("node"), col("src").as("nbr"))),
         minSim = 0.3)
-      sqBc = Some(bc)
-      df
     }
-    sqBc.foreach(_.destroy()); sqBc = None
     timed("rich_club") {
       graft.graph.Clouds.richClubOnCanon(spark,
         edges.select(col("src").as("u"), col("dst").as("v")))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import graft.Gates
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms on DataFrames.
@@ -450,33 +451,19 @@ object Algorithms {
     * (every k-truss is inside the (k−1)-core). Returns the surviving
     * canonical edges with their final within-truss support.
     *
-    * Shape per peel round: pack each survivor node's adjacency (over
-    * surviving edges only) into ONE sorted array row, join each
-    * surviving edge to its two endpoint arrays, and count common
-    * neighbours with the native two-pointer
-    * [[graft.functions.SortedIntersectCount]] — the
-    * [[Clouds.neighborJaccardCapped]] rescore idiom. The support join
-    * shuffles Σdeg array cells (the same volume an exploded
-    * wedge-join would shuffle BEFORE its blow-up: listing wedges
-    * materializes Σdeg² rows, which at hub degree is the classic
-    * truss-counting bomb); per-edge compute is O(deg u + deg v)
-    * inside codegen. The peel loop strictly shrinks the edge set, so
+    * Shape per peel round: one [[edgeSupport]] pass within the
+    * survivors — the [[pairRescore]] of each surviving edge against
+    * the survivors' own adjacency: a broadcast image under the image
+    * bound; above it the array join, which shuffles Σdeg array cells
+    * (the volume an exploded wedge-join would shuffle BEFORE its
+    * blow-up: listing wedges materializes Σdeg² rows, which at hub
+    * degree is the classic truss-counting bomb). Per-edge compute is
+    * O(deg u + deg v). The peel loop strictly shrinks the edge set, so
     * later rounds get cheaper; one checkpoint action per round with
     * the convergence probe reading the checkpointed result — the
     * [[kCore]] loop discipline, and superseded iterates released. */
   def kTruss(edges: DataFrame, k: Int,
-             maxRounds: Int = KTrussMaxRounds): DataFrame =
-    kTrussImg(edges, k, maxRounds)._1
-
-  /** [[kTruss]] plus the broadcast handle behind the FINAL support
-    * pass's adjacency image (None on the shuffle path) — the returned
-    * frame pins the image until the caller's action completes (the
-    * standard iterate-lifetime contract); callers that chain further
-    * work in one session should destroy it once the result is
-    * consumed, because block-manager blocks are not heap-collectable. */
-  private[graft] def kTrussImg(edges: DataFrame, k: Int,
-      maxRounds: Int = KTrussMaxRounds): (DataFrame,
-        Option[org.apache.spark.broadcast.Broadcast[AdjImage]]) = {
+             maxRounds: Int = KTrussMaxRounds): DataFrame = {
     // CALLER-OWNED input contract (the [[boruvkaMst]] lesson, §4.13
     // r12(a)): round 0 scans `edges` as-is — three narrow scans per
     // support pass, NOT a defensive re-checkpoint, which at 150k/85M
@@ -501,28 +488,23 @@ object Algorithms {
     // within the current survivors, synchronous filter, fixpoint =
     // unchanged count; same final >0 cut), so results are identical by
     // construction; TrussSpec pins local == distributed on a planted
-    // graph. Above the gate the per-round image/shuffle plans stand —
-    // their Σdeg cell work is the intrinsic cost and parallelizes
-    // per partition on a cluster.
+    // graph. Above the gate the per-round support passes stand — their
+    // Σdeg cell work is the intrinsic cost and parallelizes per
+    // partition on a cluster.
     if (size <= Gates.edges) {
       val spark = edges.sparkSession
       import spark.implicits._
       val rows = trussPeelLocal(LocalGraph.collect(surv, "u", "v"), k, maxRounds)
-      return (LocalGraph.relation(spark, rows.toIndexedSeq, "u", "v", "support"),
-        None)
+      return LocalGraph.relation(spark, rows.toIndexedSeq, "u", "v", "support")
     }
     var round = 0
     var done = size == 0L
     while (!done && round < maxRounds) {
-      val (sup, bc) = edgeSupportImg(surv, 2 * size)
-      // ONE job: the count materializes the lazy (serialized) checkpoint
-      val (next, m) = checkpointCounted(sup
+      // ONE job: the count materializes the lazy (serialized)
+      // checkpoint, so the round's image can go when the pass returns
+      val (next, m) = supportOf(surv, size)(sup => checkpointCounted(sup
         .filter(col("support") >= k - 2)
-        .select(col("u"), col("v")), Some(ser))
-      // next is materialized: this round's adjacency image and the
-      // superseded survivor checkpoint can go immediately (block-manager
-      // blocks are not heap-collectable — see [[edgeSupportImg]])
-      bc.foreach(_.destroy())
+        .select(col("u"), col("v")), Some(ser)))
       done = m == size // monotone: equal size ⇒ identical set ⇒ fixpoint
       releaseIterate(survCp)
       survCp = next
@@ -533,15 +515,17 @@ object Algorithms {
     // One more support pass WITHIN the final survivor set scores the
     // kept edges (on a converged exit it recomputes the fixpoint
     // round's values — memory-cheaper than checkpointing the wide
-    // support table every round, and pure broadcast-side compute under
-    // the [[Gates.cells]] gate). The >0 guard matches the
-    // oracle's final inner wedge-join, which drops
-    // common-neighbour-free edges too.
-    val (fin, finBc) = edgeSupportImg(surv, 2 * size)
-    (fin.filter(col("support") > 0), finBc)
+    // support table every round). The >0 guard matches the oracle's
+    // final inner wedge-join, which drops common-neighbour-free edges
+    // too. The scored set is materialized, so the last survivor
+    // checkpoint goes with the image.
+    val fin = supportOf(surv, size)(sup =>
+      sup.filter(col("support") > 0).localCheckpoint(true, ser))
+    releaseIterate(survCp)
+    fin
   }
 
-  /** The flat adjacency image behind [[edgeSupport]]'s broadcast path:
+  /** The flat adjacency image of the broadcast tier ([[collectAdjImage]]):
     * node ids sorted ascending, CSR-style offsets into ONE flat
     * neighbour array whose cells are INT INDICES into `ids` (each
     * node's slice ascending — index order = id order, so the
@@ -611,59 +595,36 @@ object Algorithms {
     c
   }
 
-  /** Per-edge triangle support of a canonical (u < v) edge set: pack
-    * each node's adjacency into ONE sorted array row, join each edge
-    * to its two endpoint arrays, count common neighbours with the
-    * native two-pointer [[graft.functions.SortedIntersectCount]].
-    * Every edge survives (its endpoints always have adjacency rows —
-    * they contain each other), so 0-support edges come through with
-    * support 0. Shared by [[kTruss]]'s peel rounds and
-    * [[Clouds.trussSupport]]'s one-shot report.
-    *
-    * PLAN SHAPE — the second join is the scale hazard: left as a pair
-    * of shuffle joins, join-1's output re-exchanges (u, v, adj_u) rows
-    * by v, i.e. Σ_e deg(u) array CELLS through the wire (measured:
-    * 24 GB at 47k/8.4M on the dense synthetic, page-cache-masked until
-    * the next query pays the writeback). When the caller knows the
-    * symmetric cell count (2|E|) and it clears [[Gates.cells]],
-    * the packed adjacency is collected into a flat [[AdjImage]] and
-    * broadcast ONCE, and support becomes a single narrow map over the
-    * edge stream — zero joins, zero exchanges, two slice lookups + a
-    * two-pointer intersect per edge (the [[Similarity.embeddingNearDup]]
-    * collect-then-tight-JVM-loop idiom; a broadcast-HASH-JOIN plan of
-    * the same shape builds a HashedRelation whose ~100 B/row overhead
-    * and execution-memory charge trip
-    * notEnoughMemoryToBuildAndBroadcastTableError at 150k/85M in the
-    * 8 GiB JVM the image fits comfortably). Above the gate
-    * (billion-node corpora) the shuffle plan stands — Σdeg² cell
-    * movement is the intrinsic cost of exact triangle counting
-    * (wedge-join formulations ship the same volume as rows), and it
-    * parallelizes per-partition on a cluster. */
-  def edgeSupport(surv: DataFrame, symCellsHint: Long = -1L): DataFrame =
-    edgeSupportImg(surv, symCellsHint)._1
-
-  /** [[edgeSupport]] plus the broadcast handle behind the gated path
-    * (None on the shuffle path), so loop callers ([[kTruss]]) can
-    * destroy a superseded round's adjacency image instead of waiting
-    * for the ContextCleaner's GC-driven sweep — block-manager blocks
-    * are not heap-collectable, so an r-round peel would otherwise hold
-    * r images' worth of storage at worst. */
-  /** Collect a packed (node, sorted-adjacency) frame into a broadcast
-    * [[AdjImage]]. Two driver hops, both int-lean: (1) the sorted id
-    * dictionary (|V| longs), broadcast back so (2) each adjacency
-    * slice is translated long→index EXECUTOR-side and only int cells
-    * cross the driver — the long-cell single-collect variant held 2×
-    * the bytes and OOM'd the 8 GiB JVM at 150k/85M. The caller owns
-    * (and destroys) the returned broadcast. */
-  private[graft] def collectAdjImage(adj0: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[AdjImage] = {
-    val spark = adj0.sparkSession
+  /** THE broadcast image tier: every kernel whose small-graph plan runs
+    * over a flat CSR [[AdjImage]] builds, gates and destroys it here.
+    * `uv` holds the adjacency rows (u, v) — slice u lists v — and
+    * `cells` is their row count, which every caller has already
+    * measured. At most [[Gates.cells]] cells (the one place the image
+    * bound is read) the rows are packed per u, sorted, and collected in
+    * two int-lean driver hops: (1) the sorted id dictionary over BOTH
+    * endpoints (|V| longs; a v that is never a u — a directed sink —
+    * gets an empty slice, so every neighbour resolves), broadcast back
+    * so (2) each slice is translated long→index EXECUTOR-side and only
+    * int cells cross the driver (the long-cell single-collect variant
+    * held 2× the bytes and OOM'd the 8 GiB JVM at 150k/85M). `body`
+    * runs over the broadcast image and MUST return a materialized
+    * result: the image is destroyed before this returns
+    * (block-manager blocks are not heap-collectable, so an image left
+    * to a lazy result stays pinned for the session). Above the bound no
+    * image exists and the distributed `join` plan runs instead — the
+    * 100 TB shape, whose intrinsic work parallelizes per partition. */
+  private[graft] def collectAdjImage[T](uv: DataFrame, cells: Long)(
+      body: Broadcast[AdjImage] => T)(join: => T): T = {
+    if (cells > Gates.cells) return join
+    val spark = uv.sparkSession
     import spark.implicits._
-    val ids: Array[Long] = adj0.select(col("node").as("value"))
-      .as[Long].collect().sorted
+    val ids: Array[Long] = uv
+      .select(explode(array(col("u").cast("long"), col("v").cast("long"))).as("value"))
+      .distinct().as[Long].collect().sorted
     val bcIds = spark.sparkContext.broadcast(ids)
     val intRows: Array[(Int, Array[Int])] =
-      adj0.select(col("node").as("_1"), col("adj").as("_2"))
+      uv.groupBy(col("u").cast("long").as("_1"))
+        .agg(sort_array(collect_list(col("v").cast("long"))).as("_2"))
         .as[(Long, Array[Long])]
         .mapPartitions { it =>
           val d = bcIds.value
@@ -671,28 +632,129 @@ object Algorithms {
             val s = new Array[Int](nbrs.length)
             var j = 0
             while (j < nbrs.length) {
-              // neighbours are nodes of the same edge set ⇒ found
               s(j) = java.util.Arrays.binarySearch(d, nbrs(j)); j += 1
             }
             (java.util.Arrays.binarySearch(d, node), s)
           }
         }.collect()
-    val img = packAdjImage(ids, intRows)
     bcIds.destroy()
-    spark.sparkContext.broadcast(img)
+    withImage(spark, packAdjImage(ids, intRows))(body)
   }
 
-  /** Exact square (4-cycle) census over a canonical (u < v) edge set —
-    * the image-gated scale path of [[Clouds.squareCountOnCanon]].
+  /** Broadcasts `img` for the run of `body` and destroys it afterwards —
+    * [[collectAdjImage]]'s last step, and the whole lifecycle of the
+    * walk kernels' driver-built images. `body` must materialize. */
+  private[graft] def withImage[T](spark: SparkSession, img: AdjImage)(
+      body: Broadcast[AdjImage] => T): T = {
+    val bc = spark.sparkContext.broadcast(img)
+    try body(bc) finally bc.destroy()
+  }
+
+  /** Intersection size and endpoint degrees (a, b, inter, da, db) for
+    * explicit pairs (a, b) against the adjacency `uv` of `cells` rows —
+    * the one pair rescore behind [[edgeSupport]], [[kTruss]]'s support
+    * passes, [[Clouds.neighborJaccardCapped]] and
+    * [[Clouds.linkPrediction]], handed to `finish`, which must
+    * materialize ([[collectAdjImage]]'s contract). Under the image
+    * bound it is one narrow map over the pair stream
+    * ([[pairIntersectImg]]); above it, the array-join rescore: each
+    * node's adjacency packed into ONE sorted array row, both endpoint
+    * arrays joined onto every pair, the native two-pointer
+    * [[graft.functions.SortedIntersectCount]] per row (Σ_pairs
+    * (deg a + deg b) array cells through two keyed exchanges, O(deg a
+    * + deg b) compute in codegen — never the Σdeg² rows of an exploded
+    * wedge join; size(array_intersect) would build a hash set per row
+    * pair). A node without adjacency scores inter = 0 on the image path
+    * and drops from the join path's inner joins; callers keep only
+    * pairs whose endpoints both have rows, or inter > 0. */
+  private[graft] def pairRescore[T](pairs: DataFrame, uv: DataFrame, cells: Long)(
+      finish: DataFrame => T): T =
+    collectAdjImage(uv, cells)(bc => finish(pairIntersectImg(pairs, bc))) {
+      val adj = uv.groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("adj"))
+      finish(pairs
+        .join(adj.select(col("u").as("a"), col("adj").as("adj_a")), Seq("a"))
+        .join(adj.select(col("u").as("b"), col("adj").as("adj_b")), Seq("b"))
+        .select(col("a"), col("b"),
+          graft.functions.SortedIntersectCount
+            .sortedIntersectCount(col("adj_a"), col("adj_b")).as("inter"),
+          size(col("adj_a")).cast("long").as("da"),
+          size(col("adj_b")).cast("long").as("db")))
+    }
+
+  /** Per-edge triangle support (u, v, support) of a canonical (u < v)
+    * edge set, materialized. Every edge comes through, 0-support edges
+    * with support 0. Shared by [[Clouds.trussSupport]]'s one-shot
+    * report and (through [[supportOf]]) [[kTruss]]'s peel rounds.
+    *
+    * PLAN SHAPE — a pair rescore of the edges against their own
+    * symmetric adjacency ([[pairRescore]]). Left to the array-join
+    * plan, the second join re-exchanges (u, v, adj_u) rows by v, i.e.
+    * Σ_e deg(u) array CELLS through the wire (measured: 24 GB at
+    * 47k/8.4M on the dense synthetic, page-cache-masked until the next
+    * query pays the writeback); under the image bound support is a
+    * single narrow map over the edge stream — zero joins, zero
+    * exchanges, two slice lookups + a two-pointer intersect per edge
+    * (a broadcast-HASH-JOIN plan of the same shape builds a
+    * HashedRelation whose ~100 B/row overhead and execution-memory
+    * charge trip notEnoughMemoryToBuildAndBroadcastTableError at
+    * 150k/85M in the 8 GiB JVM the image fits comfortably). Above the
+    * bound (billion-node corpora) the join plan stands — Σdeg² cell
+    * movement is the intrinsic cost of exact triangle counting, and it
+    * parallelizes per partition on a cluster. */
+  def edgeSupport(surv: DataFrame): DataFrame =
+    // deserialized blocks: at sf0.1 a serialized support table (Java
+    // serializer) cost g_truss_support +31% min-of-5 to write and re-read
+    supportOf(surv, surv.count())(_.localCheckpoint(true))
+
+  /** [[edgeSupport]]'s pass over `size` canonical (u, v) rows, the
+    * (u, v, support) frame handed to `finish` (which must materialize). */
+  private def supportOf[T](surv: DataFrame, size: Long)(finish: DataFrame => T): T =
+    pairRescore(surv.select(col("u").as("a"), col("v").as("b")),
+      surv.select(col("u"), col("v")).union(surv.select(col("v").as("u"), col("u").as("v"))),
+      2 * size)(r => finish(r.select(col("a").as("u"), col("b").as("v"),
+        col("inter").as("support"))))
+
+  /** The co-neighbour scatter behind [[squareCensusImg]] and
+    * [[jaccardPairsImg]]: `pairs(v)(f)` calls f(w, n_vw) once for every
+    * node w > v sharing n_vw ≥ 1 neighbours with v, streaming v's
+    * neighbours' slices into a per-partition |V|-int scratch (reset via
+    * a touched list, never re-allocated) — Σ_{u∈N(v)} deg(u) cell work
+    * per node, zero exchanges. */
+  private final class CoNeighbors(a: AdjImage) {
+    private val counts = new Array[Int](a.ids.length)
+    private val touched = new Array[Int](a.ids.length)
+    def pairs(v: Int)(f: (Int, Int) => Unit): Unit = {
+      var nTouched = 0
+      var i = a.offs(v)
+      while (i < a.offs(v + 1)) {
+        val u = a.flat(i)
+        var j = a.offs(u)
+        while (j < a.offs(u + 1)) {
+          val w = a.flat(j)
+          if (w > v) {
+            if (counts(w) == 0) { touched(nTouched) = w; nTouched += 1 }
+            counts(w) += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
+      var t = 0
+      while (t < nTouched) {
+        val w = touched(t); f(w, counts(w)); counts(w) = 0; t += 1
+      }
+    }
+  }
+
+  /** Exact square (4-cycle) census over a symmetric adjacency image —
+    * the image body of [[Clouds.squareCountOnCanon]].
     *
     * The wedge-join formulation ships Σ_m deg(m)² wedge ROWS through a
     * (a, c) exchange — the movement [[edgeSupport]]'s doc rejects at
     * 150k/85M (~770 GB). This kernel does the identical Σdeg² CELL
-    * work with ZERO exchanges: broadcast the [[AdjImage]] once, then
-    * for each node v (int index, range-partitioned) stream its
-    * neighbours' neighbour slices, accumulating co-neighbour counts
-    * n_vw for w > v in a per-thread |V|-int scratch array (reset via a
-    * touched-list, never re-allocated), and fold the three census sums
+    * work with ZERO exchanges: for each node v (int index,
+    * range-partitioned) the [[CoNeighbors]] scatter yields the
+    * co-neighbour counts n_vw for w > v, and the three census sums fold
     * locally. One tiny per-partition partial row reaches the driver.
     * Identities (integer-exact, shared with the join path):
     *   n_coneighbor_pairs = Σ_v |{w > v : n_vw ≥ 1}|
@@ -701,116 +763,56 @@ object Algorithms {
     * Skew note: range partitioning on the node index gives each task
     * Σ_{u∈N(v)} deg(u) cell work per node — even on the dense-blob
     * synthetic; a power-law corpus at cluster scale would deg²-weight
-    * the index ranges first. Above the [[Gates.cells]] gate
-    * the caller falls back to the wedge join — Σdeg² movement is then
-    * the intrinsic exact-square cost, parallel per partition. */
-  private[graft] def squareCensusImg(surv: DataFrame)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[AdjImage]) = {
-    val spark = surv.sparkSession
+    * the index ranges first. */
+  private[graft] def squareCensusImg(spark: SparkSession,
+      bc: Broadcast[AdjImage]): DataFrame = {
     import spark.implicits._
-    val adj0 = surv.select(col("u").as("node"), col("v").as("nbr"))
-      .union(surv.select(col("v").as("node"), col("u").as("nbr")))
-      .groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    val bc = collectAdjImage(adj0)
-    val n = bc.value.ids.length
-    val partials = spark.range(0, n.toLong, 1,
+    spark.range(0, bc.value.ids.length.toLong, 1,
         spark.sparkContext.defaultParallelism)
       .as[Long]
       .mapPartitions { vs =>
-        val a = bc.value
-        val nn = a.ids.length
-        val counts = new Array[Int](nn)
-        val touched = new Array[Int](nn)
+        val cn = new CoNeighbors(bc.value)
         var pairs = 0L; var wedges = 0L; var squares2x = 0L
-        vs.foreach { vl =>
-          val v = vl.toInt
-          var nTouched = 0
-          var i = a.offs(v)
-          while (i < a.offs(v + 1)) {
-            val u = a.flat(i)
-            var j = a.offs(u)
-            while (j < a.offs(u + 1)) {
-              val w = a.flat(j)
-              if (w > v) {
-                if (counts(w) == 0) { touched(nTouched) = w; nTouched += 1 }
-                counts(w) += 1
-              }
-              j += 1
-            }
-            i += 1
-          }
-          pairs += nTouched
-          var t = 0
-          while (t < nTouched) {
-            val c = counts(touched(t)).toLong
-            wedges += c
-            squares2x += c * (c - 1) / 2
-            counts(touched(t)) = 0
-            t += 1
+        vs.foreach { v =>
+          cn.pairs(v.toInt) { (_, n) =>
+            val c = n.toLong
+            pairs += 1; wedges += c; squares2x += c * (c - 1) / 2
           }
         }
         Iterator.single((pairs, wedges, squares2x))
       }
       .toDF("pairs", "wedges", "squares2x")
-    val out = partials.agg(
-      coalesce(sum(col("pairs")), lit(0L)).as("n_coneighbor_pairs"),
-      coalesce(sum(col("wedges")), lit(0L)).as("n_wedge_pairs"),
-      coalesce(expr("SUM(squares2x) DIV 2"), lit(0L)).as("n_squares"))
-    (out, bc)
+      .agg(
+        coalesce(sum(col("pairs")), lit(0L)).as("n_coneighbor_pairs"),
+        coalesce(sum(col("wedges")), lit(0L)).as("n_wedge_pairs"),
+        coalesce(expr("SUM(squares2x) DIV 2"), lit(0L)).as("n_squares"))
   }
 
-  /** Exact neighbour-Jaccard pairs over a (node, nbr) symmetric
-    * adjacency — the image-gated scale path of
-    * [[Clouds.neighborJaccard]]. Same zero-exchange scatter loop as
-    * [[squareCensusImg]] (per node v: co-neighbour counts n_vw for
-    * w > v in a reusable |V|-int scratch), but EMITTING the qualifying
-    * pairs instead of folding a census: degrees are image offset
-    * diffs, so jac = n/(deg a + deg b − n) and the τ filter evaluate
-    * entirely inside the map — only surviving rows exist at all
-    * (the wedge-join plan materializes every Σdeg² candidate into a
-    * shuffle first). The filter compares the UNROUNDED double and the
-    * emitted jaccard is HALF_UP round-6 — bit-identical to the join
-    * path's `filter(jac >= τ).select(round(jac, 6))`. */
-  private[graft] def jaccardPairsImg(nbrs: DataFrame, minSim: Double)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[AdjImage]) = {
-    val spark = nbrs.sparkSession
+  /** Exact neighbour-Jaccard pairs over a symmetric adjacency image —
+    * the image body of [[Clouds.neighborJaccardOn]]. The [[CoNeighbors]]
+    * scatter of [[squareCensusImg]], but EMITTING the qualifying pairs
+    * instead of folding a census: degrees are image offset diffs, so
+    * jac = n/(deg a + deg b − n) and the τ filter evaluate entirely
+    * inside the map — only surviving rows exist at all (the wedge-join
+    * plan materializes every Σdeg² candidate into a shuffle first). The
+    * filter compares the UNROUNDED double and the emitted jaccard is
+    * HALF_UP round-6 — bit-identical to the join path's
+    * `filter(jac >= τ).select(round(jac, 6))`. */
+  private[graft] def jaccardPairsImg(spark: SparkSession,
+      bc: Broadcast[AdjImage], minSim: Double): DataFrame = {
     import spark.implicits._
-    val adj0 = nbrs.groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    val bc = collectAdjImage(adj0)
-    val n = bc.value.ids.length
-    val out = spark.range(0, n.toLong, 1,
+    spark.range(0, bc.value.ids.length.toLong, 1,
         spark.sparkContext.defaultParallelism)
       .as[Long]
       .mapPartitions { vs =>
         val a = bc.value
-        val nn = a.ids.length
-        val counts = new Array[Int](nn)
-        val touched = new Array[Int](nn)
+        val cn = new CoNeighbors(a)
         vs.flatMap { vl =>
           val v = vl.toInt
-          var nTouched = 0
-          var i = a.offs(v)
-          while (i < a.offs(v + 1)) {
-            val u = a.flat(i)
-            var j = a.offs(u)
-            while (j < a.offs(u + 1)) {
-              val w = a.flat(j)
-              if (w > v) {
-                if (counts(w) == 0) { touched(nTouched) = w; nTouched += 1 }
-                counts(w) += 1
-              }
-              j += 1
-            }
-            i += 1
-          }
           val da = (a.offs(v + 1) - a.offs(v)).toLong
           val hits = Array.newBuilder[(Long, Long, Long, Double)]
-          var t = 0
-          while (t < nTouched) {
-            val w = touched(t)
-            val inter = counts(w).toLong
+          cn.pairs(v) { (w, n) =>
+            val inter = n.toLong
             val db = (a.offs(w + 1) - a.offs(w)).toLong
             val jac = inter.toDouble / (da + db - inter).toDouble
             if (jac >= minSim) {
@@ -818,51 +820,15 @@ object Algorithms {
                 java.math.BigDecimal.valueOf(jac)
                   .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))
             }
-            counts(w) = 0
-            t += 1
           }
           hits.result()
         }
       }
       .toDF("a", "b", "inter", "jaccard")
-    (out, bc)
-  }
-
-  private[graft] def edgeSupportImg(surv: DataFrame, symCellsHint: Long)
-      : (DataFrame, Option[org.apache.spark.broadcast.Broadcast[AdjImage]]) = {
-    val adj0 = surv.select(col("u").as("node"), col("v").as("nbr"))
-      .union(surv.select(col("v").as("node"), col("u").as("nbr")))
-      .groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    if (symCellsHint >= 0 && symCellsHint <= Gates.cells) {
-      val spark = surv.sparkSession
-      import spark.implicits._
-      val bc = collectAdjImage(adj0)
-      val out = surv.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)]
-        .mapPartitions { rows =>
-          val a = bc.value
-          rows.map { case (u, v) =>
-            val (s1, e1) = a.slice(u)
-            val (s2, e2) = a.slice(v)
-            (u, v, sliceIntersect(a.flat, s1, e1, s2, e2))
-          }
-        }
-        .toDF("u", "v", "support")
-      (out, Some(bc))
-    } else {
-      val out = surv
-        .join(adj0.select(col("node").as("u"), col("adj").as("adj_u")), Seq("u"))
-        .join(adj0.select(col("node").as("v"), col("adj").as("adj_v")), Seq("v"))
-        .select(col("u"), col("v"),
-          graft.functions.SortedIntersectCount
-            .sortedIntersectCount(col("adj_u"), col("adj_v")).as("support"))
-      (out, None)
-    }
   }
 
   /** Driver-local k-truss peel over collected canonical pairs — the
-    * bounded-collect twin of [[kTrussImg]]'s round loop (gated there).
+    * bounded-collect twin of [[kTruss]]'s round loop (gated there).
     * Replays the distributed semantics operation for operation:
     * synchronous support-within-survivors passes (CSR rebuilt per
     * pass, sorted slices, the same two-pointer intersect), filter at
@@ -920,18 +886,13 @@ object Algorithms {
     out.result()
   }
 
-  /** Intersection size + endpoint degrees for EXPLICIT candidate pairs
-    * (a, b) against a broadcast [[AdjImage]] — the capped-rescore twin
-    * of [[edgeSupportImg]]'s pair map. The array-join formulation of
-    * the same rescore copies BOTH endpoints' full adjacency arrays
-    * into every candidate row (two keyed exchanges moving
-    * Σ_cand(deg a + deg b) CELLS); under the [[Gates.cells]]
-    * gate this is instead one narrow map over the candidate stream —
-    * zero joins, two slice lookups + a two-pointer intersect per pair.
-    * Degrees fall out of the CSR offsets for free, saving the degree
-    * joins too. The caller owns (and destroys) the broadcast. */
+  /** [[pairRescore]]'s image body: intersection size + endpoint
+    * degrees for EXPLICIT pairs (a, b) against a broadcast
+    * [[AdjImage]] — one narrow map over the pair stream, zero joins,
+    * two slice lookups + a two-pointer intersect per pair. Degrees fall
+    * out of the CSR offsets for free, saving the degree joins too. */
   private[graft] def pairIntersectImg(pairs: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[AdjImage]): DataFrame = {
+      bc: Broadcast[AdjImage]): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     pairs.select(col("a").cast("long"), col("b").cast("long"))
@@ -949,8 +910,8 @@ object Algorithms {
   }
 
   /** K-seed budgeted BFS over a broadcast CSR [[AdjImage]] — the
-    * image-gated scale path of [[hopDistances]] (same zero-exchange
-    * idiom as [[squareCensusImg]]): seeds are parallelized across
+    * image body of [[hopDistances]] (same zero-exchange idiom as
+    * [[squareCensusImg]]): seeds are parallelized across
     * tasks, each task runs plain frontier BFS over the broadcast image
     * with a reusable |V|-int distance scratch (reset via a touched
     * list), and emits the SAME sparse (seed, id, d) reach rows the
@@ -958,21 +919,15 @@ object Algorithms {
     * rounding surface at all. The loop's per-round cost was never
     * compute (4 seeds × a dense graph saturate in a handful of hops);
     * it was ~3 scheduler jobs per BFS layer. Directed semantics are
-    * preserved: slices are OUT-neighbours, and sink-only nodes enter
-    * the dictionary with empty slices so every dst resolves. */
-  private[graft] def hopDistancesImg(seeds: DataFrame, e: DataFrame,
-                                     maxRounds: Int): DataFrame = {
+    * preserved: slices are OUT-neighbours, and sink-only nodes hold
+    * empty slices ([[collectAdjImage]]'s two-endpoint dictionary). */
+  private def hopDistancesImg(seeds: DataFrame,
+      bc: Broadcast[AdjImage], maxRounds: Int): DataFrame = {
     val spark = seeds.sparkSession
     import spark.implicits._
-    val adj0 = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    val sinkOnly = e.select(col("dst").as("node")).distinct()
-      .join(adj0.select(col("node")), Seq("node"), "left_anti")
-      .select(col("node"), array().cast("array<long>").as("adj"))
-    val bc = collectAdjImage(adj0.unionByName(sinkOnly))
     val seedArr = seeds.select(col("id").cast("long")).as[Long].collect()
     val budget = maxRounds
-    val out = spark.sparkContext
+    spark.sparkContext
       .parallelize(seedArr.toIndexedSeq,
         math.max(1, math.min(seedArr.length,
           spark.sparkContext.defaultParallelism)))
@@ -1016,11 +971,9 @@ object Algorithms {
         }
       }
       .toDF("seed", "id", "d")
-      // materialize so the broadcast can be destroyed and so consumers
-      // see the same already-computed shape the loop path returns
+      // materialized: the tier destroys the image, and consumers see the
+      // same already-computed shape the loop path returns
       .localCheckpoint(true)
-    bc.destroy()
-    out
   }
 
   /** Round budget for [[coreness]] — part of the contract, like every
@@ -1029,10 +982,9 @@ object Algorithms {
     * worst cases, single digits on real graphs). */
   val CorenessRounds = 16
 
-  /** Image-gated twin of [[coreness]]'s h-index loop (the
-    * [[hopDistancesImg]] idiom): under the [[Gates.cells]]
-    * gate the whole synchronous iteration runs over the broadcast CSR
-    * [[AdjImage]] — zero exchanges, zero per-round scheduler jobs —
+  /** Image body of [[coreness]]'s h-index loop (the
+    * [[hopDistancesImg]] idiom): under the image bound the whole
+    * synchronous iteration runs over the broadcast CSR [[AdjImage]] — zero exchanges, zero per-round scheduler jobs —
     * instead of paying one checkpoint action plus ~6 AQE stage jobs
     * per round. Every partition of the emit range replays the SAME
     * deterministic iteration (double-buffered values, the Hirsch
@@ -1047,13 +999,10 @@ object Algorithms {
     * the loop's fixpoint exit. Isolated nodes (absent from the image)
     * fall out of the final left join at 0 — the loop's
     * coalesce(c, 0) on the degree init. */
-  private[graft] def corenessImg(nodes: DataFrame, symPlan: DataFrame,
-                                 rounds: Int): DataFrame = {
+  private def corenessImg(nodes: DataFrame,
+      bc: Broadcast[AdjImage], rounds: Int): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val adj0 = symPlan.groupBy(col("u").as("node"))
-      .agg(sort_array(collect_list(col("v"))).as("adj"))
-    val bc = collectAdjImage(adj0)
     val n = bc.value.ids.length
     val budget = rounds
     val out = spark.range(0, n.toLong, 1,
@@ -1101,10 +1050,7 @@ object Algorithms {
         slice.iterator.map(v => (a.ids(v.toInt), cur(v.toInt).toLong))
       }
       .toDF("id", "c")
-      // materialize so the broadcast can be destroyed; same contract as
-      // [[hopDistancesImg]]
-      .localCheckpoint(true)
-    bc.destroy()
+      .localCheckpoint(true) // materialized: the tier destroys the image
     nodes.select(col("id")).join(out, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("c"), lit(0L)).as("coreness"))
   }
@@ -1151,7 +1097,6 @@ object Algorithms {
   def coreness(nodes: DataFrame, edges: DataFrame,
                rounds: Int = CorenessRounds,
                nSymHint: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the symmetric view is built in one explode pass (a self-union
     // would scan the caller's edge frame once per branch — one more
     // 32-reader pass over a big pinned cache at scale; A/B at sf0.1:
@@ -1168,7 +1113,15 @@ object Algorithms {
     // and skip the sizing pass entirely; the count doubles as the
     // image-gate probe ([[hopDistances]] precedent)
     val nSym = if (nSymHint >= 0) nSymHint else symPlan.count()
-    if (nSym <= Gates.cells) return corenessImg(nodes, symPlan, rounds)
+    collectAdjImage(symPlan, nSym)(corenessImg(nodes, _, rounds))(
+      corenessRounds(nodes, symPlan, nSym, rounds))
+  }
+
+  /** [[coreness]]'s distributed delta-frontier loop over the symmetric
+    * (u, v) plan of `nSym` rows. */
+  private def corenessRounds(nodes: DataFrame, symPlan: DataFrame, nSym: Long,
+                             rounds: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val (sess, sym) = bigSymCheckpoint(symPlan, nSym, "v")
     val (ids, nV) = checkpointCounted(if (sess ne nodes.sparkSession)
         rebase(sess, nodes.select(col("id")))
@@ -2582,12 +2535,11 @@ object Algorithms {
     // the edge materialization's internal count doubles as the image
     // gate probe (cells = directed edge rows)
     val (e, cells) = checkpointCounted(edges.select(col("src"), col("dst")))
-    if (cells > Gates.cells) bfsRounds(seeds, e, maxRounds, sigma = false)
-    else {
-      val out = hopDistancesImg(seeds, e, maxRounds)
-      releaseIterate(e)
+    collectAdjImage(e.select(col("src").as("u"), col("dst").as("v")), cells) { bc =>
+      val out = hopDistancesImg(seeds, bc, maxRounds)
+      releaseIterate(e) // the reach set is materialized
       out
-    }
+    }(bfsRounds(seeds, e, maxRounds, sigma = false))
   }
 
   /** The shortest-path COUNTS variant of [[hopDistances]]' distributed

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Gates
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -244,17 +245,17 @@ object Clouds {
     * endpoints. The edge-level refinement of [[triangleCount]] (which
     * aggregates per node): support 0 flags a similarity with no
     * corroborating relative (a candidate spurious alignment), high
-    * support marks the load-bearing edges of a dense cloud. One
-    * adjacency pack + one array-rescore join over the canonical edge
-    * set (the [[neighborJaccardCapped]] shape — Σdeg array-cell
-    * shuffle, O(deg u + deg v) per edge in codegen, no Σdeg² wedge
-    * explosion). `g_truss_support`. */
+    * support marks the load-bearing edges of a dense cloud. One pair
+    * rescore of the canonical edge set against its own adjacency
+    * ([[Algorithms.edgeSupport]] — O(deg u + deg v) per edge, no Σdeg²
+    * wedge explosion). `g_truss_support`. */
   def trussSupport(spark: SparkSession, dir: String): DataFrame = {
     val e = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
       .edges.select(col("src").as("u"), col("dst").as("v"))
       .localCheckpoint(true) // adjacency pack + rescore probe share it
-    Algorithms.edgeSupport(e, symCellsHint = 2 * e.count())
-      .select(col("u").as("src"), col("v").as("dst"), col("support"))
+    val sup = Algorithms.edgeSupport(e)
+    Algorithms.releaseIterate(e) // the support table is materialized
+    sup.select(col("u").as("src"), col("v").as("dst"), col("support"))
       .orderBy(col("src"), col("dst"))
   }
 
@@ -335,62 +336,51 @@ object Clouds {
     * Same bucket-join discipline as the n-gram dedup: candidate pairs
     * come from co-membership in some neighbour's adjacency list, never
     * an all-pairs product; integer intersection/degree counts make the
-    * division bit-exact cross-engine. Below the
-    * [[Gates.cells]] gate the candidates never even
-    * reach a shuffle: [[Algorithms.jaccardPairsImg]] scores and filters
-    * them inside one narrow map over the broadcast CSR image; above it
-    * the wedge self-join stands (and [[neighborJaccardCapped]] is the
-    * hub-safe variant). `g_neighbor_jaccard`. */
+    * division bit-exact cross-engine. `g_neighbor_jaccard`. */
   def neighborJaccard(spark: SparkSession, dir: String,
                       minSim: Double = 0.3): DataFrame = {
     val g = graph(spark, dir).filterEdges(col("distance") <= QueryThreshold)
     val nbrs = g.edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
-      .localCheckpoint(true) // referenced by every branch below
-    val cells = nbrs.count() // = 2|E|
-    if (cells <= Gates.cells) {
-      // image path (the [[squareCount]] idiom): co-neighbour counts,
-      // degrees, the τ filter and the round-6 all evaluate inside ONE
-      // narrow map over the broadcast CSR adjacency — the wedge
-      // self-join below ships every Σdeg² candidate through a shuffle
-      // before the filter can drop it (measured at sf0.1, min-of-5:
-      // 8.96 → 2.12 s)
-      val (df, bc) = Algorithms.jaccardPairsImg(nbrs, minSim)
-      val r = df.localCheckpoint(true)
-      bc.destroy()
-      Algorithms.releaseIterate(nbrs)
-      r.orderBy(col("a"), col("b"))
-    } else {
-      // mirror the image branch's lifecycle: materialize the join-path
-      // result eagerly, then release the 2|E|-row input checkpoint
-      // (returned lazily, it pinned nbrs for the session); the sort
-      // rides lazily on TOP of the checkpoint — the image-branch idiom
-      // — so a consumer that doesn't need order (count, re-agg)
-      // doesn't pay it
-      val r = neighborJaccardJoin(nbrs, minSim).localCheckpoint(true)
-      Algorithms.releaseIterate(nbrs)
-      r.orderBy(col("a"), col("b"))
-    }
+      .localCheckpoint(true) // the count, the image or join plan, all read it
+    val r = neighborJaccardOn(nbrs, minSim)
+    Algorithms.releaseIterate(nbrs)
+    // the sort rides lazily ON TOP of the materialized pairs, so a
+    // consumer that doesn't need order (count, re-agg) doesn't pay it
+    r.orderBy(col("a"), col("b"))
   }
 
-  /** The wedge-self-join formulation of [[neighborJaccard]] — the
-    * above-gate plan, and the parity reference the image path is
-    * spec-asserted against. */
-  private[graft] def neighborJaccardJoin(nbrs: DataFrame, minSim: Double): DataFrame = {
-    val deg = nbrs.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val inter = nbrs.as("x")
-      .join(nbrs.as("y"),
-        col("x.nbr") === col("y.nbr") && col("x.node") < col("y.node"))
-      .groupBy(col("x.node").as("a"), col("y.node").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    val jac = col("inter").cast("double") /
-      (col("da") + col("db") - col("inter")).cast("double")
-    inter
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .filter(jac >= minSim)
-      .select(col("a"), col("b"), col("inter"), round(jac, 6).as("jaccard"))
-  }
+  /** [[neighborJaccard]]'s pairs over a symmetric (node, nbr) adjacency,
+    * materialized. Under the image bound the candidates never reach a
+    * shuffle: [[Algorithms.jaccardPairsImg]] counts co-neighbours,
+    * reads degrees, applies the τ filter and the round-6 inside ONE
+    * narrow map over the broadcast CSR image (measured at sf0.1,
+    * min-of-5: 8.96 → 2.12 s against the join). Above it the wedge
+    * self-join ships every Σdeg² candidate through a shuffle before the
+    * filter can drop it ([[neighborJaccardCapped]] is the hub-safe
+    * variant). The two plans emit bit-identical rows (spec-asserted). */
+  private[graft] def neighborJaccardOn(nbrs: DataFrame, minSim: Double): DataFrame =
+    Algorithms.collectAdjImage(uvOf(nbrs), nbrs.count())(
+      Algorithms.jaccardPairsImg(nbrs.sparkSession, _, minSim).localCheckpoint(true)) {
+      val deg = nbrs.groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      val inter = nbrs.as("x")
+        .join(nbrs.as("y"),
+          col("x.nbr") === col("y.nbr") && col("x.node") < col("y.node"))
+        .groupBy(col("x.node").as("a"), col("y.node").as("b"))
+        .agg(count(lit(1)).as("inter"))
+      val jac = col("inter").cast("double") /
+        (col("da") + col("db") - col("inter")).cast("double")
+      inter
+        .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+        .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
+        .filter(jac >= minSim)
+        .select(col("a"), col("b"), col("inter"), round(jac, 6).as("jaccard"))
+        .localCheckpoint(true)
+    }
+
+  /** A (node, nbr) adjacency as the (u, v) rows the image tier reads. */
+  private def uvOf(nbrs: DataFrame): DataFrame =
+    nbrs.select(col("node").as("u"), col("nbr").as("v"))
 
   /** Shared-neighbour bucket cap for [[neighborJaccardCapped]]: each
     * node contributes at most this many of its neighbours to candidate
@@ -457,64 +447,23 @@ object Clouds {
     val nbrs = g.edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint(true) // adjacency build + bucket sampling
-    val cand = cappedCandidates(nbrs, cap)
-    val cells = nbrs.count() // = 2|E|, a cached-scan count
-    if (cells <= Gates.cells) {
-      // image-gated rescore (the [[neighborJaccard]]/[[trussSupport]]
-      // precedent): the array-join rescore below copies both full
-      // adjacency arrays into EVERY candidate row — two keyed
-      // exchanges moving Σ_cand(deg a + deg b) cells before the τ
-      // filter can drop anything. Under the gate the same exact
-      // scores come out of one narrow map over the broadcast CSR
-      // image ([[Algorithms.pairIntersectImg]]): identical integer
-      // (inter, da, db) inputs, identical round-6 division — the
-      // candidate SET is unchanged (sampling stays the hash-ranked
-      // heap above), so results are bit-identical either path.
-      val jacImg = col("inter").cast("double") /
-        (col("da") + col("db") - col("inter")).cast("double")
-      val adj0 = nbrs.groupBy(col("node"))
-        .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-      val bc = Algorithms.collectAdjImage(adj0)
-      val out = Algorithms.pairIntersectImg(cand, bc)
-        .filter(col("inter") > 0 && jacImg >= minSim)
-        .select(col("a"), col("b"), col("inter"),
-          round(jacImg, 6).as("jaccard"))
-        .localCheckpoint(true) // materialize, then drop image + input pin
-      bc.destroy()
-      Algorithms.releaseIterate(nbrs)
-      return out.orderBy(col("a"), col("b"))
-    }
-    // exact rescore via SET INTERSECTION, not row explosion: packing each
-    // node's (distinct-by-construction) adjacency into one array row and
-    // joining the candidate pair to its two arrays keeps the rescore at
-    // |cand| rows with O(deg a + deg b) per-row compute inside codegen.
-    // The previous formulation — join candidates to the exploded
-    // adjacency, then re-join on the shared neighbour — materialized
-    // Σ_cand deg(a) intermediate rows BEFORE the intersection filter
-    // (~770 M at sf0.1) and measured min-of-5 26.5 s; this one is
-    // 4.7 s on identical output (the exact operator is 4.3 s under the
-    // same conditions — the capped path's overhead is now the sampling
-    // pass, not a rescore blow-up). deg doubles as size(adj), saving
-    // both degree joins. At 100 TB the array payload shuffle is Σdeg
-    // cells — the same volume the exploded join shuffled, minus the
-    // blow-up. The count itself is the native two-pointer
-    // [[graft.functions.SortedIntersectCount]] over the sorted arrays:
-    // size(array_intersect(..)) builds a hash set per ROW PAIR, which
-    // at hub degree is a per-pair allocation storm.
-    val adj = nbrs.groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
+    // exact rescore via SET INTERSECTION, not row explosion
+    // ([[Algorithms.pairRescore]]): the previous formulation — join
+    // candidates to the exploded adjacency, then re-join on the shared
+    // neighbour — materialized Σ_cand deg(a) intermediate rows BEFORE
+    // the intersection filter (~770 M at sf0.1) and measured min-of-5
+    // 26.5 s; the array-join rescore is 4.7 s on identical output, and
+    // under the image bound the same integer (inter, da, db) come out of
+    // one narrow map over the broadcast image. The candidate SET is the
+    // hash-ranked heap sample above either way, so results are
+    // bit-identical on both plans.
     val jac = col("inter").cast("double") /
       (col("da") + col("db") - col("inter")).cast("double")
-    val out = cand
-      .join(adj.select(col("node").as("a"), col("adj").as("adj_a")), Seq("a"))
-      .join(adj.select(col("node").as("b"), col("adj").as("adj_b")), Seq("b"))
-      .select(col("a"), col("b"),
-        graft.functions.SortedIntersectCount
-          .sortedIntersectCount(col("adj_a"), col("adj_b")).as("inter"),
-        size(col("adj_a")).cast("long").as("da"),
-        size(col("adj_b")).cast("long").as("db"))
+    val out = Algorithms.pairRescore(cappedCandidates(nbrs, cap), uvOf(nbrs),
+        nbrs.count())(_
       .filter(col("inter") > 0 && jac >= minSim)
       .select(col("a"), col("b"), col("inter"), round(jac, 6).as("jaccard"))
-      .localCheckpoint(true) // materialize, then drop the 2|E| input pin
+      .localCheckpoint(true)) // materialize, then drop image + input pin
     Algorithms.releaseIterate(nbrs)
     out.orderBy(col("a"), col("b")) // lazy sort atop the checkpoint
   }
@@ -539,51 +488,17 @@ object Clouds {
       .union(g.edges.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint(true) // candidate sampling + adjacency pack
     val existing = g.edges.select(col("src").as("a"), col("dst").as("b"))
-    val cells = nbrs.count() // = 2|E|, a cached-scan count
-    val out = (if (cells <= Gates.cells) {
-      // image-gated rescore — the [[neighborJaccardCapped]] gate, same
-      // bit-identity argument: the candidate set (hash-ranked heap
-      // sample minus existing edges) is untouched; only the scoring
-      // of each pair moves from two array-copy joins into one narrow
-      // map over the broadcast CSR image. common_neighbors and the
-      // deg·deg product are the same integers either path.
-      val cand = cappedCandidates(nbrs, cap)
-        .join(existing, Seq("a", "b"), "left_anti")
-      val adj0 = nbrs.groupBy(col("node"))
-        .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-      val bc = Algorithms.collectAdjImage(adj0)
-      val r = Algorithms.pairIntersectImg(cand, bc)
-        .select(col("a"), col("b"), col("inter").as("common_neighbors"),
-          (col("da") * col("db")).as("pref_attachment"))
-        .filter(col("common_neighbors") >= minCommon)
-        .localCheckpoint(true) // materialize, then drop the image
-      bc.destroy()
-      r
-    } else linkPredictionOn(nbrs, existing, minCommon, cap)
-      .localCheckpoint(true)) // materialize, then drop the 2|E| input pin
+    // the [[neighborJaccardCapped]] rescore: common_neighbors and the
+    // deg·deg product are the same integers on either plan
+    val out = Algorithms.pairRescore(
+        cappedCandidates(nbrs, cap).join(existing, Seq("a", "b"), "left_anti"),
+        uvOf(nbrs), nbrs.count())(_
+      .select(col("a"), col("b"), col("inter").as("common_neighbors"),
+        (col("da") * col("db")).as("pref_attachment"))
+      .filter(col("common_neighbors") >= minCommon)
+      .localCheckpoint(true)) // materialize, then drop image + input pin
     Algorithms.releaseIterate(nbrs)
     out.orderBy(col("a"), col("b")) // lazy sort atop the checkpoint
-  }
-
-  /** [[linkPrediction]]'s lazy composition over a materialized
-    * adjacency — separated so the plan audit can inspect the heap +
-    * native-intersect stages the public entry hides behind its eager
-    * output checkpoint. */
-  private[graft] def linkPredictionOn(nbrs: DataFrame, existing: DataFrame,
-      minCommon: Long, cap: Int): DataFrame = {
-    val cand = cappedCandidates(nbrs, cap)
-      .join(existing, Seq("a", "b"), "left_anti")
-    val adj = nbrs.groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    cand
-      .join(adj.select(col("node").as("a"), col("adj").as("adj_a")), Seq("a"))
-      .join(adj.select(col("node").as("b"), col("adj").as("adj_b")), Seq("b"))
-      .select(col("a"), col("b"),
-        graft.functions.SortedIntersectCount
-          .sortedIntersectCount(col("adj_a"), col("adj_b")).as("common_neighbors"),
-        (size(col("adj_a")).cast("long") * size(col("adj_b")).cast("long"))
-          .as("pref_attachment"))
-      .filter(col("common_neighbors") >= minCommon)
   }
 
   /** Communities inside the thresholded graph — a finer view than the
@@ -799,28 +714,11 @@ object Clouds {
     * {a,c} with n common neighbours, the pair closes C(n,2) squares,
     * and every square is counted by exactly TWO diagonal pairs, so
     * n_squares = Σ C(n,2) / 2 — all integer arithmetic, replayed
-    * unconditionally by the oracle. Two plans, chosen by the
-    * [[Gates.cells]] gate (the [[trussSupport]]
-    * idiom): below it, [[Algorithms.squareCensusImg]] broadcasts the
-    * flat CSR adjacency image once and folds the census in ONE narrow
-    * zero-exchange map (Σdeg² CELL work, never Σdeg² shuffled rows);
-    * above it, the wedge self-join keyed on the middle node + (a,c)
-    * count — Σdeg² row movement is then the intrinsic exact-square
-    * cost, parallel per partition on a cluster. Both compute identical
-    * integers (spec-asserted). `g_square_count`. */
+    * unconditionally by the oracle ([[squareCountOnCanon]] has the
+    * two plans). `g_square_count`. */
   def squareCount(spark: SparkSession, dir: String): DataFrame = {
     val canon = canonQueryEdges(spark, dir).localCheckpoint(true)
-    val cells = 2L * canon.count()
-    val out =
-      if (cells <= Gates.cells) {
-        // the trussSupport idiom: broadcast the CSR image once, run the
-        // census as one narrow map, materialize the 1-row result, then
-        // free the image + edge checkpoint immediately
-        val (df, bc) = Algorithms.squareCensusImg(canon)
-        val r = df.localCheckpoint(true)
-        bc.destroy()
-        r
-      } else squareCountOnCanon(canon).localCheckpoint(true)
+    val out = squareCountOnCanon(canon)
     Algorithms.releaseIterate(canon)
     out
   }
@@ -834,18 +732,29 @@ object Clouds {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
 
-  /** [[squareCount]] kernel over any canonical (u, v) edge frame. */
+  /** [[squareCount]] kernel over any canonical (u, v) edge frame, its
+    * one-row census materialized. Under the image bound
+    * [[Algorithms.squareCensusImg]] folds the census in ONE narrow
+    * zero-exchange map over the broadcast CSR image (Σdeg² CELL work,
+    * never Σdeg² shuffled rows); above it, the wedge self-join keyed on
+    * the middle node + (a, c) count — Σdeg² row movement is then the
+    * intrinsic exact-square cost, parallel per partition on a cluster.
+    * Both compute identical integers (spec-asserted). */
   private[graft] def squareCountOnCanon(canon: DataFrame): DataFrame = {
     val und = canon.select(col("u"), col("v"))
       .union(canon.select(col("v").as("u"), col("u").as("v")))
-    val coNeighbors = und.select(col("u").as("m"), col("v").as("a"))
-      .join(und.select(col("u").as("m2"), col("v").as("c")),
-        col("m") === col("m2") && col("a") < col("c"))
-      .groupBy(col("a"), col("c")).agg(count(lit(1)).as("n"))
-    coNeighbors.agg(
-      count(lit(1)).as("n_coneighbor_pairs"),
-      coalesce(sum(col("n")), lit(0L)).as("n_wedge_pairs"),
-      coalesce(expr("SUM(n * (n - 1) DIV 2) DIV 2"), lit(0L)).as("n_squares"))
+    Algorithms.collectAdjImage(und, 2L * canon.count())(
+      Algorithms.squareCensusImg(canon.sparkSession, _).localCheckpoint(true)) {
+      und.select(col("u").as("m"), col("v").as("a"))
+        .join(und.select(col("u").as("m2"), col("v").as("c")),
+          col("m") === col("m2") && col("a") < col("c"))
+        .groupBy(col("a"), col("c")).agg(count(lit(1)).as("n"))
+        .agg(
+          count(lit(1)).as("n_coneighbor_pairs"),
+          coalesce(sum(col("n")), lit(0L)).as("n_wedge_pairs"),
+          coalesce(expr("SUM(n * (n - 1) DIV 2) DIV 2"), lit(0L)).as("n_squares"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Rich-club profile of the thresholded graph: for each degree cut k
@@ -1335,8 +1244,7 @@ object Clouds {
     val dec = DecimalType(38, 6)
     val e = symEdges.select(col("src").as("u"), col("dst").as("v"))
       .localCheckpoint(true)
-    val cells = e.count() // cached scan; the image gate probe
-    if (cells <= Gates.cells) {
+    val deltas = Algorithms.collectAdjImage(e, e.count()) { bc =>
       // IMAGE-GATED Brandes (the [[Algorithms.squareCensusImg]] idiom):
       // forward sigma-BFS plus the backward layer accumulation ran
       // ~3 scheduler jobs per BFS layer plus one eager checkpoint per
@@ -1351,71 +1259,65 @@ object Clouds {
       // double, then the cast back to DECIMAL(38,6) — the same
       // valueOf/setScale pair — then an exact scale-6 decimal sum per
       // node, per-seed rows identical to the layer frames' union.
-      // Above the gate the distributed forward+backward stands.
+      // Above the image bound the distributed forward+backward stands.
       val sess = e.sparkSession
       import sess.implicits._
       val seedArr = nodes.orderBy(col("id")).limit(EccSeeds)
         .select(col("id").cast("long")).as[Long].collect()
-      val deltasImg = betweennessDeltasImg(seedArr, e)
+      val deltasImg = betweennessDeltasImg(sess, seedArr, bc)
       Algorithms.releaseIterate(e) // deltas are materialized; the edge
       // checkpoint has no remaining reader on this path
-      val out = nodes.select(col("id"))
-        .join(deltasImg.groupBy(col("id")).agg(sum(col("delta")).as("b")),
-          Seq("id"), "left_outer")
-        .select(col("id").as("node"),
-          coalesce(col("b"), lit(0)).cast(dec).cast("double").as("betweenness"))
-        .orderBy(col("node"))
-      return out
-    }
-    // the rename is a narrow projection over the SAME checkpoint blocks
-    // — forward pass and backward layers share one edge copy
-    val state = Algorithms.hopDistancesSigmaOn(
-      nodes.orderBy(col("id")).limit(EccSeeds),
-      e.select(col("u").as("src"), col("v").as("dst")), EccMaxRounds)
-    // coalesce: an empty node set yields max(d) = NULL; degrade to an
-    // empty result frame like every other kernel instead of an NPE
-    val maxD = state.agg(coalesce(max(col("d")), lit(0L))).head.getLong(0)
-    // deepest layer has no successors within the budget → δ = 0
-    var deltaNext = state.filter(col("d") === maxD)
-      .select(col("seed"), col("id"), col("sigma"),
-        lit(0).cast(dec).as("delta"))
-      .localCheckpoint(true)
-    // layer-0 rows are the seeds themselves: b(v) sums δ_s(v) for
-    // v ≠ s only, so layer 0 never joins the output union
-    val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (maxD > 0) layers += deltaNext.select(col("seed"), col("id"), col("delta"))
-    var l = maxD - 1
-    while (l >= 1) {
-      val uLayer = state.filter(col("d") === l)
-      val nxt = deltaNext.select(col("seed").as("s2"), col("id").as("id2"),
-        col("sigma").as("sigma2"), col("delta").as("delta2"))
-      val contrib = uLayer.join(e, uLayer("id") === e("u"))
-        .join(nxt, col("seed") === col("s2") && col("v") === col("id2"))
-        .select(col("seed"), uLayer("id").as("id"),
-          round((uLayer("sigma").cast("double") / col("sigma2").cast("double")) *
-            (lit(1.0) + col("delta2").cast("double")), 6).cast(dec).as("t"))
-        .groupBy(col("seed"), col("id")).agg(sum(col("t")).as("dsum"))
-      // EAGER checkpoint, one bounded job per layer — deliberately NOT
-      // the forward loop's lazy one-action pattern: measured at the
-      // 150k-node / 85M-edge ScaleBench point, an all-lazy backward
-      // chain folds all ≤16 edge-joins into ONE job whose accumulated
-      // shuffle + cache footprint OOMs a 32-thread executor JVM, while
-      // per-layer jobs hold one edge-join's working set at a time and
-      // complete. Round tax here is ≤16 small jobs — noise next to the
-      // forward BFS — so the scale-safe shape wins.
-      val deltaL = uLayer.join(contrib, Seq("seed", "id"), "left_outer")
+      deltasImg
+    } {
+      // the rename is a narrow projection over the SAME checkpoint blocks
+      // — forward pass and backward layers share one edge copy
+      val state = Algorithms.hopDistancesSigmaOn(
+        nodes.orderBy(col("id")).limit(EccSeeds),
+        e.select(col("u").as("src"), col("v").as("dst")), EccMaxRounds)
+      // coalesce: an empty node set yields max(d) = NULL; degrade to an
+      // empty result frame like every other kernel instead of an NPE
+      val maxD = state.agg(coalesce(max(col("d")), lit(0L))).head.getLong(0)
+      // deepest layer has no successors within the budget → δ = 0
+      var deltaNext = state.filter(col("d") === maxD)
         .select(col("seed"), col("id"), col("sigma"),
-          coalesce(col("dsum"), lit(0)).cast(dec).as("delta"))
+          lit(0).cast(dec).as("delta"))
         .localCheckpoint(true)
-      layers += deltaL.select(col("seed"), col("id"), col("delta"))
-      deltaNext = deltaL
-      l -= 1
-    }
-    val deltas =
+      // layer-0 rows are the seeds themselves: b(v) sums δ_s(v) for
+      // v ≠ s only, so layer 0 never joins the output union
+      val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      if (maxD > 0) layers += deltaNext.select(col("seed"), col("id"), col("delta"))
+      var l = maxD - 1
+      while (l >= 1) {
+        val uLayer = state.filter(col("d") === l)
+        val nxt = deltaNext.select(col("seed").as("s2"), col("id").as("id2"),
+          col("sigma").as("sigma2"), col("delta").as("delta2"))
+        val contrib = uLayer.join(e, uLayer("id") === e("u"))
+          .join(nxt, col("seed") === col("s2") && col("v") === col("id2"))
+          .select(col("seed"), uLayer("id").as("id"),
+            round((uLayer("sigma").cast("double") / col("sigma2").cast("double")) *
+              (lit(1.0) + col("delta2").cast("double")), 6).cast(dec).as("t"))
+          .groupBy(col("seed"), col("id")).agg(sum(col("t")).as("dsum"))
+        // EAGER checkpoint, one bounded job per layer — deliberately NOT
+        // the forward loop's lazy one-action pattern: measured at the
+        // 150k-node / 85M-edge ScaleBench point, an all-lazy backward
+        // chain folds all ≤16 edge-joins into ONE job whose accumulated
+        // shuffle + cache footprint OOMs a 32-thread executor JVM, while
+        // per-layer jobs hold one edge-join's working set at a time and
+        // complete. Round tax here is ≤16 small jobs — noise next to the
+        // forward BFS — so the scale-safe shape wins.
+        val deltaL = uLayer.join(contrib, Seq("seed", "id"), "left_outer")
+          .select(col("seed"), col("id"), col("sigma"),
+            coalesce(col("dsum"), lit(0)).cast(dec).as("delta"))
+          .localCheckpoint(true)
+        layers += deltaL.select(col("seed"), col("id"), col("delta"))
+        deltaNext = deltaL
+        l -= 1
+      }
       if (layers.isEmpty)
         // edgeless graph: no dependency mass anywhere
         state.select(col("id"), lit(0).cast(dec).as("delta")).limit(0)
       else layers.reduce(_ unionByName _).select(col("id"), col("delta"))
+    }
     nodes.select(col("id"))
       .join(deltas.groupBy(col("id")).agg(sum(col("delta")).as("b")),
         Seq("id"), "left_outer")
@@ -1425,20 +1327,16 @@ object Clouds {
   }
 
   /** The executor-side Brandes pass behind [[betweennessKernel]]'s
-    * image gate: one task per seed over the broadcast CSR, emitting
-    * the same (id, delta) rows the backward layer frames union to —
-    * sigma as exact BigInteger BFS path counts, each dependency term
-    * replaying the distributed plan's expression chain digit for
-    * digit (see the call site). The caller owns the gate; `e` must be
-    * the SYMMETRIC (u, v) edge checkpoint. */
-  private def betweennessDeltasImg(seeds: Array[Long], e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
+    * image body: one task per seed over the broadcast SYMMETRIC CSR,
+    * emitting the same (id, delta) rows the backward layer frames
+    * union to — sigma as exact BigInteger BFS path counts, each
+    * dependency term replaying the distributed plan's expression chain
+    * digit for digit (see the call site). */
+  private def betweennessDeltasImg(spark: SparkSession, seeds: Array[Long],
+      bc: Broadcast[Algorithms.AdjImage]): DataFrame = {
     import spark.implicits._
-    val adj0 = e.select(col("u").as("node"), col("v").as("nbr"))
-      .groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
-    val bc = Algorithms.collectAdjImage(adj0)
     val budget = EccMaxRounds
-    val out = spark.sparkContext
+    spark.sparkContext
       .parallelize(seeds.toIndexedSeq,
         math.max(1, math.min(seeds.length, spark.sparkContext.defaultParallelism)))
       .mapPartitions { ss =>
@@ -1516,9 +1414,7 @@ object Clouds {
       }
       .toDF("id", "delta")
       .select(col("id"), col("delta").cast(DecimalType(38, 6)).as("delta"))
-      .localCheckpoint(true) // materialize so the image can be destroyed
-    bc.destroy()
-    out
+      .localCheckpoint(true) // materialized: the tier destroys the image
   }
 
   /** Walk length for [[randomWalks]]. */
@@ -1636,52 +1532,31 @@ object Clouds {
       else nodesIn.filter(pmod(graft.Hashing.hash60(
         concat_ws("|", col("id"), lit("wsample"))), lit(sampleMod)) === 0)
     // BOUNDED-COLLECT image build (the boruvkaMstLocal class of gate):
-    // below [[Gates.edges]] symmetric rows the
-    // capped adjacency image is built ON THE DRIVER from one collect
-    // of the caller's edge checkpoint ([[localCappedImage]] — same
-    // (hash60 asc, v asc) cap, same sorted slices, same packed CSR),
-    // replacing the heap shuffle + checkpoint + groupBy/collect_list +
-    // two-hop image collect. Above the gate the distributed image
-    // build (or, past [[Gates.cells]], the step loop) stands. The
-    // gate count is one cached scan of the caller-materialized edge
-    // frame. [[Gates.cells]] binds BOTH image builds: 2|E| bounds the
-    // capped cell count from above, so below it the image is in-gate
-    // for sure
-    val nE2 = 2 * edgesIn.count()
-    val localOk = nE2 <= Gates.edges && nE2 <= Gates.cells
-    var und: DataFrame = null
-    val bcOpt: Option[org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage]] =
-      if (localOk) {
-        val lg = LocalGraph.collect(edgesIn, "src", "dst")
-        Some(spark.sparkContext.broadcast(localCappedImage(lg, cap)))
-      } else {
-        // cap = MaxValue is the audit's exact twin — skip the no-op
-        // hash-heap pass rather than rank every adjacency row for nothing
-        und = (if (cap == Int.MaxValue) baseAdj
-               else cappedAdjacency(baseAdj, cap))
-          .localCheckpoint(true) // one hop join per step
-        if (und.count() <= Gates.cells) {
-          // IMAGE-GATED WALKS (the [[Algorithms.squareCensusImg]] idiom):
-          // each deterministic step ran a hop join + the top-1 heap + an
-          // eager checkpoint — len × (several scheduler jobs) — while the
-          // whole walk is a per-walker local computation once the (capped)
-          // adjacency fits the broadcast gate. WALKERS STAY DISTRIBUTED
-          // (one narrow map over the starts scan — no driver collect of
-          // |V| rows), so this path scales with the corpus on the walker
-          // axis and is gated only on the graph side; above the gate the
-          // step loop stands. Bit-identity: the per-step argmin replays
-          // (hash60("walk|s|v") asc, v asc) — the heap's exact total
-          // order — with [[graft.Hashing.hash60Fn]], the spec-pinned JVM
-          // twin of the Column hash in BOTH conf modes; a walker whose
-          // node has no adjacency row dies exactly like the inner hop
-          // join dropped it.
-          val adj0 = und.select(col("u").as("node"), col("v").as("nbr"))
-            .groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
-          Some(Algorithms.collectAdjImage(adj0))
-        } else None
-      }
-    if (bcOpt.isDefined) {
-      val bc = bcOpt.get
+    // below [[Gates.edges]] symmetric rows the capped adjacency image is
+    // built ON THE DRIVER from one collect of the caller's edge
+    // checkpoint ([[localCappedImage]] — same (hash60 asc, v asc) cap,
+    // same sorted slices, same packed CSR), replacing the heap shuffle +
+    // checkpoint + groupBy/collect_list + two-hop image collect. Above
+    // it the capped adjacency is checkpointed and the image tier
+    // ([[Algorithms.collectAdjImage]]) picks the distributed image
+    // build or, past its bound, the step loop. The gate count is one
+    // cached scan of the caller-materialized edge frame; [[Gates.cells]]
+    // binds the driver build too: 2|E| bounds the capped cell count from
+    // above, so below it the image is in-bound for sure.
+    //
+    // IMAGE-GATED WALKS (the [[Algorithms.squareCensusImg]] idiom): each
+    // deterministic step of the loop runs a hop join + the top-1 heap +
+    // an eager checkpoint — len × (several scheduler jobs) — while the
+    // whole walk is a per-walker local computation once the (capped)
+    // adjacency fits an image. WALKERS STAY DISTRIBUTED (one narrow map
+    // over the starts scan — no driver collect of |V| rows), so this
+    // path scales with the corpus on the walker axis and is gated only
+    // on the graph side. Bit-identity: the per-step argmin replays
+    // (hash60("walk|s|v") asc, v asc) — the heap's exact total order —
+    // with [[graft.Hashing.hash60Fn]], the spec-pinned JVM twin of the
+    // Column hash in BOTH conf modes; a walker whose node has no
+    // adjacency row dies exactly like the inner hop join dropped it.
+    def walk(bc: Broadcast[Algorithms.AdjImage]): DataFrame = {
       val hashFn = graft.Hashing.hash60Fn() // impl resolved NOW, driver-side
       val lenL = len
       val sess = spark
@@ -1690,7 +1565,7 @@ object Clouds {
       // (the m_phash decode precedent): row values depend only on the
       // walker id, so the round-robin split is value-transparent and
       // the per-walker md5 loop runs on every core instead of one
-      val out = starts.select(col("id").cast("long")).as[Long]
+      starts.select(col("id").cast("long")).as[Long]
         .repartition(spark.sparkContext.defaultParallelism)
         .mapPartitions { ws =>
           val a = bc.value
@@ -1724,10 +1599,25 @@ object Clouds {
         }
         .toDF("walk_id", "step", "node")
         .localCheckpoint(true)
-      bc.destroy()
-      if (und != null) Algorithms.releaseIterate(und)
-      return out.orderBy(col("walk_id"), col("step"))
     }
+    val nE2 = 2 * edgesIn.count()
+    if (nE2 <= Gates.edges && nE2 <= Gates.cells)
+      return Algorithms.withImage(spark,
+          localCappedImage(LocalGraph.collect(edgesIn, "src", "dst"), cap))(walk)
+        .orderBy(col("walk_id"), col("step"))
+    // cap = MaxValue is the audit's exact twin — skip the no-op
+    // hash-heap pass rather than rank every adjacency row for nothing
+    val und = (if (cap == Int.MaxValue) baseAdj else cappedAdjacency(baseAdj, cap))
+      .localCheckpoint(true) // one hop join per step
+    val out = Algorithms.collectAdjImage(und, und.count())(walk)(
+      walkSteps(starts, und, len))
+    Algorithms.releaseIterate(und)
+    out.orderBy(col("walk_id"), col("step"))
+  }
+
+  /** [[randomWalksOnEdges]]' distributed step loop over the capped (u, v)
+    * adjacency checkpoint `und`; the walk table comes back materialized. */
+  private def walkSteps(starts: DataFrame, und: DataFrame, len: Int): DataFrame = {
     var cur = starts.select(col("id").as("walk_id"), col("id").as("node"))
       .localCheckpoint(true)
     val stepCks = scala.collection.mutable.ListBuffer[DataFrame](cur)
@@ -1750,17 +1640,16 @@ object Clouds {
       steps += cur.withColumn("step", lit(s))
     }
     // materialize the unioned walk table eagerly, then release the
-    // len+1 per-step checkpoints plus the capped adjacency — the
-    // thresholdSweep release discipline; without it every walk call
-    // pinned (len+2) |V|-to-|E|-row block sets for the session. The
-    // sort rides lazily ON TOP of the checkpoint so order-insensitive
-    // consumers (counts, re-aggregations) skip it.
+    // len+1 per-step checkpoints (the caller releases the capped
+    // adjacency) — the thresholdSweep release discipline; without it
+    // every walk call pinned (len+2) |V|-to-|E|-row block sets for the
+    // session. The caller's sort rides lazily ON TOP of the checkpoint
+    // so order-insensitive consumers (counts, re-aggregations) skip it.
     val out = steps.result().reduce(_ unionByName _)
       .select(col("walk_id"), col("step"), col("node"))
       .localCheckpoint(true)
     stepCks.foreach(Algorithms.releaseIterate)
-    Algorithms.releaseIterate(und)
-    out.orderBy(col("walk_id"), col("step"))
+    out
   }
 
   /** node2vec BIASED walks (Grover & Leskovec 2016) — the SECOND-ORDER
@@ -1805,60 +1694,17 @@ object Clouds {
                     cap: Int = WalkAdjCap, p: Double = Node2vecP,
                     q: Double = Node2vecQ): DataFrame = {
     val twoPow60 = math.pow(2.0, 60)
-    // BOUNDED-COLLECT image build (see [[randomWalksOnEdges]]' gate):
-    // below the collect gate BOTH images — the capped adjacency and
-    // the canonical-membership probe — are built on the driver from
-    // one collect of the caller's edge checkpoint, skipping the heap
-    // shuffle, two checkpoints and two distributed image pipelines.
-    // [[Gates.cells]] binds both image builds — see [[randomWalksOnEdges]]
-    val nE2 = 2 * edgesIn.count()
-    val localOk = nE2 <= Gates.edges && nE2 <= Gates.cells
-    var und: DataFrame = null
-    var canon: DataFrame = null
-    val imgs: Option[(org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage],
-                      org.apache.spark.broadcast.Broadcast[Algorithms.AdjImage])] =
-      if (localOk) {
-        val lg = LocalGraph.collect(edgesIn, "src", "dst")
-        Some((spark.sparkContext.broadcast(localCappedImage(lg, cap)),
-          spark.sparkContext.broadcast(localCanonSymImage(lg))))
-      } else {
-        und = cappedAdjacency(
-            edgesIn.select(col("src").as("u"), col("dst").as("v"))
-              .union(edgesIn.select(col("dst").as("u"), col("src").as("v"))), cap)
-          .localCheckpoint(true) // one hop join per step
-        // SERIALIZED checkpoint: the probe table is EDGE-scale and scanned
-        // once per step by all cores — a deserialized cache pins ~3× the
-        // bytes and OOM'd the 150k/85M ScaleBench point at 12 g (the §4.13
-        // r13 reader-pinned-cache mechanism)
-        canon = edgesIn
-          .select(least(col("src"), col("dst")).as("eu"),
-            greatest(col("src"), col("dst")).as("ev"))
-          .filter(col("eu") =!= col("ev")).distinct()
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        val cells = und.count() // cached scans of the two checkpoints
-        val canonCnt = canon.count()
-        if (cells <= Gates.cells && 2 * canonCnt <= Gates.cells) {
-          // IMAGE-GATED node2vec (see [[randomWalks]]' twin block): the
-          // second-order step additionally needs the (prev, v) EDGE
-          // MEMBERSHIP probe — with a second CSR image over the canonical
-          // edge set that probe is one slice binary-search instead of the
-          // per-step edge-scale left join (the loop's costliest join).
-          // Bit-identity: hash via [[graft.Hashing.hash60Fn]]; u01, the
-          // p/q weight branch order and -ln(u01)/w replay the Column
-          // expressions op for op in IEEE doubles; argmin order
-          // (key asc, v asc) is the heap's. Both images are bounded by
-          // the broadcast gate; walkers stream distributed.
-          val adj0 = und.select(col("u").as("node"), col("v").as("nbr"))
-            .groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
-          val msym0 = canon.select(col("eu").as("node"), col("ev").as("nbr"))
-            .union(canon.select(col("ev").as("node"), col("eu").as("nbr")))
-            .groupBy(col("node")).agg(sort_array(collect_list(col("nbr"))).as("adj"))
-          Some((Algorithms.collectAdjImage(adj0), Algorithms.collectAdjImage(msym0)))
-        } else None
-      }
-    if (imgs.isDefined) {
-      val (bc, mbc) = imgs.get
+    // IMAGE-GATED node2vec (see [[randomWalksOnEdges]]' walk): the
+    // second-order step additionally needs the (prev, v) EDGE
+    // MEMBERSHIP probe — with a second CSR image over the canonical edge
+    // set that probe is one slice binary-search instead of the per-step
+    // edge-scale left join (the loop's costliest join). Bit-identity:
+    // hash via [[graft.Hashing.hash60Fn]]; u01, the p/q weight branch
+    // order and -ln(u01)/w replay the Column expressions op for op in
+    // IEEE doubles; argmin order (key asc, v asc) is the heap's. Walkers
+    // stream distributed.
+    def walk(bc: Broadcast[Algorithms.AdjImage],
+             mbc: Broadcast[Algorithms.AdjImage]): DataFrame = {
       val hashFn = graft.Hashing.hash60Fn()
       val lenL = len
       val invP = 1.0 / p
@@ -1866,7 +1712,7 @@ object Clouds {
       val sess = spark
       import sess.implicits._
       // walker axis re-laid off the 1-task scan (see randomWalks)
-      val out = nodesIn.select(col("id").cast("long")).as[Long]
+      nodesIn.select(col("id").cast("long")).as[Long]
         .repartition(spark.sparkContext.defaultParallelism)
         .mapPartitions { ws =>
           val a = bc.value
@@ -1926,12 +1772,54 @@ object Clouds {
         }
         .toDF("walk_id", "step", "node")
         .localCheckpoint(true)
-      bc.destroy()
-      mbc.destroy()
-      if (und != null) Algorithms.releaseIterate(und)
-      if (canon != null) Algorithms.releaseIterate(canon)
-      return out.orderBy(col("walk_id"), col("step"))
     }
+    // BOUNDED-COLLECT image build (see [[randomWalksOnEdges]]' gate):
+    // below the collect gate BOTH images — the capped adjacency and
+    // the canonical-membership probe — are built on the driver from
+    // one collect of the caller's edge checkpoint, skipping the heap
+    // shuffle, two checkpoints and two distributed image pipelines.
+    val nE2 = 2 * edgesIn.count()
+    if (nE2 <= Gates.edges && nE2 <= Gates.cells) {
+      val lg = LocalGraph.collect(edgesIn, "src", "dst")
+      return Algorithms.withImage(spark, localCappedImage(lg, cap))(bc =>
+          Algorithms.withImage(spark, localCanonSymImage(lg))(walk(bc, _)))
+        .orderBy(col("walk_id"), col("step"))
+    }
+    val und = cappedAdjacency(
+        edgesIn.select(col("src").as("u"), col("dst").as("v"))
+          .union(edgesIn.select(col("dst").as("u"), col("src").as("v"))), cap)
+      .localCheckpoint(true) // one hop join per step
+    // SERIALIZED checkpoint: the probe table is EDGE-scale and scanned
+    // once per step by all cores — a deserialized cache pins ~3× the
+    // bytes and OOM'd the 150k/85M ScaleBench point at 12 g (the §4.13
+    // r13 reader-pinned-cache mechanism)
+    val canon = edgesIn
+      .select(least(col("src"), col("dst")).as("eu"),
+        greatest(col("src"), col("dst")).as("ev"))
+      .filter(col("eu") =!= col("ev")).distinct()
+      .localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val canonCnt = canon.count() // cached scans of the two checkpoints
+    val canonSym = canon.select(col("eu").as("u"), col("ev").as("v"))
+      .union(canon.select(col("ev").as("u"), col("eu").as("v")))
+    // both images or neither: the outer build is gated on the larger
+    // cell count, so the inner one always fits and its step-loop
+    // fallback never runs
+    val out = Algorithms.collectAdjImage(und, math.max(und.count(), 2 * canonCnt))(bc =>
+      Algorithms.collectAdjImage(canonSym, 2 * canonCnt)(walk(bc, _))(
+        node2vecSteps(nodesIn, und, canon, canonCnt, len, p, q)))(
+      node2vecSteps(nodesIn, und, canon, canonCnt, len, p, q))
+    Algorithms.releaseIterate(und)
+    Algorithms.releaseIterate(canon)
+    out.orderBy(col("walk_id"), col("step"))
+  }
+
+  /** [[node2vecOnEdges]]' distributed step loop over the capped (u, v)
+    * adjacency and the (eu, ev) canonical edge checkpoint of `canonCnt`
+    * rows; the walk table comes back materialized. */
+  private def node2vecSteps(nodesIn: DataFrame, und: DataFrame, canon: DataFrame,
+                            canonCnt: Long, len: Int, p: Double, q: Double): DataFrame = {
+    val twoPow60 = math.pow(2.0, 60)
     var cur = nodesIn
       .select(col("id").as("walk_id"), lit(null).cast("long").as("prev"),
         col("id").as("node"))
@@ -1949,7 +1837,7 @@ object Clouds {
     val bcOk = cur.count() <= Algorithms.IterateBroadcastMaxRows
     def hinted(d: DataFrame): DataFrame = if (bcOk) broadcast(d) else d
     val canonBc =
-      if (canon.count() <= Algorithms.IterateBroadcastMaxRows) broadcast(canon)
+      if (canonCnt <= Algorithms.IterateBroadcastMaxRows) broadcast(canon)
       else canon
     val steps = Seq.newBuilder[org.apache.spark.sql.DataFrame]
     steps += cur.withColumn("step", lit(0))
@@ -1984,18 +1872,15 @@ object Clouds {
       steps += cur.withColumn("step", lit(s))
     }
     // eager final walk table, then release every per-step checkpoint
-    // plus the adjacency and the canonical edge probe (the
-    // thresholdSweep release discipline — node2vec's probe is
-    // EDGE-scale, the costliest pin of the loop family); lazy sort
-    // atop the checkpoint
+    // (the caller releases the adjacency and the canonical edge probe —
+    // node2vec's probe is EDGE-scale, the costliest pin of the loop
+    // family)
     val out = steps.result()
       .map(_.select(col("walk_id"), col("step"), col("node")))
       .reduce(_ unionByName _)
       .localCheckpoint(true)
     stepCks.foreach(Algorithms.releaseIterate)
-    Algorithms.releaseIterate(und)
-    Algorithms.releaseIterate(canon)
-    out.orderBy(col("walk_id"), col("step"))
+    out
   }
 
   /** Adjacency-cap QUALITY audit for the walk family — the analogue of

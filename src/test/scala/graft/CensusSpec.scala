@@ -71,10 +71,8 @@ class CensusSpec extends SparkSpec {
     val g = canon((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), // C4
       (5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L), (7L, 8L), // K4
       (1L, 9L)) // pendant
-    val viaJoin = Clouds.squareCountOnCanon(g).collect().head
-    val (df, bc) = graft.graph.Algorithms.squareCensusImg(g)
-    val viaImg = df.collect().head
-    bc.destroy()
+    val viaJoin = Gates.within(cells = -1L)(Clouds.squareCountOnCanon(g).collect().head)
+    val viaImg = Clouds.squareCountOnCanon(g).collect().head
     Seq("n_coneighbor_pairs", "n_wedge_pairs", "n_squares").foreach { c =>
       assert(viaImg.getAs[Long](c) == viaJoin.getAs[Long](c),
         s"$c: img=${viaImg.getAs[Long](c)} join=${viaJoin.getAs[Long](c)}")
@@ -88,14 +86,11 @@ class CensusSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (1L, 9L), (20L, 21L), (20L, 22L), (21L, 22L))
     val nbrs = (edges ++ edges.map(_.swap)).toDF("node", "nbr")
-    val viaJoin = Clouds.neighborJaccardJoin(nbrs, 0.3).collect()
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(r => (r._1, r._2)) // the join path sorts lazily at its caller now
-    val (df, bc) = graft.graph.Algorithms.jaccardPairsImg(nbrs, 0.3)
-    val viaImg = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(r => (r._1, r._2))
-    bc.destroy()
+      .sortBy(r => (r._1, r._2)) // both plans sort lazily at their caller
+    val viaJoin = Gates.within(cells = -1L)(pairs(Clouds.neighborJaccardOn(nbrs, 0.3)))
+    val viaImg = pairs(Clouds.neighborJaccardOn(nbrs, 0.3))
     assert(viaImg.toSeq == viaJoin.toSeq)
     assert(viaImg.nonEmpty)
   }

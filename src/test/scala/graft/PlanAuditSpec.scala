@@ -152,16 +152,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(q22o.contains("o_orderdate"),
       s"q22 window filter must reach the orders scan: $q22o")
     // the capped candidate paths run through the native two-phase heap,
-    // and the rescore through the codegen'd two-pointer intersect.
-    // g_link_pred's full query hides both behind its eager output
-    // checkpoint (the r16 release lifecycle), so audit the lazy
-    // composition directly (the knn-candidates precedent below)
-    val lp = {
+    // and the rescore's join plan through the codegen'd two-pointer
+    // intersect. g_link_pred's full query hides both behind its eager
+    // output checkpoint (the r16 release lifecycle), so audit the lazy
+    // rescore frame the join plan hands its finisher (the
+    // knn-candidates precedent below)
+    val lp = Gates.within(cells = -1L) {
       import spark.implicits._
-      graft.graph.Clouds.linkPredictionOn(
-        Seq((0L, 1L)).toDF("node", "nbr"),
-        Seq((0L, 1L)).toDF("a", "b"), 3L, 4)
-        .queryExecution.executedPlan.toString
+      import org.apache.spark.sql.functions.col
+      val nbrs = Seq((0L, 1L), (1L, 0L)).toDF("node", "nbr")
+      graft.graph.Algorithms.pairRescore(graft.graph.Clouds.cappedCandidates(nbrs, 4),
+          nbrs.select(col("node").as("u"), col("nbr").as("v")), 2L)(
+        _.queryExecution.executedPlan.toString)
     }
     assert(lp.contains("TopKPerGroup"),
       "link prediction candidates must use the native heap operator")

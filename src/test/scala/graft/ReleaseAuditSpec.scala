@@ -11,7 +11,10 @@ import org.apache.spark.sql.DataFrame
   * contract asserted here: after a kernel's output is materialized,
   * the ONLY persistent RDDs it may leave behind are the ones its own
   * returned plan references (its final eager checkpoint); every
-  * internal per-step / adjacency / index checkpoint must be gone. */
+  * internal per-step / adjacency / index checkpoint must be gone. No
+  * broadcast the kernel created may outlive it either: an adjacency
+  * image is destroyed inside the image tier, and one that a lazy
+  * result still references survives GC and fails here. */
 class ReleaseAuditSpec extends SparkSpec {
 
   /** RDD ids the frame's own plan pins — the output's checkpoints,
@@ -28,16 +31,17 @@ class ReleaseAuditSpec extends SparkSpec {
     ids.toSet
   }
 
-  /** Monitor signalled by the ContextCleaner each time an RDD's blocks
-    * finish cleaning — the audit waits on REAL cleanup events instead
-    * of GC-poll sleeps (r16 ADVICE: 75 × 200 ms polling was slow and
-    * GC-timing flaky). One listener for the whole suite. */
+  /** Monitor signalled by the ContextCleaner each time an RDD's or a
+    * broadcast's blocks finish cleaning — the audit waits on REAL
+    * cleanup events instead of GC-poll sleeps (r16 ADVICE: 75 × 200 ms
+    * polling was slow and GC-timing flaky). One listener for the whole
+    * suite. */
   private object cleanedSignal {
     @volatile private var attached = false
     def ensureAttached(): Unit = synchronized {
       if (!attached) {
-        org.apache.spark.GraftCleanerHook.onRddCleaned(spark.sparkContext) {
-          _ => synchronized { notifyAll() }
+        org.apache.spark.GraftCleanerHook.onCleaned(spark.sparkContext) {
+          synchronized { notifyAll() }
         }
         attached = true
       }
@@ -48,28 +52,37 @@ class ReleaseAuditSpec extends SparkSpec {
 
   private def assertReleased(label: String)(op: => DataFrame): Unit = {
     cleanedSignal.ensureAttached()
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val bcBefore = org.apache.spark.GraftCleanerHook.liveBroadcasts(sc)
     val out = op
     out.count() // materialize through the caller's action
     def leakedNow(): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before -- ckIds(out)
+      sc.getPersistentRDDs.keySet.toSet -- before -- ckIds(out)
+    def bcLeakedNow(): Set[Long] =
+      org.apache.spark.GraftCleanerHook.liveBroadcasts(sc) -- bcBefore
     var leaked = leakedNow()
+    var bcLeaked = bcLeakedNow()
     // a pin with no live reference (e.g. a kernel-internal checkpoint
-    // whose frame went out of scope) is collected by Spark's
-    // ContextCleaner on GC — request a GC and then wait on the
-    // cleaner's OWN rddCleaned events (bounded, but returns the moment
-    // cleanup lands) so the audit fails only on LIVE pins, the actual
-    // session-lifetime leak class
+    // whose frame went out of scope, or a stage's task binary) is
+    // collected by Spark's ContextCleaner on GC — request a GC and then
+    // wait on the cleaner's OWN cleanup events (bounded, but returns
+    // the moment cleanup lands) so the audit fails only on LIVE pins,
+    // the actual session-lifetime leak class
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (leaked.nonEmpty && System.nanoTime() < deadline) {
+    while ((leaked.nonEmpty || bcLeaked.nonEmpty) && System.nanoTime() < deadline) {
       System.gc()
       cleanedSignal.awaitEvent(500)
       leaked = leakedNow()
+      bcLeaked = bcLeakedNow()
     }
     assert(leaked.isEmpty,
       s"$label leaves ${leaked.size} LIVE persistent RDDs beyond its own " +
         s"output (survived GC + ContextCleaner): " +
         leaked.toSeq.sorted.mkString(", "))
+    assert(bcLeaked.isEmpty,
+      s"$label leaves ${bcLeaked.size} LIVE broadcasts (survived GC + " +
+        s"ContextCleaner): " + bcLeaked.toSeq.sorted.mkString(", "))
     graph.Algorithms.releaseIterate(out) // keep the suite itself clean
   }
 
@@ -88,6 +101,17 @@ class ReleaseAuditSpec extends SparkSpec {
     assertReleased("g_neighbor_jaccard_capped")(
       Clouds.neighborJaccardCapped(spark, SF))
     assertReleased("g_link_pred")(Clouds.linkPrediction(spark, SF))
+  }
+
+  test("the image-tier kernels leave no adjacency image behind") {
+    assertReleased("g_truss_support")(Clouds.trussSupport(spark, SF))
+    assertReleased("g_square_count")(Clouds.squareCount(spark, SF))
+    assertReleased("g_betweenness")(Clouds.betweenness(spark, SF))
+    assertReleased("g_coreness")(Clouds.corenessShells(spark, SF))
+    assertReleased("g_eccentricity")(Clouds.eccentricity(spark, SF))
+    Gates.within(edges = 0L) { // the distributed peel: one image a round
+      assertReleased("g_ktruss (round loop)")(Clouds.kTrussEdges(spark, SF))
+    }
   }
 
   test("the bucketed eps-pair generator releases its vector and index checkpoints") {

@@ -60,11 +60,12 @@ class TrussSpec extends SparkSpec {
     val e = edgesDf(planted).select(col("src").as("u"), col("dst").as("v"))
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2))
-    // hint below the gate -> AdjImage broadcast + mapPartitions intersect
-    val img = rowsOf(Algorithms.edgeSupport(e, symCellsHint = 2L * planted.size))
-      .map(key).toSet
-    // no hint -> the generic two-shuffle-join SortedIntersectCount plan
-    val shuffle = rowsOf(Algorithms.edgeSupport(e)).map(key).toSet
+    // under the image bound -> AdjImage broadcast + mapPartitions intersect
+    val img = rowsOf(Algorithms.edgeSupport(e)).map(key).toSet
+    // bound forced below -> the two-shuffle-join SortedIntersectCount plan
+    val shuffle = Gates.within(cells = -1L) {
+      rowsOf(Algorithms.edgeSupport(e)).map(key).toSet
+    }
     assert(img == shuffle)
     assert(img.nonEmpty)
   }
@@ -72,7 +73,8 @@ class TrussSpec extends SparkSpec {
   test("kTruss: gated local peel equals the distributed round loop") {
     // the collect gate (Gates.edges) routes sub-gate inputs through
     // the driver-side peel; Gates.within(edges = 0) forces the
-    // distributed per-round image plans on the SAME input — the
+    // distributed per-round image plans on the SAME input, and adding
+    // cells = -1 forces the per-round array-join plans — the
     // (edge -> support) maps must be identical on a random graph with
     // planted cliques (peel survivors) and random noise (peeled tails)
     val rng = new scala.util.Random(31)
@@ -88,7 +90,12 @@ class TrussSpec extends SparkSpec {
         rowsOf(Algorithms.kTruss(edgesDf(all), k))
           .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       }
+      val joined = Gates.within(edges = 0L, cells = -1L) {
+        rowsOf(Algorithms.kTruss(edgesDf(all), k))
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      }
       assert(local == dist, s"k=$k")
+      assert(local == joined, s"k=$k, join rounds")
       assert(local == bruteTruss(all.toSet, k).map { case (e, s) => e -> s.toLong },
         s"k=$k vs brute peel")
     }
